@@ -135,7 +135,7 @@ object Bench {
     "x128_luhn_card_audit", "x129_stream_type_discovery",
     // (x136/x137 are excluded like x34/x133: every stream-stream join
     // variant measures the same ~7 s of fixed micro-batch + join-state
-    // machinery at sf0.1 (PerfProbe: x34 6.97/7.03 s warm, x136 6.52/
+    // machinery at sf0.1 (Probe time: x34 6.97/7.03 s warm, x136 6.52/
     // 7.44 s), so benching three variants triples an overhead number
     // without adding signal; x138 stays as the state-v2 multi-batch
     // representative alongside x129's single-batch one.)
@@ -254,37 +254,7 @@ object Bench {
     def elapsed: Double = (System.nanoTime() - tRun0) / 1e9
     def over(frac: Double): Boolean = elapsed > budgetSec * frac
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Bucket-store pruned reads pass O(hundreds) of explicit dir paths;
-      // above this threshold Spark lists them via a DISTRIBUTED JOB per
-      // read (closure-clean + job schedule per pruned read per
-      // micro-batch — measured ~0.1-0.2 s each on the drain path).
-      // Driver-side listing wins up to a few thousand dirs on any FS
-      // with fast metadata; at object-store scale with 10k+ dirs set it
-      // back down (env-overridable).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Partition sizing for THIS SF (the knob the 100 TB deploy retunes):
-      // sf0.1 files are sub-MB, but the text/dedup operators do heavy
-      // per-row CPU (tokenize + md5 per token), so Spark's bytes-based
-      // split sizing leaves whole pipelines on ONE task. 128 KB splits /
-      // 64 KB coalesce floor spread those stages across the 32 threads; at
-      // production scale with 100 MB+ files the defaults (128 MB / 1 MB)
-      // are the right sizing and these two lines are what you'd change.
-      .config("spark.sql.files.maxPartitionBytes", "131072")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Untimed session warm-up (executor threads, codegen, parquet footers).
     spark.range(1000).selectExpr("sum(id)").collect()
     // Machine-drift calibration (round-7 verdict: a uniform ~23% ambient
@@ -346,9 +316,10 @@ object Bench {
     // Raw per-sample times are emitted in the JSON ("iter_sec") so the
     // remaining spread is visible IN the artifact, not only in a forensic
     // rerun.
-    // Session-position effects are measured and benign (DriftProbe, round
-    // 6): queries re-timed LAST in a session after the full headline load
-    // run 10-74% FASTER than first-in-session — shared-path JIT keeps
+    // Session-position effects are measured and benign (round 6; the
+    // README's "Session-position effects" paragraph): queries re-timed
+    // LAST in a session after the full headline load run 10-74% FASTER
+    // than first-in-session — shared-path JIT keeps
     // deepening; GC/class growth add no tax — so a query's position in
     // this list cannot explain a round-over-round slowdown. Deltas under
     // ~20% between rounds are cross-session machine variance; compare

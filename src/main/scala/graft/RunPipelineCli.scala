@@ -27,15 +27,7 @@ object RunPipelineCli {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: RunPipelineCli <config> [sourceFile idColumn]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(userPath = true)
     val (sourceDf, sourceId) = args.toSeq match {
       case Seq(_, src, id) => (Some(readSource(spark, src)), Some(id))
       case _               => (None, None)

@@ -23,36 +23,16 @@ import org.apache.spark.sql.graft.InputBytesMeter
   * doc collide in LSH bands, and the corpus genuinely develops m-member
   * clusters — m²/2 candidate pairs per base doc, quadratic in m.)
   *
-  * Usage: `runMain graft.ScaleProbe [maxMultiplier] [opPrefix,...]`
+  * Usage: `runMain graft.Probe scale [maxMultiplier] [opPrefix,...]`
   * (default 8; must be a power of two; the optional second arg restricts
   * to ops whose name starts with one of the prefixes). Reads
   * SPARK_GRAFT_SF_DIR (default sf0.1).
   */
 object ScaleProbe {
 
-  def main(args: Array[String]): Unit = {
+  def run(spark: SparkSession, args: Array[String]): Unit = {
     val maxMult = args.headOption.map(_.toInt).getOrElse(8)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.host", "127.0.0.1")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Bucket-store pruned reads pass O(hundreds) of explicit dir paths;
-      // above this threshold Spark lists them via a DISTRIBUTED JOB per
-      // read (closure-clean + job schedule per pruned read per
-      // micro-batch — measured ~0.1-0.2 s each on the drain path).
-      // Driver-side listing wins up to a few thousand dirs on any FS
-      // with fast metadata; at object-store scale with 10k+ dirs set it
-      // back down (env-overridable).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val baseCount = docs.count()
@@ -1589,6 +1569,5 @@ object ScaleProbe {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
     }
     rm(new java.io.File(stageRoot))
-    spark.stop()
   }
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,28 +8,7 @@ object Verify {
     // comma-separated list of query-name prefixes to restrict the dump to.
     val Array(sfDir, outDir) = args.take(2)
     val prefixes = args.drop(2).headOption.map(_.split(",").toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Bucket-store pruned reads pass O(hundreds) of explicit dir paths;
-      // above this threshold Spark lists them via a DISTRIBUTED JOB per
-      // read (closure-clean + job schedule per pruned read per
-      // micro-batch — measured ~0.1-0.2 s each on the drain path).
-      // Driver-side listing wins up to a few thousand dirs on any FS
-      // with fast metadata; at object-store scale with 10k+ dirs set it
-      // back down (env-overridable).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_THRESHOLD", "4096"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) =>

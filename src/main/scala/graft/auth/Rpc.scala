@@ -1,9 +1,9 @@
 package graft.auth
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import java.net.InetSocketAddress
+import java.io.{BufferedInputStream, IOException, InputStream}
+import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.{ExecutorService, Executors, ScheduledExecutorService, TimeUnit}
 import scala.concurrent.ExecutionContext
 
 import graft.model.Token
@@ -16,6 +16,7 @@ import graft.util.Json
   * (src/core/coroutine.py:21-171) — here a ScheduledExecutorService.
   */
 final class DriverTokenManager(manager: TokenManager)(implicit ec: ExecutionContext) {
+  import DriverTokenManager.TickSeconds
   private var exec: Option[ScheduledExecutorService] = None
 
   def start(): Unit = synchronized {
@@ -26,7 +27,7 @@ final class DriverTokenManager(manager: TokenManager)(implicit ec: ExecutionCont
       s.scheduleWithFixedDelay(() => {
         try scala.concurrent.Await.ready(manager.getToken(), scala.concurrent.duration.Duration(30, "s"))
         catch { case _: Exception => () }
-      }, 0L, 1L, TimeUnit.SECONDS)
+      }, 0L, TickSeconds, TimeUnit.SECONDS)
       exec = Some(s)
     }
   }
@@ -42,42 +43,82 @@ final class DriverTokenManager(manager: TokenManager)(implicit ec: ExecutionCont
   }
 }
 
-/** Driver-hosted token RPC: GET /token → {"token_value": ..., "expires_at": ...}.
-  * Workers poll this instead of hitting the identity provider N-executors
-  * times. Ref: src/auth/rpc/service.py:13-229. The reference walks a
-  * restricted-port list; binding port 0 (kernel-assigned ephemeral) achieves
-  * the same "free safe port" guarantee in one step.
+object DriverTokenManager {
+  val TickSeconds = 1L
+}
+
+/** Driver-hosted token RPC: GET /token → {"token_value": ..., "expires_at": ...},
+  * 503 until the first token is cached. Workers poll this instead of
+  * hitting the identity provider N-executors times. Ref:
+  * src/auth/rpc/service.py:13-229. The reference walks a restricted-port
+  * list; binding port 0 (kernel-assigned ephemeral) achieves the same
+  * "free safe port" guarantee in one step.
+  *
+  * A plain socket server, one request per connection: each response goes
+  * out in ONE write from a TCP_NODELAY socket. The JDK HttpServer writes
+  * headers and body separately, and Nagle held the body until the
+  * client's delayed ACK — ~40 ms on every worker fetch. (Its JVM-wide
+  * `sun.net.httpserver.nodelay` switch would change every HttpServer in
+  * the process, so it is not used.)
   */
 final class TokenRpcServer(manager: TokenManager, host: String) {
-  private var server: Option[HttpServer] = None
+  private var server: Option[(ServerSocket, ExecutorService)] = None
   @volatile var boundUrl: String = _
 
   def start(): Unit = synchronized {
     if (server.isEmpty) {
-      val s = HttpServer.create(new InetSocketAddress(host, 0), 0)
-      s.createContext("/token", new HttpHandler {
-        def handle(x: HttpExchange): Unit = {
-          val (code, body) = manager.currentToken match {
-            case Some(Token(v, exp)) =>
-              (200, Json.write(Map("token_value" -> v, "expires_at" -> exp.map(_.toString).orNull)))
-            case None => (503, Json.write(Map("error" -> "token not ready")))
-          }
-          val bytes = body.getBytes(StandardCharsets.UTF_8)
-          x.getResponseHeaders.set("Content-Type", "application/json")
-          x.sendResponseHeaders(code, bytes.length)
-          val os = x.getResponseBody; os.write(bytes); os.close()
-        }
-      })
-      s.setExecutor(Executors.newFixedThreadPool(2, r => {
+      val ss = new ServerSocket()
+      ss.bind(new InetSocketAddress(host, 0))
+      val pool = Executors.newCachedThreadPool { r =>
         val t = new Thread(r, "graft-token-rpc"); t.setDaemon(true); t
-      }))
-      s.start()
-      boundUrl = s"http://$host:${s.getAddress.getPort}"
-      server = Some(s)
+      }
+      pool.execute(() =>
+        try while (true) { val c = ss.accept(); pool.execute(() => serve(c)) }
+        catch { case _: Exception => () }) // closed by stop()
+      boundUrl = s"http://$host:${ss.getLocalPort}"
+      server = Some((ss, pool))
     }
   }
 
-  def stop(): Unit = synchronized { server.foreach(_.stop(0)); server = None }
+  private def serve(c: Socket): Unit =
+    try {
+      c.setTcpNoDelay(true)
+      c.setSoTimeout(10000)
+      val path = requestLine(new BufferedInputStream(c.getInputStream))
+        .split(' ').lift(1).getOrElse("")
+      val (status, body) =
+        if (!path.startsWith("/token")) ("404 Not Found", Json.write(Map("error" -> "not found")))
+        else manager.currentToken match {
+          case Some(Token(v, exp)) =>
+            ("200 OK", Json.write(Map("token_value" -> v, "expires_at" -> exp.map(_.toString).orNull)))
+          case None => ("503 Service Unavailable", Json.write(Map("error" -> "token not ready")))
+        }
+      val bytes = body.getBytes(StandardCharsets.UTF_8)
+      val head = s"HTTP/1.1 $status\r\nContent-Type: application/json\r\n" +
+        s"Content-Length: ${bytes.length}\r\nConnection: close\r\n\r\n"
+      c.getOutputStream.write(head.getBytes(StandardCharsets.US_ASCII) ++ bytes)
+    } catch { case _: IOException => () }
+    finally c.close()
+
+  /** Consumes the request head (through the blank line) and returns its
+    * request line, e.g. "GET /token HTTP/1.1". */
+  private def requestLine(in: InputStream): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    var tail = 0 // consecutive bytes of "\r\n\r\n" seen
+    while (tail < 4) {
+      val b = in.read()
+      if (b < 0 || buf.size() > 16384) throw new IOException("truncated request head")
+      buf.write(b)
+      tail = if (b == "\r\n\r\n".charAt(tail)) tail + 1 else if (b == '\r') 1 else 0
+    }
+    val head = buf.toString(StandardCharsets.US_ASCII)
+    head.substring(0, head.indexOf("\r\n"))
+  }
+
+  def stop(): Unit = synchronized {
+    server.foreach { case (ss, pool) => ss.close(); pool.shutdownNow() }
+    server = None
+  }
 }
 
 /** Wires DriverTokenManager + TokenRpcServer lifecycle (start both, await
@@ -86,7 +127,13 @@ final class TokenRpcServer(manager: TokenManager, host: String) {
   */
 final class RpcBootstrapper(provider: TokenProvider, refreshMargin: Long, driverHost: String)(
     implicit ec: ExecutionContext) {
-  private val manager = new TokenManager(provider, refreshMargin)
+  // The driver refreshes one tick ahead of the workers' margin: workers
+  // treat a token inside their margin as due and fetch again through the
+  // RPC on every request, and the refresher only looks once per tick, so
+  // with equal margins the served token can sit inside the workers'
+  // margin for up to a tick per lifetime, an RPC fetch per request.
+  private val manager =
+    new TokenManager(provider, refreshMargin + DriverTokenManager.TickSeconds)
   private val refresher = new DriverTokenManager(manager)
   private val server = new TokenRpcServer(manager, driverHost)
 

@@ -8,6 +8,7 @@ import java.util.Base64
 import java.util.concurrent.ThreadLocalRandom
 import java.util.concurrent.atomic.AtomicReference
 import scala.concurrent.{ExecutionContext, Future}
+import scala.util.control.NonFatal
 
 import graft.middleware.{Middleware, TokenSource}
 import graft.model.Token
@@ -17,6 +18,14 @@ import graft.util.Json
 trait TokenProvider extends Serializable {
   def getToken()(implicit ec: ExecutionContext): Future[Token]
   def telemetry: Map[String, Any]
+}
+
+object TokenProvider {
+  /** `p.getToken()` with a synchronous throw (e.g. `URI.create` on a
+    * malformed URL) turned into a failed future, so callers that chain on
+    * the future see every failure. */
+  def call(p: TokenProvider)(implicit ec: ExecutionContext): Future[Token] =
+    try p.getToken() catch { case NonFatal(e) => Future.failed(e) }
 }
 
 private[auth] object AuthHttp {
@@ -150,7 +159,7 @@ final class FallbackTokenProvider(primary: Option[TokenProvider], fallback: Toke
   def getToken()(implicit ec: ExecutionContext): Future[Token] =
     primary match {
       case Some(p) =>
-        p.getToken().map { t => lastPath = "primary"; t }.recoverWith { case _ =>
+        TokenProvider.call(p).map { t => lastPath = "primary"; t }.recoverWith { case _ =>
           fallback.getToken().map { t => lastPath = "fallback"; t }
         }
       case None => fallback.getToken().map { t => lastPath = "fallback"; t }
@@ -186,7 +195,7 @@ final class TokenManager(val provider: TokenProvider, refreshMarginSeconds: Long
       refreshing.get() match {
         case Some(f) if f ne fresh.future => f
         case _ =>
-          provider.getToken().onComplete { r =>
+          TokenProvider.call(provider).onComplete { r =>
             r.foreach(t => cached.set(Some(t)))
             refreshing.set(None)
             fresh.complete(r)

@@ -55,7 +55,7 @@ private[graft] object ArtifactStore {
 
   /** Run `f` with a thread-local Spark job description (guide §1.5):
     * every job launched inside — actions, eager file listings, broadcast
-    * builds — carries `g:<name>` in the UI and in JobProbe's per-site
+    * builds — carries `g:<name>` in the UI and in `Probe jobs`' per-site
     * counts, which is what makes the mutation family's fixed per-batch
     * job overhead attributable (callSite under foreachBatch always
     * points at the streaming start). Nesting restores the outer label. */

@@ -1352,7 +1352,7 @@ object Dedup {
     // band-sig h dirs) RIDE THIS CHECKPOINT as an Observation (round 16):
     // they are per-row expressions of (doc, features), and the separate
     // bBuckets aggregation that used to derive them was a fixed 2-job
-    // term per absorbed batch (absorb_partsets in the JobProbe counts).
+    // term per absorbed batch (absorb_partsets in the `Probe jobs` counts).
     val mfPre = lshFeatureParts(spark, indexPath)
     val mPre = lshBucketParts(spark, indexPath)
     val rowsPerBand = numHashes / bands

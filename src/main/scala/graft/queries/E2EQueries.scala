@@ -46,9 +46,9 @@ object E2EQueries {
           numPartitions = s.sparkContext.defaultParallelism,
           batchSize = 100000L, maxAttempts = 2,
           // right-size total in-flight (~1024 across all partitions): the
-          // loopback mock peaks at 32×32 = 1024 concurrent (7.1k rps,
-          // graft.ThroughputProbe); 2048 collapses to 3.8k rps. A real
-          // remote API would warrant the 20-64 per-partition default.
+          // loopback mock peaks at 32×32 = 1024 concurrent (7.1k rps);
+          // 2048 collapses to 3.8k rps. A real remote API would warrant
+          // the 20-64 per-partition default.
           maxConcurrentRequests = math.max(8, 1024 / s.sparkContext.defaultParallelism)))
       PipelineOrchestrator.runPipeline(s, cfg, Some(source), Some("o_orderkey"))
       s.table(s"graft_verify.$sink")

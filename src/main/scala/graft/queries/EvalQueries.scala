@@ -221,7 +221,7 @@ object EvalQueries {
   }
 
   /** The scratch root [[stageProdAbsorbScratch]] stages — exposed for
-    * CopyProbe's file-count report only. */
+    * `Probe copy`'s file-count report only. */
   private[graft] def stageProdAbsorbScratchRootForProbe: String =
     s"${ExtensionQueries.idxScratch}/x152b_bench"
 
@@ -2867,7 +2867,7 @@ object EvalQueries {
     */
   // staging I/O pool: the two-geometry bases are ~2k files, and copying
   // (or deleting) them one at a time from the driver thread measured
-  // 0.4-0.6 s per staging event (CopyProbe, sf0.1) — pure sequential
+  // 0.4-0.6 s per staging event (`Probe copy`, sf0.1) — pure sequential
   // syscall latency, inside the mutation twins' timed bodies and the
   // headliners' per-sample bench setup. A small shared pool turns both
   // walks into concurrent per-file work; destinations are disjoint

@@ -75,6 +75,27 @@ class AuthSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     p.calls.get() shouldBe 1
   }
 
+  test("TokenManager fails, not wedges, when the provider throws synchronously") {
+    val p = new TokenProvider {
+      val calls = new AtomicInteger(0)
+      def getToken()(implicit ec: ExecutionContext): Future[Token] =
+        if (calls.incrementAndGet() == 1) throw new IllegalArgumentException("malformed URL")
+        else Future.successful(Token("tok", Some(Instant.now().plusSeconds(300))))
+      def telemetry: Map[String, Any] = Map.empty
+    }
+    val m = new TokenManager(p, 60)
+    an[IllegalArgumentException] should be thrownBy Await.result(m.tokenValue(), 5.seconds)
+    Await.result(m.tokenValue(), 5.seconds) shouldBe "tok"
+    p.calls.get() shouldBe 2
+  }
+
+  test("FallbackTokenProvider serves from fallback when primary throws synchronously") {
+    val malformed = new RpcTokenProvider("http://bad host")
+    val fp = new FallbackTokenProvider(Some(malformed), new StaticTokenProvider("fallback-token"))
+    Await.result(fp.getToken(), 5.seconds).tokenValue shouldBe "fallback-token"
+    fp.telemetry("served_by") shouldBe "fallback"
+  }
+
   test("OAuth2 client-credentials provider posts the form grant (token_provider.py:56-111)") {
     val p = new ClientGrantTokenProvider(s"${server.baseUrl}/token", "cid", "secret")
     val t = Await.result(p.getToken(), 30.seconds)
@@ -117,6 +138,65 @@ class AuthSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     boot.stop()
     val worker = new RpcTokenProvider(rpcUrl, maxRetries = 2, baseDelay = 0.01)
     an[Exception] should be thrownBy Await.result(worker.getToken(), 30.seconds)
+  }
+
+  test("token RPC answers a sequential fetch without a delayed-ACK stall") {
+    val boot = new RpcBootstrapper(new CountingProvider("tok"), refreshMargin = 60,
+      driverHost = "127.0.0.1")
+    val rpcUrl = boot.start()
+    try {
+      val worker = new RpcTokenProvider(rpcUrl)
+      def fetchMs(): Double = {
+        val t0 = System.nanoTime()
+        Await.result(worker.getToken(), 10.seconds).tokenValue shouldBe "tok"
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 5).foreach(_ => fetchMs()) // client and JIT warm-up
+      val ms = (1 to 20).map(_ => fetchMs()).sorted
+      val median = (ms(9) + ms(10)) / 2
+      info(f"median fetch $median%.2f ms")
+      median should be < 15.0
+    } finally boot.stop()
+  }
+
+  test("workers' RPC fetches scale with token lifetimes, not with requests") {
+    // 2.5 s tokens, 1 s margin on the driver and the workers, 6 s of
+    // requests (over two lifetimes) from 4 worker managers every 5 ms
+    val lifetimeMs = 2500L
+    val runSec = 6
+    val boot = new RpcBootstrapper(new TokenProvider {
+      def getToken()(implicit ec: ExecutionContext): Future[Token] =
+        Future.successful(Token("tok", Some(Instant.now().plusMillis(lifetimeMs))))
+      def telemetry: Map[String, Any] = Map.empty
+    }, refreshMargin = 1, driverHost = "127.0.0.1")
+    val rpcUrl = boot.start()
+    try {
+      val rpc = new RpcTokenProvider(rpcUrl)
+      val fetches = new AtomicInteger(0)
+      val requests = new AtomicInteger(0)
+      val counted = new TokenProvider {
+        def getToken()(implicit ec: ExecutionContext): Future[Token] = {
+          fetches.incrementAndGet(); rpc.getToken()
+        }
+        def telemetry: Map[String, Any] = Map.empty
+      }
+      val workers = 4
+      val until = System.nanoTime() + runSec * 1000000000L
+      val threads = Seq.fill(workers)(new TokenManager(counted, refreshMarginSeconds = 1))
+        .map { m =>
+          new Thread(() => while (System.nanoTime() < until) {
+            Await.result(m.tokenValue(), 10.seconds)
+            requests.incrementAndGet()
+            Thread.sleep(5)
+          })
+        }
+      threads.foreach(_.start()); threads.foreach(_.join())
+      info(s"${fetches.get} RPC fetches for ${requests.get} requests")
+      // the driver serves tokens at least 1.5 s from expiry, so a worker
+      // keeps each one >= 0.5 s: at most 2 fetches a second per worker
+      fetches.get should be <= workers * (2 * runSec + 1)
+      requests.get should be > 20 * fetches.get
+    } finally boot.stop()
   }
 
   test("auth strategy middleware wires the RPC-primary chain (strategy.py:145-272)") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.matchers.should.Matchers
 
 /** Spark-JOB budget pin for the streaming label-absorb drain (round-16
@@ -18,45 +17,38 @@ import org.scalatest.matchers.should.Matchers
   * with the corpus — label-propagation rounds and relabel activity are
   * data-dependent — so the pin is the measured count plus ~15%
   * headroom, NOT an exact equality). Job counts are SF-independent by
-  * design (fixed per-batch overhead, the point of the JobProbe tool);
+  * design (fixed per-batch overhead, the point of `Probe jobs`);
   * this runs at sf0.001 to stay fast.
   */
 class DrainJobBudgetSpec extends SparkSpec with Matchers {
 
   test("the 3-micro-batch production drain stays inside its per-batch job budget") {
-    // warm pass first (uncaptured), exactly like JobProbe: the first
+    // warm pass first (uncaptured), exactly like `Probe jobs`: the first
     // drain in a JVM pays one-time schema/meta cache seeds and footer
     // inference that are NOT the per-batch fixed cost this pins
     queries.EvalQueries.stageProdDrainScratch(spark, sfDir)
     queries.EvalQueries.prodDrainOnScratch(spark, sfDir).count()
-    // stage OUTSIDE the capture window, exactly like Bench/JobProbe
+    // stage OUTSIDE the capture window, exactly like Bench/`Probe jobs`
     queries.EvalQueries.stageProdDrainScratch(spark, sfDir)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    @volatile var capture = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (capture) { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val rec = new Probe.JobRecorder
+    spark.sparkContext.addSparkListener(rec)
     try {
-      capture = true
+      rec.capture = true
       queries.EvalQueries.prodDrainOnScratch(spark, sfDir).count()
-      capture = false
-      // let trailing listener events drain before reading the counter
+      rec.capture = false
+      // let trailing listener events drain before reading the recorder
       Thread.sleep(500)
-      val n = jobs.get()
+      val n = rec.jobs.size
       info(s"drain ran $n Spark jobs (budget 130)")
-      // measured 2026-08-19 (round 17, sf0.001, THIS suite's session —
-      // job counts are context-sensitive: the test session runs without
-      // the bench's listing-threshold/coalesce-floor confs, so its
-      // fixed count is higher than JobProbe's): 118 jobs warm for the
-      // 3-micro-batch drain + final labels read. 130 = measured + 10%
-      // (the round-16 verdict's regression line); a reintroduced
-      // per-batch job class of 4+ jobs per micro-batch trips it.
+      // measured 2026-10-17 (sf0.001, GraftSession confs — the same the
+      // bench times): 117 jobs warm for the 3-micro-batch drain + final
+      // labels read. 130 = measured + ~10% (the round-16 verdict's
+      // regression line); a reintroduced per-batch job class of 4+ jobs
+      // per micro-batch trips it.
       n should be <= 130
       n should be > 20 // sanity: the capture window actually saw the drain
     } finally {
-      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.removeSparkListener(rec)
     }
   }
 }

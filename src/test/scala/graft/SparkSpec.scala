@@ -5,23 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for the suite (one JVM-wide session — Spark
   * sessions are expensive; tests share it like the reference shares its
-  * FakeSparkSession fixture, except ours is real local-mode Spark).
+  * FakeSparkSession fixture, except ours is real local-mode Spark). Built
+  * by GraftSession, so the specs run under the confs the bench times.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val warehouse = java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.warehouse.dir", warehouse)
-      .config("spark.driver.host", "127.0.0.1")
-      .getOrCreate()
-  }
+  lazy val spark: SparkSession = GraftSession(width = 4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
