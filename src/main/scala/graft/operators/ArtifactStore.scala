@@ -77,8 +77,10 @@ private[graft] object ArtifactStore {
     * `spark.graft.mutation.checkpointDir` if the context has none) —
     * recoverable at the cost of one fault-tolerant-FS round trip per
     * checkpoint. Results are identical either way (both are eager
-    * materializations of the same frame; LabelsBucketSpec exercises an
-    * absorb under the reliable mode).
+    * materializations of the same frame; LabelsBucketSpec runs a label,
+    * an IVF and a histogram absorb under the reliable mode). Every
+    * mutation-path checkpoint goes through here, never through a direct
+    * `localCheckpoint()`, or the reliable mode silently skips it.
     */
   private[graft] def eagerCheckpoint(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -423,7 +425,7 @@ private[graft] object ArtifactStore {
           readParquetCached(spark, s"$root/$sub", Seq(s"$root/$sub")))
         store.select(keyCol)
           .join(broadcast(batchKeys), Seq(keyCol), "left_semi")
-          .distinct().localCheckpoint()
+          .distinct().transform(eagerCheckpoint)
       }
     }
     labeled(spark, s"append_write_$sub") {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.streaming.StreamOps
+
 /** File-level ingestion operators for the raw-text formats a crawl
   * pipeline lands before anything is parquet: JSONL with per-line
   * corruption tolerance. A 100 TB crawl ALWAYS contains malformed lines
@@ -104,20 +106,16 @@ object Ingest {
     }
     initIfMissing(validDir, emptyV)
     initIfMissing(quarDir, emptyQ)
-    val q = spark.readStream.text(path)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val b = batch.persist()
-        try {
-          val (v, quar) = triage(b, schema, idField)
-          v.write.mode("overwrite").parquet(s"$validDir/batch=$batchId")
-          quar.write.mode("overwrite").parquet(s"$quarDir/batch=$batchId")
-        } finally { b.unpersist(); () }
-      }
-      .option("checkpointLocation", s"$outRoot/_checkpoint")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    StreamOps.drain(spark.readStream.text(path), "graft_jsonl_ingest",
+      "append", StreamOps.ToBatches(Some(s"$outRoot/_checkpoint"),
+        (batch, batchId) => {
+          val b = batch.persist()
+          try {
+            val (v, quar) = triage(b, schema, idField)
+            v.write.mode("overwrite").parquet(s"$validDir/batch=$batchId")
+            quar.write.mode("overwrite").parquet(s"$quarDir/batch=$batchId")
+          } finally { b.unpersist(); () }
+        }))
     (spark.read.parquet(validDir).drop("batch"),
       spark.read.parquet(quarDir).drop("batch"))
   }

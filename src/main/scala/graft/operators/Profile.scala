@@ -204,7 +204,7 @@ object Profile {
     import spark.implicits._
     ArtifactStore.resetForRebuild(spark, path)
     val shards = histogramShard(df, shardCol, cents, widthCents)
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     shards.write.mode("overwrite").parquet(s"$path/shards")
     ledgerFingerprints(shards)
       .write.mode("overwrite").parquet(s"$path/absorbed")
@@ -226,7 +226,8 @@ object Profile {
       .getOrElse(throw new IllegalStateException(
         s"absorbIntoHistogram: no meta store at $path — absorb needs " +
           "the stored bucket width"))
-    val h = histogramShard(df, shardCol, cents, width).localCheckpoint()
+    val h = histogramShard(df, shardCol, cents, width)
+      .transform(ArtifactStore.eagerCheckpoint)
     // the ledger read rides the substore schema cache and is taken ONCE
     // for both consumers (anti-join + fp-column probe) — each fresh
     // schema-less read.parquet paid a footer-inference job per absorb,
@@ -236,7 +237,7 @@ object Profile {
       s"$path/absorbed", Seq(s"$path/absorbed"))
     val fresh = h.select("shard").distinct()
       .join(broadcast(ledger.select("shard")), Seq("shard"), "left_anti")
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     ArtifactStore.appendMissing(spark, path, "shards", "shard", fresh,
       h.join(broadcast(fresh), Seq("shard"), "left_semi"))
     // ledger rows carry the fingerprint (same fold as `h` — zero extra
@@ -294,7 +295,8 @@ object Profile {
       .getOrElse(throw new IllegalStateException(
         s"retractFromHistogram: no meta store at $path — retraction " +
           "needs the stored bucket width"))
-    val h = histogramShard(df, shardCol, cents, width).localCheckpoint()
+    val h = histogramShard(df, shardCol, cents, width)
+      .transform(ArtifactStore.eagerCheckpoint)
     // schema-cached reads (round-15 verdict #2): the retract's ledger +
     // shards reads stop paying per-call footer-inference jobs; the
     // root swap below invalidates the cache with the meta
@@ -302,7 +304,7 @@ object Profile {
       s"$path/absorbed", Seq(s"$path/absorbed"))
     val inLedger = h.select("shard").distinct()
       .join(broadcast(ledger.select("shard")), Seq("shard"), "left_semi")
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     if (inLedger.isEmpty) return
     // fail loud on drifted presentations: the retracted shards' rows
     // must re-fold to the fingerprint recorded at absorb (fp-less
@@ -341,10 +343,10 @@ object Profile {
         h.join(broadcast(gone), Seq("shard"), "left_semi")
           .select(lit(null).cast(shardType).as("shard"), col("bucket"),
             (-col("cnt")).as("cnt")))
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     val newLedger = ledger
       .join(broadcast(inLedger), Seq("shard"), "left_anti")
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     val meta = Seq(width).toDF("width_cents")
     ArtifactStore.stageRootSwap(spark, path) { staging =>
       newShards.write.mode("overwrite").parquet(s"$staging/shards")

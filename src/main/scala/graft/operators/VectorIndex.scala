@@ -406,7 +406,7 @@ object VectorIndex {
     val assigned = nextEpoch.fold(assigned0)(e =>
         assigned0.withColumn("epoch", lit(e)))
       .observe(obs, collect_set(col("cell")).as("__cells"))
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     // collect_set materializes as mutable.ArraySeq — convert, don't
     // cast to the immutable default Seq
     val cells = Option(obs.get("__cells"))
@@ -431,7 +431,7 @@ object VectorIndex {
             Seq("vec_id"), "left_semi")
           .select("vec_id", "cell")
           .observe(pObs, count(lit(1)).as("__n"))
-          .localCheckpoint()
+          .transform(ArtifactStore.eagerCheckpoint)
         val nPresent = Option(pObs.get("__n"))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
         val present = presentRows.select("vec_id").distinct()
@@ -464,7 +464,7 @@ object VectorIndex {
               .filter(col("cell").isin(pCells: _*))
               .select("vec_id")
               .join(broadcast(present), Seq("vec_id"), "left_semi")
-              .distinct().localCheckpoint()
+              .distinct().transform(ArtifactStore.eagerCheckpoint)
           }
         ArtifactStore.appendMissing(spark, indexPath, "vectors", "vec_id",
           assigned.select("vec_id"), assigned,
@@ -546,7 +546,7 @@ object VectorIndex {
       indexPath: String): Unit = {
     val spark = retract.sparkSession
     val rids = retract.select(col(idCol).as("vec_id")).distinct()
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint)
     // tombstone only ids the index actually HOLDS (the round-11 labels
     // advisory, applied to the vector family): a takedown for a vector
     // that was never embedded must not poison a future absorb's clash
@@ -564,7 +564,7 @@ object VectorIndex {
         s"$indexPath/vectors", Seq(s"$indexPath/vectors")))
     val indexed = held
       .select("vec_id").join(broadcast(rids), Seq("vec_id"), "left_semi")
-      .distinct().localCheckpoint()
+      .distinct().transform(ArtifactStore.eagerCheckpoint)
     ArtifactStore.appendTombstones(spark, indexPath, "vec_id", indexed)
   }
 
@@ -628,7 +628,8 @@ object VectorIndex {
     // swap unlinks the files this plan reads
     val stored = ArtifactStore.readStore(spark, indexPath, "vectors",
         "vec_id")
-      .select(col("vec_id"), col("vec")).localCheckpoint()
+      .select(col("vec_id"), col("vec"))
+      .transform(ArtifactStore.eagerCheckpoint)
     val codebook = Similarity.trainCodebook(stored, "vec_id", "vec",
       nlist, trainIterations)
     var metaRow: Row = null

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 
 /** Structured Streaming extension (SURVEY.md §7.5): the reference is
   * batch-only; this adds the streaming ingestion path — file stream →
@@ -43,6 +44,96 @@ object StreamOps {
       case _ => df
     }
 
+  /** How `openStream` presents its input to the file source. */
+  private sealed trait Staging
+  /** Read the directory as it is (the caller staged it). */
+  private case object AsIs extends Staging
+  /** A directory as it is, a single file through a symlink dir
+    * (`stageStreamDir`). */
+  private final case class Link(prefix: String) extends Staging
+  /** Symlinks plus the far-future sentinel row
+    * (`stageStreamDirWithSentinel`) — for append-mode drains. */
+  private final case class Sentinel(prefix: String) extends Staging
+
+  /** The one source opener: read the batch schema once, stage `path`,
+    * and return a factory of ts-normalized file streams over the staged
+    * dir (`maxFilesPerTrigger=1` when `oneFilePerBatch`). Single-source
+    * drains call the factory once; stream-stream joins call it once per
+    * leg, so each leg is its own file source over the same staging.
+    */
+  private def openStream(spark: SparkSession, path: String,
+      staging: Staging = AsIs,
+      oneFilePerBatch: Boolean = false): () => DataFrame = {
+    val schema = spark.read.parquet(path).schema
+    val dir = staging match {
+      case AsIs => path
+      case Link(prefix) => stageStreamDir(path, prefix)
+      case Sentinel(prefix) =>
+        stageStreamDirWithSentinel(spark, path, prefix, schema)
+    }
+    () => {
+      val reader = spark.readStream.schema(schema)
+      normalizeTs((if (oneFilePerBatch) reader.option("maxFilesPerTrigger", "1")
+        else reader).parquet(dir), schema)
+    }
+  }
+
+  /** Where a drain writes: an in-memory table named after the query, a
+    * checkpointed parquet dir, or a `foreachBatch` body. */
+  private[graft] sealed trait Sink
+  private[graft] case object ToMemory extends Sink
+  private[graft] final case class ToParquet(path: String,
+      checkpoint: String) extends Sink
+  private[graft] final case class ToBatches(checkpoint: Option[String],
+      body: (DataFrame, Long) => Unit) extends Sink
+
+  /** The one bounded-drain skeleton every blocking streaming query runs
+    * through: start `df` under the AvailableNow trigger (process the
+    * backlog present at start, then stop), wait for it, and return the
+    * finished query so callers can read its progress. A checkpointed
+    * sink resumes where the last drain stopped, which is what makes each
+    * drain re-runnable as more input lands.
+    */
+  private[graft] def drain(df: DataFrame, name: String, mode: String,
+      sink: Sink): StreamingQuery = {
+    val w = df.writeStream.queryName(name).outputMode(mode)
+      .trigger(Trigger.AvailableNow())
+    val q = (sink match {
+      case ToMemory => w.format("memory")
+      case ToParquet(path, ckpt) =>
+        w.format("parquet").option("path", path)
+          .option("checkpointLocation", ckpt)
+      case ToBatches(ckpt, body) =>
+        ckpt.foldLeft(w.foreachBatch(body))(_.option("checkpointLocation", _))
+    }).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** `drain` into the memory sink, returning the drained table. */
+  private def drainToTable(df: DataFrame, name: String,
+      mode: String): DataFrame = {
+    drain(df, name, mode, ToMemory)
+    df.sparkSession.table(name)
+  }
+
+  /** Append-mode `drain` into a fresh parquet dir with a fresh
+    * checkpoint: (the appended rows, the finished query). */
+  private def drainToFreshDir(df: DataFrame,
+      prefix: String): (DataFrame, StreamingQuery) = {
+    val outDir = java.nio.file.Files.createTempDirectory(s"$prefix-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(s"$prefix-ckpt").toString
+    val q = drain(df, prefix, "append", ToParquet(outDir, ckpt))
+    (df.sparkSession.read.parquet(outDir), q)
+  }
+
+  /** The artifact-drain shape: one micro-batch per file under
+    * `streamDir`, each handed to `body`, resuming from `checkpointDir`. */
+  private def fileDrain(spark: SparkSession, streamDir: String,
+      checkpointDir: String, name: String)(body: DataFrame => Unit): Unit =
+    drain(openStream(spark, streamDir, oneFilePerBatch = true)(), name,
+      "append", ToBatches(Some(checkpointDir), (batch, _) => body(batch)))
+
   /** Event-time tumbling-window aggregation over the events table, run as a
     * real streaming query (AvailableNow trigger — processes the backlog,
     * then stops). NOTE on modes: this drain uses `complete` output into a
@@ -61,21 +152,12 @@ object StreamOps {
     */
   def windowedEventAgg(spark: SparkSession, eventsPath: String,
       queryName: String = "graft_stream_agg"): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream")
-    val stream = normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val agg = stream
+    val agg = openStream(spark, eventsPath, Link("graft-stream"))()
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("events"),
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(agg, queryName, "complete")
       .select(col("event_type"),
         date_format(col("w.start"), "yyyy-MM-dd").as("window_start"),
         col("events"), col("sum_cents"))
@@ -96,9 +178,7 @@ object StreamOps {
     */
   def streamingOhlc(spark: SparkSession, eventsPath: String,
       queryName: String = "graft_stream_ohlc"): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-ohlc")
-    val stream = normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
+    val stream = openStream(spark, eventsPath, Link("graft-stream-ohlc"))()
     val ord = struct(expr("unix_micros(ts)"), col("event_id"))
     val cents = floor(col("value") * 100 + 0.5).cast("long")
     val agg = stream
@@ -107,13 +187,7 @@ object StreamOps {
       .agg(min_by(cents, ord).as("open"), max(cents).as("high"),
         min(cents).as("low"), max_by(cents, ord).as("close"),
         count(lit(1)).as("n"), sum(cents).as("sum_cents"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(agg, queryName, "complete")
       .select(col("user_id"),
         expr("div(unix_micros(w.start), 86400000000)").as("bucket"),
         col("open"), col("high"), col("low"), col("close"),
@@ -198,17 +272,9 @@ object StreamOps {
     * evicted (complete mode's state holds EVERY window ever seen; here
     * only the sentinel's unfinalized window may remain).
     */
-  private def runAppendDrain(spark: SparkSession, agg: DataFrame,
+  private def runAppendDrain(agg: DataFrame,
       prefix: String): (DataFrame, Long) = {
-    val outDir = java.nio.file.Files.createTempDirectory(s"$prefix-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"$prefix-ckpt").toString
-    val q = agg.writeStream
-      .format("parquet").option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val (out, q) = drainToFreshDir(agg, prefix)
     // sum over the LAST progress entry that actually reports state
     // operators: a chained-stateful drain (x149's dedup + agg) reports one
     // entry per operator, and the eviction claim is about their combined
@@ -219,7 +285,7 @@ object StreamOps {
     val stateRows = q.recentProgress.toSeq.reverse
       .find(_.stateOperators.nonEmpty)
       .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    (spark.read.parquet(outDir), stateRows)
+    (out, stateRows)
   }
 
   /** APPEND-MODE twin of `windowedEventAgg` — the shape that runs forever
@@ -236,25 +302,15 @@ object StreamOps {
   def windowedEventAggAppend(spark: SparkSession, eventsPath: String): DataFrame =
     windowedEventAggAppendWithState(spark, eventsPath)._1
 
-  /** Shared preamble of the append-mode drains: read the batch schema,
-    * stage the sentinel'd stream dir, open the ts-normalized stream.
-    */
-  private def sentinelStream(spark: SparkSession, eventsPath: String,
-      prefix: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDirWithSentinel(spark, eventsPath, prefix, schema)
-    normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-  }
-
   private[graft] def windowedEventAggAppendWithState(
       spark: SparkSession, eventsPath: String): (DataFrame, Long) = {
-    val stream = sentinelStream(spark, eventsPath, "graft-stream-appagg")
+    val stream = openStream(spark, eventsPath, Sentinel("graft-stream-appagg"))()
     val agg = stream
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"))
       .agg(count(lit(1)).as("events"),
         sum(floor(col("value") * 100 + 0.5).cast("long")).as("sum_cents"))
-    val (out, stateRows) = runAppendDrain(spark, agg, "graft-stream-appagg")
+    val (out, stateRows) = runAppendDrain(agg, "graft-stream-appagg")
     (out.select(col("event_type"),
         date_format(col("w.start"), "yyyy-MM-dd").as("window_start"),
         col("events"), col("sum_cents")),
@@ -272,7 +328,7 @@ object StreamOps {
 
   private[graft] def streamingOhlcAppendWithState(
       spark: SparkSession, eventsPath: String): (DataFrame, Long) = {
-    val stream = sentinelStream(spark, eventsPath, "graft-stream-appohlc")
+    val stream = openStream(spark, eventsPath, Sentinel("graft-stream-appohlc"))()
     val ord = struct(expr("unix_micros(ts)"), col("event_id"))
     val cents = floor(col("value") * 100 + 0.5).cast("long")
     val agg = stream
@@ -281,7 +337,7 @@ object StreamOps {
       .agg(min_by(cents, ord).as("open"), max(cents).as("high"),
         min(cents).as("low"), max_by(cents, ord).as("close"),
         count(lit(1)).as("n"), sum(cents).as("sum_cents"))
-    val (out, stateRows) = runAppendDrain(spark, agg, "graft-stream-appohlc")
+    val (out, stateRows) = runAppendDrain(agg, "graft-stream-appohlc")
     (out.select(col("user_id"),
         expr("div(unix_micros(w.start), 86400000000)").as("bucket"),
         col("open"), col("high"), col("low"), col("close"),
@@ -316,12 +372,12 @@ object StreamOps {
     */
   private[graft] def hotKeyWindowLogWithState(spark: SparkSession,
       eventsPath: String, keyCol: String): (DataFrame, Long) = {
-    val stream = sentinelStream(spark, eventsPath, "graft-stream-hotw")
+    val stream = openStream(spark, eventsPath, Sentinel("graft-stream-hotw"))()
     val agg = stream
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col(keyCol).as("key"))
       .agg(count(lit(1)).as("cnt"))
-    val (out, stateRows) = runAppendDrain(spark, agg, "graft-stream-hotw")
+    val (out, stateRows) = runAppendDrain(agg, "graft-stream-hotw")
     (out.select(expr("div(unix_micros(w.start), 86400000000)").as("bucket"),
       col("key"), col("cnt")), stateRows)
   }
@@ -355,7 +411,7 @@ object StreamOps {
 
   private[graft] def streamingDailyActivesAppendWithState(
       spark: SparkSession, eventsPath: String): (DataFrame, Long) = {
-    val stream = sentinelStream(spark, eventsPath, "graft-stream-dau")
+    val stream = openStream(spark, eventsPath, Sentinel("graft-stream-dau"))()
     val agg = stream
       .withWatermark("ts", "1 day")
       .select(col("ts"), col("user_id"),
@@ -363,7 +419,7 @@ object StreamOps {
       .dropDuplicatesWithinWatermark("user_id", "day")
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("actives"))
-    val (out, stateRows) = runAppendDrain(spark, agg, "graft-stream-dau")
+    val (out, stateRows) = runAppendDrain(agg, "graft-stream-dau")
     (out.select(expr("div(unix_micros(w.start), 86400000000)").as("bucket"),
       col("actives")), stateRows)
   }
@@ -405,14 +461,14 @@ object StreamOps {
       spark: SparkSession, eventsPath: String, dim: DataFrame,
       streamKey: String, dimKey: String, groupCol: String,
       valueCol: String = "value"): (DataFrame, Long) = {
-    val stream = sentinelStream(spark, eventsPath, "graft-stream-ssew")
+    val stream = openStream(spark, eventsPath, Sentinel("graft-stream-ssew"))()
     val agg = stream
       .withWatermark("ts", "1 day")
       .join(broadcast(dim), col(streamKey) === col(dimKey))
       .groupBy(window(col("ts"), "1 day").as("w"), col(groupCol))
       .agg(count(lit(1)).as("events"),
         sum(floor(col(valueCol) * 100 + 0.5).cast("long")).as("sum_cents"))
-    val (out, stateRows) = runAppendDrain(spark, agg, "graft-stream-ssew")
+    val (out, stateRows) = runAppendDrain(agg, "graft-stream-ssew")
     (out.select(expr("div(unix_micros(w.start), 86400000000)").as("bucket"),
       col(groupCol), col("events"), col("sum_cents")), stateRows)
   }
@@ -452,17 +508,10 @@ object StreamOps {
       keyCol: String, k: Int,
       queryName: String = "graft_stream_hotkeys"): DataFrame = {
     require(k > 0, "streamingHotKeys: k must be positive")
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-hotkeys")
-    val stream = normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val agg = stream.groupBy(col(keyCol).as("key")).agg(count(lit(1)).as("cnt"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).orderBy(col("cnt").desc, col("key")).limit(k)
+    val agg = openStream(spark, eventsPath, Link("graft-stream-hotkeys"))()
+      .groupBy(col(keyCol).as("key")).agg(count(lit(1)).as("cnt"))
+    drainToTable(agg, queryName, "complete")
+      .orderBy(col("cnt").desc, col("key")).limit(k)
   }
 
   /** Gap-based sessionization via the native session_window operator: a
@@ -492,20 +541,11 @@ object StreamOps {
     */
   def streamingDedup(spark: SparkSession, eventsPath: String,
       keyCols: Seq[String], queryName: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-dedup")
-    val stream = normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val deduped = stream
+    val deduped = openStream(spark, eventsPath, Link("graft-stream-dedup"))()
       .withWatermark("ts", "30 days")
       .dropDuplicatesWithinWatermark(keyCols)
       .select(keyCols.map(col): _*)
-    val q = deduped.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(deduped, queryName, "append")
   }
 
   /** Streaming curation — the continuous-ingest shape of the x35–x40
@@ -520,22 +560,14 @@ object StreamOps {
   def streamingCuration(spark: SparkSession, docsPath: String,
       queryName: String, minChars: Int = 60, minWords: Int = 8): DataFrame = {
     import graft.functions.Portable.tokens
-    val schema = spark.read.parquet(docsPath).schema
-    val streamDir = stageStreamDir(docsPath, "graft-stream-curation")
-    val stream = spark.readStream.schema(schema).parquet(streamDir)
+    val stream = openStream(spark, docsPath, Link("graft-stream-curation"))()
     val red = graft.operators.Curation.redactPii(
       stream.select(col("doc_id"), col("text")), "doc_id", "text")
     val gated = red.select(col("doc_id"), col("emails"), col("ips"), col("phones"),
         length(col("redacted")).as("chars"),
         size(tokens(col("redacted"))).as("words"))
       .filter(col("chars") >= minChars && col("words") >= minWords)
-    val q = gated.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(gated, queryName, "append")
   }
 
   /** Watermarked stream-stream inner join — purchases joined to the views
@@ -553,14 +585,12 @@ object StreamOps {
     */
   def streamStreamJoin(spark: SparkSession, eventsPath: String,
       maxLag: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-ssj")
-    def src = normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
-    val purchases = src.filter(col("event_type") === "purchase")
+    val src = openStream(spark, eventsPath, Link("graft-stream-ssj"))
+    val purchases = src().filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_event"))
       .withWatermark("p_ts", "1 day")
-    val views = src.filter(col("event_type") === "view")
+    val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_event"))
       .withWatermark("v_ts", "1 day")
@@ -568,13 +598,7 @@ object StreamOps {
       col("p_user") === col("v_user") &&
         col("v_ts") >= col("p_ts") - expr(s"INTERVAL $maxLag") &&
         col("v_ts") <= col("p_ts"))
-    val q = joined.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(joined, queryName, "append")
   }
 
   /** Watermarked stream-stream LEFT SEMI join — "which views CONVERTED
@@ -595,15 +619,12 @@ object StreamOps {
     */
   def streamStreamLeftSemi(spark: SparkSession, eventsPath: String,
       horizon: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-ssls")
-    def src = normalizeTs(
-      spark.readStream.schema(schema).parquet(streamDir), schema)
-    val views = src.filter(col("event_type") === "view")
+    val src = openStream(spark, eventsPath, Link("graft-stream-ssls"))
+    val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_event"))
       .withWatermark("v_ts", "1 minute")
-    val purchases = src.filter(col("event_type") === "purchase")
+    val purchases = src().filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_event"))
       .withWatermark("p_ts", "1 minute")
@@ -614,13 +635,7 @@ object StreamOps {
         "left_semi")
       .select(col("v_user"), col("v_event"),
         expr("unix_micros(v_ts)").as("v_t_us"))
-    val q = joined.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(joined, queryName, "append")
   }
 
   /** Watermarked stream-stream LEFT OUTER join — the attribution shape
@@ -644,16 +659,12 @@ object StreamOps {
     */
   def streamStreamLeftOuter(spark: SparkSession, eventsPath: String,
       horizon: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDirWithSentinel(spark, eventsPath,
-      "graft-stream-sslo", schema)
-    def src = normalizeTs(
-      spark.readStream.schema(schema).parquet(streamDir), schema)
-    val views = src.filter(col("event_type").isin("view", "__sentinel"))
+    val src = openStream(spark, eventsPath, Sentinel("graft-stream-sslo"))
+    val views = src().filter(col("event_type").isin("view", "__sentinel"))
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_event"))
       .withWatermark("v_ts", "1 minute")
-    val purchases = src.filter(col("event_type").isin("purchase", "__sentinel"))
+    val purchases = src().filter(col("event_type").isin("purchase", "__sentinel"))
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_event"))
       .withWatermark("p_ts", "1 minute")
@@ -674,13 +685,7 @@ object StreamOps {
       .select(col("v_user"), col("v_event"),
         expr("unix_micros(v_ts)").as("v_t_us"), col("p_event"),
         (expr("unix_micros(p_ts)") - expr("unix_micros(v_ts)")).as("lag_us"))
-    val q = joined.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName).filter(col("v_user") =!= -1L)
+    drainToTable(joined, queryName, "append").filter(col("v_user") =!= -1L)
   }
 
   /** Watermarked stream-stream FULL OUTER join — the complete attribution
@@ -705,16 +710,12 @@ object StreamOps {
     */
   def streamStreamFullOuter(spark: SparkSession, eventsPath: String,
       horizon: String, queryName: String): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDirWithSentinel(spark, eventsPath,
-      "graft-stream-ssfo", schema)
-    def src = normalizeTs(
-      spark.readStream.schema(schema).parquet(streamDir), schema)
-    val views = src.filter(col("event_type").isin("view", "__sentinel"))
+    val src = openStream(spark, eventsPath, Sentinel("graft-stream-ssfo"))
+    val views = src().filter(col("event_type").isin("view", "__sentinel"))
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_event"))
       .withWatermark("v_ts", "1 minute")
-    val purchases = src.filter(col("event_type").isin("purchase", "__sentinel"))
+    val purchases = src().filter(col("event_type").isin("purchase", "__sentinel"))
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_event"))
       .withWatermark("p_ts", "1 minute")
@@ -727,13 +728,7 @@ object StreamOps {
         expr("unix_micros(v_ts)").as("v_t_us"),
         col("p_user"), col("p_event"),
         expr("unix_micros(p_ts)").as("p_t_us"))
-    val q = joined.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(joined, queryName, "append")
       .filter(!(col("v_user") <=> -1L) && !(col("p_user") <=> -1L))
   }
 
@@ -754,22 +749,12 @@ object StreamOps {
   def streamStaticEnrich(spark: SparkSession, eventsPath: String,
       dim: DataFrame, streamKey: String, dimKey: String, groupCol: String,
       queryName: String, valueCol: String = "value"): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-sse")
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(streamDir), schema)
-    val agg = stream
+    val agg = openStream(spark, eventsPath, Link("graft-stream-sse"))()
       .join(broadcast(dim), col(streamKey) === col(dimKey))
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("events"),
         sum(floor(col(valueCol) * 100 + 0.5).cast("long")).as("sum_cents"))
-    val q = agg.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(agg, queryName, "complete")
   }
 
   /** Streaming CDC apply — fold a change stream into a keyed snapshot:
@@ -800,21 +785,10 @@ object StreamOps {
     */
   def cdcApply(spark: SparkSession, changesPath: String, snapshotRoot: String,
       key: String, orderDescCols: Seq[String], queryName: String,
-      checkpointDir: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(changesPath).schema
-    val streamDir = stageStreamDir(changesPath, "graft-cdc")
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(streamDir), schema)
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyCdcBatch(batch, batchId, snapshotRoot, key, orderDescCols)
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    q.awaitTermination()
-  }
+      checkpointDir: Option[String] = None): Unit =
+    drain(openStream(spark, changesPath, Link("graft-cdc"))(), queryName,
+      "append", ToBatches(checkpointDir, (batch, batchId) =>
+        applyCdcBatch(batch, batchId, snapshotRoot, key, orderDescCols)))
 
   /** Streaming dedup ingestion — the production corpus-ingest loop: a
     * document stream arrives in micro-batches; each batch is fingerprinted,
@@ -839,20 +813,10 @@ object StreamOps {
     */
   def streamDedupIngest(spark: SparkSession, docsPath: String,
       indexRoot: String, idCol: String, textCol: String, queryName: String,
-      checkpointDir: Option[String] = None): Unit = {
-    val schema = spark.read.parquet(docsPath).schema
-    val streamDir = stageStreamDir(docsPath, "graft-dedup-ingest")
-    val stream = spark.readStream.schema(schema).parquet(streamDir)
-    val writer = stream.writeStream
-      .queryName(queryName)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestDedupBatch(batch, batchId, indexRoot, idCol, textCol)
-      }
-      .trigger(Trigger.AvailableNow())
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    q.awaitTermination()
-  }
+      checkpointDir: Option[String] = None): Unit =
+    drain(openStream(spark, docsPath, Link("graft-dedup-ingest"))(),
+      queryName, "append", ToBatches(checkpointDir, (batch, batchId) =>
+        ingestDedupBatch(batch, batchId, indexRoot, idCol, textCol)))
 
   /** Streaming label maintenance — `Dedup.absorbIntoLabels` wired into a
     * foreachBatch drain: the crawl-firehose shape that keeps the
@@ -881,21 +845,11 @@ object StreamOps {
       checkpointDir: String, labelsPath: String, indexPath: String,
       idCol: String, textCol: String, shingleSize: Int = 3,
       numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      .writeStream
-      .queryName("graft_label_absorb")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        absorbLabelBatch(batch, labelsPath, indexPath, idCol, textCol,
-          shingleSize, numHashes, bands, threshold)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      threshold: Double = 0.5): Unit =
+    fileDrain(spark, streamDir, checkpointDir, "graft_label_absorb") {
+      absorbLabelBatch(_, labelsPath, indexPath, idCol, textCol,
+        shingleSize, numHashes, bands, threshold)
+    }
 
   /** One micro-batch of the label-absorb drain (the foreachBatch body,
     * exposed for direct replay tests): drop the docs the stored labels
@@ -977,22 +931,11 @@ object StreamOps {
     */
   def labelRetractDrain(spark: SparkSession, streamDir: String,
       checkpointDir: String, labelsPath: String, indexPath: String,
-      idCol: String, threshold: Double = 0.5): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      .writeStream
-      .queryName("graft_label_retract")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Dedup.retractFromLabels(batch, idCol,
-          labelsPath, indexPath, threshold)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      idCol: String, threshold: Double = 0.5): Unit =
+    fileDrain(spark, streamDir, checkpointDir, "graft_label_retract") {
+      graft.operators.Dedup.retractFromLabels(_, idCol, labelsPath,
+        indexPath, threshold)
+    }
 
   /** Streaming IVF-index maintenance — the embedding-firehose symmetry
     * of `labelAbsorbDrain` (round-11 verdict #3): vector files landing
@@ -1010,20 +953,10 @@ object StreamOps {
     */
   def vectorAbsorbDrain(spark: SparkSession, streamDir: String,
       checkpointDir: String, indexPath: String, idCol: String,
-      vecCol: String): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      .writeStream
-      .queryName("graft_vector_absorb")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        absorbVectorBatch(batch, indexPath, idCol, vecCol)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      vecCol: String): Unit =
+    fileDrain(spark, streamDir, checkpointDir, "graft_vector_absorb") {
+      absorbVectorBatch(_, indexPath, idCol, vecCol)
+    }
 
   /** One micro-batch of the vector-absorb drain (the foreachBatch body,
     * exposed for direct replay tests): drop the vectors the stored
@@ -1065,21 +998,10 @@ object StreamOps {
     * (the x168 entry folds mid-stream).
     */
   def vectorRetractDrain(spark: SparkSession, streamDir: String,
-      checkpointDir: String, indexPath: String, idCol: String): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      .writeStream
-      .queryName("graft_vector_retract")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.VectorIndex.retractFromIvfIndex(batch, idCol,
-          indexPath)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      checkpointDir: String, indexPath: String, idCol: String): Unit =
+    fileDrain(spark, streamDir, checkpointDir, "graft_vector_retract") {
+      graft.operators.VectorIndex.retractFromIvfIndex(_, idCol, indexPath)
+    }
 
   /** Streaming HISTOGRAM maintenance — the fourth artifact family's
     * drain, completing the per-family symmetry (labels x158/x159,
@@ -1094,21 +1016,10 @@ object StreamOps {
     */
   def histogramAbsorbDrain(spark: SparkSession, streamDir: String,
       checkpointDir: String, path: String, shardCol: String,
-      cents: org.apache.spark.sql.Column): Unit = {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir)
-      .writeStream
-      .queryName("graft_histogram_absorb")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Profile.absorbIntoHistogram(batch, shardCol,
-          cents, path)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      cents: org.apache.spark.sql.Column): Unit =
+    fileDrain(spark, streamDir, checkpointDir, "graft_histogram_absorb") {
+      graft.operators.Profile.absorbIntoHistogram(_, shardCol, cents, path)
+    }
 
   /** One dedup-ingest micro-batch (the foreachBatch body, exposed for
     * direct replay tests): fingerprint the batch, keep min-id-per-novel-
@@ -1221,9 +1132,7 @@ object StreamOps {
   def statefulUserCounts(spark: SparkSession, eventsPath: String,
       queryName: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-state")
-    val users = spark.readStream.schema(schema).parquet(streamDir)
+    val users = openStream(spark, eventsPath, Link("graft-stream-state"))()
       .select(col("user_id")).as[Long]
     val counted = users.groupByKey(identity)
       .mapGroupsWithState[Long, (Long, Long)](GroupStateTimeout.NoTimeout) {
@@ -1233,38 +1142,20 @@ object StreamOps {
           (user, total)
       }
       .toDF("user_id", "events")
-    val q = counted.writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // the latest (= max, counts are monotonic) update per user is the total
-    spark.table(queryName).groupBy("user_id")
+    drainToTable(counted, queryName, "update").groupBy("user_id")
       .agg(max(col("events")).as("events"))
   }
 
-  /** Threshold alerting via flatMapGroupsWithState — the 0..n-rows-per-
-    * group state machine mapGroupsWithState can't express: per user,
-    * accumulate positive spend (cents) in state and EMIT one alert row
-    * for every `thresholdCents` level the running total crosses within a
-    * batch (a quiet batch emits nothing, a big one emits several — the
-    * real-time budget/abuse alarm). Alert ordinals are cumulative across
-    * batches (div(old,T)+1 .. div(new,T)), so replays from a checkpoint
-    * continue the sequence instead of restarting it. State is one Long
-    * per user; Update output mode.
-    */
   /** The alert stream itself (shared by the memory-sink query path and
     * the checkpointed parquet path): Append-mode flatMapGroupsWithState —
     * alerts are emitted exactly when crossed and never revised, so the
     * operator composes with append-only sinks and checkpoint recovery.
     */
-  private def thresholdAlertStream(spark: SparkSession, streamDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+  private def thresholdAlertStream(events: DataFrame,
       thresholdCents: Long): DataFrame = {
-    import spark.implicits._
-    val spend = normalizeTs(
-        spark.readStream.schema(schema).parquet(streamDir), schema)
+    import events.sparkSession.implicits._
+    val spend = events
       .select(col("user_id"),
         when(col("value") > 0, floor(col("value") * 100 + 0.5).cast("long"))
           .otherwise(0L).as("cents"))
@@ -1282,19 +1173,22 @@ object StreamOps {
       .toDF("user_id", "alert_idx")
   }
 
+  /** Threshold alerting via flatMapGroupsWithState — the 0..n-rows-per-
+    * group state machine mapGroupsWithState can't express: per user,
+    * accumulate positive spend (cents) in state and EMIT one alert row
+    * for every `thresholdCents` level the running total crosses within a
+    * batch (a quiet batch emits nothing, a big one emits several — the
+    * real-time budget/abuse alarm). Alert ordinals are cumulative across
+    * batches (div(old,T)+1 .. div(new,T)), so replays from a checkpoint
+    * continue the sequence instead of restarting it. State is one Long
+    * per user; Update output mode.
+    */
   def streamingThresholdAlerts(spark: SparkSession, eventsPath: String,
       thresholdCents: Long, queryName: String): DataFrame = {
     require(thresholdCents > 0, "streamingThresholdAlerts: threshold must be positive")
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-alerts")
-    val q = thresholdAlertStream(spark, streamDir, schema, thresholdCents)
-      .writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(thresholdAlertStream(
+        openStream(spark, eventsPath, Link("graft-stream-alerts"))(),
+        thresholdCents), queryName, "append")
   }
 
   /** Checkpointed variant: drain whatever is new in `streamDir` into a
@@ -1306,16 +1200,8 @@ object StreamOps {
   def thresholdAlertsToDir(spark: SparkSession, streamDir: String,
       outDir: String, checkpointDir: String, thresholdCents: Long): Unit = {
     require(thresholdCents > 0, "thresholdAlertsToDir: threshold must be positive")
-    val schema = spark.read.parquet(streamDir).schema
-    val q = thresholdAlertStream(spark, streamDir, schema, thresholdCents)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(thresholdAlertStream(openStream(spark, streamDir)(), thresholdCents),
+      "graft_threshold_alerts", "append", ToParquet(outDir, checkpointDir))
   }
 
   /** Input/output rows of the `transformWithState` discovery drain. */
@@ -1466,19 +1352,15 @@ object StreamOps {
     }
   }
 
-  /** Drain `eventsPath` through the timer-based sessionizer (state v2 on
+  /** The timer-based sessionizer over an events stream (state v2 on
     * RocksDB, event-time mode): one row per closed session —
     * (user_id, session_start_us, session_end_us, events, cents_sum).
     */
-  private def sessionTimerStream(spark: SparkSession, streamDir: String,
-      schema: org.apache.spark.sql.types.StructType, gapUs: Long,
-      oneFilePerBatch: Boolean = false) = {
-    import spark.implicits._
-    val reader = spark.readStream.schema(schema)
-    val staged =
-      if (oneFilePerBatch) reader.option("maxFilesPerTrigger", "1")
-      else reader
-    normalizeTs(staged.parquet(streamDir), schema)
+  private def sessionTimerStream(events: DataFrame,
+      gap: java.time.Duration): DataFrame = {
+    import events.sparkSession.implicits._
+    val gapUs = gap.toNanos / 1000L
+    events
       .withWatermark("ts", "1 minute")
       .select(col("user_id"), expr("unix_micros(ts)").as("t_us"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
@@ -1487,22 +1369,15 @@ object StreamOps {
       .transformWithState(new SessionTimerProcessor(gapUs),
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
+      .toDF()
   }
 
   def streamingSessionTimers(spark: SparkSession, eventsPath: String,
       gap: java.time.Duration, queryName: String): DataFrame =
     withRocksDbStore(spark) {
-      val schema = spark.read.parquet(eventsPath).schema
-      val streamDir = stageStreamDirWithSentinel(spark, eventsPath,
-        "graft-stream-sessions", schema)
-      val q = sessionTimerStream(spark, streamDir, schema, gap.toNanos / 1000L)
-        .writeStream
-        .format("memory").queryName(queryName)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(queryName).filter(col("user_id") =!= -1L)
+      drainToTable(sessionTimerStream(openStream(spark, eventsPath,
+          Sentinel("graft-stream-sessions"))(), gap), queryName, "append")
+        .filter(col("user_id") =!= -1L)
     }
 
   /** Checkpointed variant of the timer sessionizer: drain whatever is new
@@ -1516,16 +1391,8 @@ object StreamOps {
   def sessionTimersToDir(spark: SparkSession, streamDir: String,
       outDir: String, checkpointDir: String,
       gap: java.time.Duration): Unit = withRocksDbStore(spark) {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = sessionTimerStream(spark, streamDir, schema, gap.toNanos / 1000L)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(sessionTimerStream(openStream(spark, streamDir)(), gap),
+      "graft_session_timers", "append", ToParquet(outDir, checkpointDir))
   }
 
   /** Read the sessionizer's LIVE per-user event buffer out of a
@@ -1559,29 +1426,15 @@ object StreamOps {
   private[graft] def sessionStateProbe(spark: SparkSession,
       streamDir: String, gap: java.time.Duration): (Long, Long) =
     withRocksDbStore(spark) {
-      val schema = spark.read.parquet(streamDir).schema
       val root = java.nio.file.Files.createTempDirectory("graft-probe-sess")
       val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-      val q = sessionTimerStream(spark, streamDir, schema,
-          gap.toNanos / 1000L, oneFilePerBatch = true)
-        .writeStream
-        .format("parquet").option("path", outDir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      drain(sessionTimerStream(
+          openStream(spark, streamDir, oneFilePerBatch = true)(), gap),
+        "graft-probe-sess", "append", ToParquet(outDir, ckpt))
       (spark.read.parquet(outDir).count(),
         sessionBufferFromState(spark, ckpt).count())
     }
 
-  /** Drain `eventsPath` through the state-v2 discovery processor into a
-    * memory sink (AvailableNow). See `TypeDiscoveryProcessor` for the
-    * semantics and the state-store requirement.
-    */
-  /** Run `body` with the RocksDB state store provider set (state v2
-    * requires it), restoring the prior provider after.
-    */
   /** Progress row of the streaming MG monitor (one per shard per batch —
     * the observable the sink keeps; the real product is the state).
     */
@@ -1647,7 +1500,7 @@ object StreamOps {
   def streamingHeavyHitters(spark: SparkSession, docsPath: String, k: Int,
       shards: Int, chunks: Int): DataFrame = {
     require(chunks > 0, "streamingHeavyHitters: chunks > 0")
-    val streamDir = stageStreamDirChunks(spark, docsPath,
+    val streamDir = stageStreamDirChunksDf(spark, spark.read.parquet(docsPath),
       "graft-stream-mg", chunks)
     val root = java.nio.file.Files
       .createTempDirectory("graft-stream-mg-ckpt")
@@ -1671,26 +1524,16 @@ object StreamOps {
     import spark.implicits._
     require(k >= 2 && shards > 0,
       "heavyHittersMgDrain: k >= 2, shards > 0")
-    val toks = spark.readStream
-      .schema(spark.read.parquet(streamDir).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(streamDir)
+    val toks = openStream(spark, streamDir, oneFilePerBatch = true)()
       .select(explode(graft.functions.Portable.tokens(col("text"))).as("token"))
       .select(pmod(xxhash64(col("token")), lit(shards)).cast("int").as("shard"),
         col("token"))
       .as[(Int, String)]
-    val q = toks.groupByKey(_._1)
-      .transformWithState(new MgShardProcessor(k - 1),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(toks.groupByKey(_._1)
+        .transformWithState(new MgShardProcessor(k - 1),
+          org.apache.spark.sql.streaming.TimeMode.None(),
+          OutputMode.Append()).toDF(),
+      "graft_heavy_hitters_mg", "append", ToParquet(outDir, checkpointDir))
   }
 
   /** Snapshot the MG candidate union out of the checkpoint (statestore
@@ -1716,15 +1559,11 @@ object StreamOps {
         expr("div(10000 * cnt, total)").as("pct_x10000"))
   }
 
-  /** Stage a parquet file/dir as `chunks` separate parquet part files in
-    * a fresh directory, so a maxFilesPerTrigger=1 file stream drains it
-    * in `chunks` micro-batches (the multi-batch twin of stageStreamDir's
+  /** Stage a frame as `chunks` separate parquet part files in a fresh
+    * directory, so a maxFilesPerTrigger=1 file stream drains it in
+    * `chunks` micro-batches (the multi-batch twin of stageStreamDir's
     * single-symlink staging).
     */
-  private def stageStreamDirChunks(spark: SparkSession, path: String,
-      prefix: String, chunks: Int): String =
-    stageStreamDirChunksDf(spark, spark.read.parquet(path), prefix, chunks)
-
   private[graft] def stageStreamDirChunksDf(spark: SparkSession,
       df: DataFrame, prefix: String, chunks: Int): String = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
@@ -1740,7 +1579,7 @@ object StreamOps {
     // micro-batches — fail loudly rather than let a silently smaller batch
     // count masquerade as multi-batch coverage.
     require(parts.length == chunks,
-      s"stageStreamDirChunks: input staged ${parts.length} non-empty " +
+      s"stageStreamDirChunksDf: input staged ${parts.length} non-empty " +
         s"chunks but $chunks were requested — input too small for the " +
         "requested micro-batch count")
     parts.zipWithIndex.foreach { case (f, i) =>
@@ -1800,9 +1639,11 @@ object StreamOps {
   // across all batches (the honest bound: a mid-stream spike shows; the
   // final batch alone could understate).
 
-  private def maxStateRows(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Long = {
-    val s = q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numRowsTotal))
+  /** Peak state of a finished drain: the max over batches of the state
+    * rows summed across its stateful operators (-1 if none reported). */
+  private def peakStateRows(q: StreamingQuery): Long = {
+    val s = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
+      .map(_.stateOperators.map(_.numRowsTotal).sum)
     if (s.isEmpty) -1L else s.max
   }
 
@@ -1813,20 +1654,12 @@ object StreamOps {
     */
   private[graft] def hotKeyWindowStateProbe(spark: SparkSession,
       streamDir: String, keyCol: String): (Long, Long) = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir), schema)
-    val agg = stream
+    val agg = openStream(spark, streamDir, oneFilePerBatch = true)()
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("w"), col(keyCol).as("key"))
       .agg(count(lit(1)).as("cnt"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-probe-hotw-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-probe-hotw-ckpt").toString
-    val q = agg.writeStream.format("parquet").option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    (spark.read.parquet(outDir).count(), maxStateRows(q))
+    val (out, q) = drainToFreshDir(agg, "graft-probe-hotw")
+    (out.count(), peakStateRows(q))
   }
 
   /** Chained-stateful daily-actives (the x149 machinery: event-time
@@ -1837,26 +1670,15 @@ object StreamOps {
     */
   private[graft] def dauChainedStateProbe(spark: SparkSession,
       streamDir: String): (Long, Long) = {
-    val schema = spark.read.parquet(streamDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir), schema)
-    val agg = stream
+    val agg = openStream(spark, streamDir, oneFilePerBatch = true)()
       .withWatermark("ts", "1 day")
       .select(col("ts"), col("user_id"),
         window(col("ts"), "1 day").getField("start").as("day"))
       .dropDuplicatesWithinWatermark("user_id", "day")
       .groupBy(window(col("ts"), "1 day").as("w"))
       .agg(count(lit(1)).as("actives"))
-    val outDir = java.nio.file.Files.createTempDirectory("graft-probe-dau-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-probe-dau-ckpt").toString
-    val q = agg.writeStream.format("parquet").option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val combined = q.recentProgress.toSeq
-      .map(_.stateOperators.map(_.numRowsTotal).sum)
-    (spark.read.parquet(outDir).count(),
-      if (combined.isEmpty) -1L else combined.max)
+    val (out, q) = drainToFreshDir(agg, "graft-probe-dau")
+    (out.count(), peakStateRows(q))
   }
 
   /** Stream-stream left-semi join (the x34/x133/x136/x137 machinery) over
@@ -1866,14 +1688,12 @@ object StreamOps {
     */
   private[graft] def joinHorizonStateProbe(spark: SparkSession,
       streamDir: String, horizon: String): (Long, Long) = {
-    val schema = spark.read.parquet(streamDir).schema
-    def src = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(streamDir), schema)
-    val views = src.filter(col("event_type") === "view")
+    val src = openStream(spark, streamDir, oneFilePerBatch = true)
+    val views = src().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
         col("event_id").as("v_event"))
       .withWatermark("v_ts", "1 minute")
-    val purchases = src.filter(col("event_type") === "purchase")
+    val purchases = src().filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_event"))
       .withWatermark("p_ts", "1 minute")
@@ -1884,12 +1704,10 @@ object StreamOps {
         "left_semi")
       .select(col("v_user"), col("v_event"))
     val qn = s"probe_ssj_${System.nanoTime()}"
-    val q = joined.writeStream.format("memory").queryName(qn)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val q = drain(joined, qn, "append", ToMemory)
     val out = spark.table(qn).count()
     spark.catalog.dropTempView(qn)
-    (out, maxStateRows(q))
+    (out, peakStateRows(q))
   }
 
   /** Streaming Misra–Gries drain (the x138 machinery) over `docs`, in
@@ -1909,6 +1727,9 @@ object StreamOps {
       .load(s"$root/ckpt").count()
   }
 
+  /** Run `body` with the RocksDB state store provider set (state v2
+    * requires it), restoring the prior provider after.
+    */
   private def withRocksDbStore[A](spark: SparkSession)(body: => A): A = {
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prior = spark.conf.getOption(providerKey)
@@ -1921,10 +1742,9 @@ object StreamOps {
     }
   }
 
-  private def typeDiscoveryStream(spark: SparkSession, streamDir: String,
-      schema: org.apache.spark.sql.types.StructType) = {
-    import spark.implicits._
-    normalizeTs(spark.readStream.schema(schema).parquet(streamDir), schema)
+  private def typeDiscoveryStream(events: DataFrame): DataFrame = {
+    import events.sparkSession.implicits._
+    events
       .select(col("user_id"), col("event_type"),
         expr("unix_micros(ts)").as("t_us"), col("event_id"))
       .as[DiscoveryEvent]
@@ -1932,20 +1752,17 @@ object StreamOps {
       .transformWithState(new TypeDiscoveryProcessor,
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
+      .toDF()
   }
 
+  /** Drain `eventsPath` through the state-v2 discovery processor into a
+    * memory sink (AvailableNow). See `TypeDiscoveryProcessor` for the
+    * semantics and the state-store requirement.
+    */
   def streamingTypeDiscovery(spark: SparkSession, eventsPath: String,
       queryName: String): DataFrame = withRocksDbStore(spark) {
-    val schema = spark.read.parquet(eventsPath).schema
-    val streamDir = stageStreamDir(eventsPath, "graft-stream-discovery")
-    val q = typeDiscoveryStream(spark, streamDir, schema)
-      .writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    drainToTable(typeDiscoveryStream(openStream(spark, eventsPath,
+      Link("graft-stream-discovery"))()), queryName, "append")
   }
 
   /** Checkpointed variant: drain whatever is new in `streamDir` into a
@@ -1957,16 +1774,8 @@ object StreamOps {
     */
   def typeDiscoveryToDir(spark: SparkSession, streamDir: String,
       outDir: String, checkpointDir: String): Unit = withRocksDbStore(spark) {
-    val schema = spark.read.parquet(streamDir).schema
-    val q = typeDiscoveryStream(spark, streamDir, schema)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    drain(typeDiscoveryStream(openStream(spark, streamDir)()),
+      "graft_type_discovery", "append", ToParquet(outDir, checkpointDir))
   }
 
   // ---- statestore readback: "what is this stream holding right now" ----

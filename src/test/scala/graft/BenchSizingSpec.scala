@@ -29,15 +29,24 @@ class BenchSizingSpec extends SparkSpec {
       GraftSession.ListThreshold.toString)
   }
 
-  test("src/main builds a SparkSession in exactly one place, GraftSession") {
-    import scala.jdk.CollectionConverters._
-    val builds = java.util.regex.Pattern.quote("SparkSession.builder").r
-    val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator
-      .asScala.filter(_.toString.endsWith(".scala"))
-      .flatMap { p =>
-        val n = builds.findAllIn(java.nio.file.Files.readString(p)).length
-        Seq.fill(n)(p.getFileName.toString)
-      }.toSeq
-    assert(hits === Seq("GraftSession.scala"))
-  }
+  // Harness decisions that live in exactly one file of src/main: the
+  // session builder (GraftSession) and the blocking await of the bounded
+  // streaming drains (StreamOps.drain). Row: (pattern, the one file
+  // allowed to contain it once, what the pattern does).
+  private val oneSite = Seq(
+    ("SparkSession.builder", "GraftSession.scala", "builds a SparkSession"),
+    ("awaitTermination(", "StreamOps.scala", "blocks on a streaming query"))
+
+  for ((pattern, file, what) <- oneSite)
+    test(s"src/main $what in exactly one place, ${file.stripSuffix(".scala")}") {
+      import scala.jdk.CollectionConverters._
+      val re = java.util.regex.Pattern.quote(pattern).r
+      val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator
+        .asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val n = re.findAllIn(java.nio.file.Files.readString(p)).length
+          Seq.fill(n)(p.getFileName.toString)
+        }.toSeq
+      assert(hits === Seq(file))
+    }
 }

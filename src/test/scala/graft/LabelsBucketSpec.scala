@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
-import graft.operators.{ArtifactStore, Curation, Dedup}
+import graft.operators.{ArtifactStore, Curation, Dedup, Profile, VectorIndex}
 
 /** The round-12 labels-store contract: hash-bucketed layout, O(touched)
   * mutation (only buckets holding a touched row are rewritten), the
@@ -79,6 +79,32 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
 
   test("absorb under the RELIABLE-checkpoint mode (round-16 verdict #7): same labels, intermediates survive executor loss by construction") {
     val root = freshRoot("brel")
+    // Files under the context's reliable checkpoint dir. The dir is set
+    // once per SparkContext (by the first reliable checkpoint, from
+    // spark.graft.mutation.checkpointDir), so each family's absorb is
+    // judged by the files it ADDS there; a localCheckpoint adds none.
+    def ckptFiles(): Set[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        Option(f.listFiles()).map(_.toSeq.flatMap(c =>
+          if (c.isDirectory) walk(c) else Seq(c))).getOrElse(Seq.empty)
+      spark.sparkContext.getCheckpointDir.toSeq
+        .flatMap(d => walk(new java.io.File(new java.net.URI(d).getPath)))
+        .map(_.getPath).toSet
+    }
+    def reliably(absorb: => Unit): Set[String] = {
+      spark.conf.set("spark.graft.mutation.reliableCheckpoint", "true")
+      spark.conf.set("spark.graft.mutation.checkpointDir",
+        s"$root/reliable-ckpt")
+      val before = ckptFiles()
+      try absorb finally {
+        spark.conf.unset("spark.graft.mutation.reliableCheckpoint")
+        spark.conf.unset("spark.graft.mutation.checkpointDir")
+      }
+      ckptFiles() -- before
+    }
+
+    // labels: equal to the full rebuild over corpus + batch, the
+    // family's exactness oracle (which the default-mode absorb meets)
     Dedup.buildCanonicalLabels(spreadCorpus, "doc_id", "text",
       s"$root/labels", shingleSize = 3, numHashes = 16, bands = 8,
       threshold = 0.5, numBuckets = 16)
@@ -86,32 +112,54 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
       shingleSize = 3, numHashes = 16, bands = 8)
     val batch = docs(20L -> blk("z", 20).replace("z6 ", "z6y "),
       90L -> blk("q", 15))
-    spark.conf.set("spark.graft.mutation.reliableCheckpoint", "true")
-    spark.conf.set("spark.graft.mutation.checkpointDir",
-      s"$root/reliable-ckpt")
-    try {
-      Dedup.absorbIntoLabels(batch, "doc_id", "text", s"$root/labels",
-        s"$root/idx", shingleSize = 3, numHashes = 16, bands = 8,
-        threshold = 0.5)
-    } finally {
-      spark.conf.unset("spark.graft.mutation.reliableCheckpoint")
-      spark.conf.unset("spark.graft.mutation.checkpointDir")
+    withClue("label absorb: ") {
+      reliably(Dedup.absorbIntoLabels(batch, "doc_id", "text",
+        s"$root/labels", s"$root/idx", shingleSize = 3, numHashes = 16,
+        bands = 8, threshold = 0.5)) should not be empty
     }
-    // the mode actually engaged: reliable checkpoint RDDs were written
-    // to the fault-tolerant dir (a localCheckpoint writes nothing here)
-    val ckptFiles = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        Option(f.listFiles()).map(_.toSeq.flatMap(c =>
-          if (c.isDirectory) walk(c) else Seq(c))).getOrElse(Seq.empty)
-      walk(new java.io.File(s"$root/reliable-ckpt"))
-    }
-    ckptFiles should not be empty
-    // results identical to the default-mode absorb: equal to the full
-    // rebuild over corpus + batch, the family's exactness oracle
     Dedup.buildCanonicalLabels(spreadCorpus.unionByName(batch), "doc_id",
       "text", s"$root/labelsFull", shingleSize = 3, numHashes = 16,
       bands = 8, threshold = 0.5)
     labelMap(s"$root/labels") shouldBe labelMap(s"$root/labelsFull")
+
+    // IVF and histogram: the same absorb on two copies of one base, one
+    // per mode — the reliable copy must equal the default-mode copy
+    def rows(path: String, cols: String*): Seq[String] =
+      spark.read.parquet(path).select(cols.map(col): _*).collect()
+        .map(_.toString).sorted.toSeq
+    import spark.implicits._
+    val base = Seq(1L -> Array(1.0f, 0.0f), 2L -> Array(0.0f, 1.0f),
+      3L -> Array(0.9f, 0.1f), 4L -> Array(0.1f, 0.9f))
+      .toDF("vec_id", "embedding")
+    val vecs = Seq(5L -> Array(0.8f, 0.2f), 6L -> Array(0.2f, 0.8f))
+      .toDF("vec_id", "embedding")
+    val spend = (1 to 60).map(i => (i % 3, i * 37L % 500L)).toDF("shard", "v")
+    val hist = spend.filter(col("shard") < 2)
+    val feed = spend.filter(col("shard") === 2)
+    for (mode <- Seq("default", "reliable")) {
+      VectorIndex.buildIvfIndex(base, "vec_id", "embedding",
+        s"$root/ivf-$mode", nlist = 2)
+      Profile.buildHistogramArtifact(hist, "shard", col("v"),
+        widthCents = 50L, s"$root/hist-$mode")
+    }
+    VectorIndex.absorbIntoIvfIndex(vecs, "vec_id", "embedding",
+      s"$root/ivf-default")
+    Profile.absorbIntoHistogram(feed, "shard", col("v"), s"$root/hist-default")
+    withClue("IVF absorb: ") {
+      reliably(VectorIndex.absorbIntoIvfIndex(vecs, "vec_id", "embedding",
+        s"$root/ivf-reliable")) should not be empty
+    }
+    withClue("histogram absorb: ") {
+      reliably(Profile.absorbIntoHistogram(feed, "shard", col("v"),
+        s"$root/hist-reliable")) should not be empty
+    }
+    rows(s"$root/ivf-reliable/vectors", "vec_id", "cell") shouldBe
+      rows(s"$root/ivf-default/vectors", "vec_id", "cell")
+    rows(s"$root/ivf-reliable/vectors", "vec_id").size shouldBe 6
+    rows(s"$root/hist-reliable/shards", "shard", "bucket", "cnt") shouldBe
+      rows(s"$root/hist-default/shards", "shard", "bucket", "cnt")
+    rows(s"$root/hist-reliable/absorbed", "shard") shouldBe
+      Seq("[0]", "[1]", "[2]")
   }
 
   test("out-of-contract re-ingest with NEW text is a benign skip in BOTH index substores (no mixed signatures)") {
