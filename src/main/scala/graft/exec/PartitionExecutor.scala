@@ -1,9 +1,7 @@
 package graft.exec
 
 import java.util.concurrent.{ConcurrentHashMap, Executors}
-import scala.collection.mutable
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.ExecutionContext
 
 import org.apache.spark.sql.Row
 
@@ -73,12 +71,15 @@ final class RateLimiter(ratePerSecond: Double) {
   *
   * Concurrency model (ref: src/orchestration/partition_executor.py:49-119,
   * docs/architecture.md:288-301): at most `maxConcurrentRequests` requests
-  * in flight per partition; the streaming window below is the bounded-queue
+  * in flight per partition; the [[RequestWindow]] is the bounded-queue
   * backpressure the reference documents but doesn't implement (quirk Q5) —
   * it pulls from the source iterator only while fewer than N requests are
-  * pending, yields completed bronze rows in submission order, and holds at
-  * most N rows in memory (vs the reference buffering the whole partition).
-  * No event loop: HttpClient.sendAsync is already non-blocking.
+  * pending, yields bronze rows in COMPLETION order, and holds at most N rows
+  * in memory (vs the reference buffering the whole partition). A retried or
+  * slow row never holds the window: its finished neighbours move on and
+  * their slots refill. Row order within a task is therefore not a contract;
+  * every consumer that needs an order sorts (every `e*` query orders its
+  * output). No event loop: HttpClient.sendAsync is already non-blocking.
   */
 object PartitionExecutor {
 
@@ -166,23 +167,24 @@ object PartitionExecutor {
         metadata = cfg.endpoint.vendor.map(v => Map("vendor" -> v)).getOrElse(Map.empty),
         requestTemplate = cfg.endpoint.requestTemplate)
 
-      def submit(row: Row): Future[Row] = {
+      val window = new RequestWindow[Row](cfg.execution.maxConcurrentRequests,
+        RequestWindow.deadline(cfg.transport.baseTimeoutSeconds,
+          cfg.middleware.collect { case r: RetryConfig => r }))
+
+      def submit(row: Row): Unit = {
         rateLimiter.foreach(_.acquire())
         val requestId = String.valueOf(row.getAs[Any]("request_id"))
         val rowMap: Map[String, String] = neededCols.iterator.map { c =>
           c -> String.valueOf(row.getAs[Any](c))
         }.toMap
-        pipeline(RequestExchange(context = baseContext, row = rowMap))
-          .map(ex => BronzeSchema.buildRow(requestId, ex, redactHeaderSet))
+        window.submit(requestId, pipeline(RequestExchange(context = baseContext, row = rowMap))
+          .map(ex => BronzeSchema.buildRow(requestId, ex, redactHeaderSet)))
       }
 
-      val concurrency = cfg.execution.maxConcurrentRequests
       new Iterator[Row] {
-        private val pending = mutable.Queue.empty[Future[Row]]
-        private def fill(): Unit =
-          while (pending.size < concurrency && rows.hasNext) pending.enqueue(submit(rows.next()))
-        def hasNext: Boolean = { fill(); pending.nonEmpty }
-        def next(): Row = { fill(); Await.result(pending.dequeue(), Duration.Inf) }
+        private def fill(): Unit = while (!window.isFull && rows.hasNext) submit(rows.next())
+        def hasNext: Boolean = { fill(); window.nonEmpty }
+        def next(): Row = { fill(); window.take() }
       }
   }
 }

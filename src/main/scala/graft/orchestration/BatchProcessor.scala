@@ -1,6 +1,7 @@
 package graft.orchestration
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -34,18 +35,31 @@ final class BatchHandler(cfg: PipelineConfig, rpcUrl: Option[String], sinkIdenti
   *
   * Per attempt (1..maxAttempts): remaining = source ⟕anti sink on request_id
   * (completed rows live in the sink — the sink IS the checkpoint); empty →
-  * done; assign `batch_id = pmod(hash(request_id), numBatches)` (pmod fixes
-  * quirk Q8's negative ids); repartition to spread the slow HTTP stage
-  * (docstring batch_processor.py:10-17: prevents AQE from collapsing the
-  * small batch into too few partitions); enumerate batch ids; filter + hand
-  * each batch to the handler. Failures are logged and re-raised only on the
-  * final attempt (batch_processor.py:87-96).
+  * done; repartition to spread the slow HTTP stage (docstring
+  * batch_processor.py:10-17: prevents AQE from collapsing the small batch
+  * into too few partitions); batch k = the rows whose
+  * `pmod(hash(request_id), numBatches)` is k (pmod fixes quirk Q8's negative
+  * ids); hand each batch to the handler. Failures are logged and re-raised
+  * only on the final attempt (batch_processor.py:87-96).
+  *
+  * The remaining set is materialized ONCE per attempt, by an eager
+  * `localCheckpoint` to disk, and every batch filters that checkpoint (the
+  * reference re-runs the anti-join per batch, batch_processor.py:56-57,76-81).
+  * It is not `persist`ed: its plan reads the sink, and every sink append
+  * makes Spark's CacheManager re-cache plans over the sink, so the next
+  * batch would re-run the anti-join and the repartition shuffle against a
+  * grown sink. A checkpoint is an RDD outside the CacheManager, so appends
+  * cannot invalidate it. Its blocks are not recomputable: a lost block
+  * fails the batch that reads it, and the next attempt's anti-join resumes
+  * from the sink. The blocks are released when the attempt ends.
   *
   * Scale notes (100 TB): the anti-join shuffles source+sink on request_id —
   * Catalyst/AQE picks broadcast when the remaining side shrinks below the
   * threshold, and only `request_id` is projected from the sink before the
   * join, so the shuffle carries one column, not 15. Batch sizing bounds the
   * rows in flight per Spark job (memory guardrail, docs/architecture.md:28-35).
+  * DISK_ONLY: the remaining set can be near-source-sized on attempt 1 and
+  * must not evict executor heap.
   */
 object BatchProcessor {
   import org.apache.spark.sql.Column
@@ -80,40 +94,36 @@ final class BatchProcessor(
     var attempt = 1
     var done = false
     while (attempt <= exec.maxAttempts && !done) {
-      // Stage the per-attempt remaining set. Without this, every batch's
-      // action re-executes the full source∖sink anti-join and repartition
-      // shuffle — numBatches × full rescans per attempt (the reference has
-      // the same flaw, batch_processor.py:56-57,76-81; at 100 TB it's a
-      // scale-killer). DISK_ONLY: the remaining set can be near-source-sized
-      // on attempt 1 and must not evict executor heap.
-      val rem = remaining().persist(StorageLevel.DISK_ONLY)
+      // the row count rides the checkpoint job instead of costing its own
+      val rows = Observation()
+      val staged = remaining().repartition(exec.numPartitions)
+        .observe(rows, count(lit(1)).as("n"))
+        .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
       try {
-        val total = rem.count() // materializes the cache: the ONE anti-join per attempt
+        val total = Option(rows.get("n")).fold(0L)(_.asInstanceOf[Long])
         if (total == 0L) done = true
         else {
           val numBatches = math.max(1L, (total + exec.batchSize - 1) / exec.batchSize)
-          val batched = rem
-            .withColumn("batch_id", BatchProcessor.batchId(col("request_id"), numBatches))
-            .repartition(exec.numPartitions)
-            .persist(StorageLevel.DISK_ONLY)
-          try {
-            // The reference enumerates ids with distinct().collect()
-            // (batch_processor.py:79-81) — a full extra scan of the remaining
-            // set per attempt. pmod already bounds ids to [0, numBatches), so
-            // iterate the range directly; a hash-empty batch is a no-op write.
-            val batchIds = 0L until numBatches
-            batchIds.foreach { id =>
-              try handler(batched.filter(col("batch_id") === id).drop("batch_id"))
-              catch {
-                case e: Exception if attempt < exec.maxAttempts =>
-                  System.err.println(s"[BatchProcessor] batch $id failed on attempt $attempt: ${e.getMessage}")
-                case e: Exception => throw e
-              }
+          // The reference enumerates ids with distinct().collect()
+          // (batch_processor.py:79-81) — a full extra scan of the remaining
+          // set per attempt. pmod already bounds ids to [0, numBatches), so
+          // iterate the range directly; a hash-empty batch is a no-op write.
+          (0L until numBatches).foreach { id =>
+            try handler(staged.filter(BatchProcessor.batchId(col("request_id"), numBatches) === id))
+            catch {
+              case e: Exception if attempt < exec.maxAttempts =>
+                System.err.println(s"[BatchProcessor] batch $id failed on attempt $attempt: ${e.getMessage}")
+              case e: Exception => throw e
             }
-          } finally batched.unpersist(blocking = false)
+          }
           attempt += 1
         }
-      } finally rem.unpersist(blocking = false)
+      } finally checkpointedRdd(staged).unpersist(blocking = false)
     }
   }
+
+  /** The RDD that holds a local checkpoint's blocks. `staged.rdd` would be a
+    * fresh wrapper over it, whose unpersist frees nothing. */
+  private def checkpointedRdd(staged: DataFrame) =
+    staged.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
 }

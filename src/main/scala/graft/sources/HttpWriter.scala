@@ -2,9 +2,7 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.collection.mutable
-import scala.concurrent.duration.Duration
-import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.ExecutionContext
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
@@ -13,15 +11,15 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 
 import graft.config.TransportConfig
-import graft.exec.WorkerResources
+import graft.exec.{RequestWindow, WorkerResources}
 import graft.model.TransportRequest
 import graft.util.Json
 
 /** Write-side of the `graft-http` source ("reverse ETL"): each input row
   * is POSTed to the configured endpoint as a JSON object keyed by the
-  * DataFrame's column names. The same bounded-concurrency streaming window
-  * as the read path keeps at most `concurrency` requests in flight per
-  * task, so cluster-wide load ≈ partitions × concurrency.
+  * DataFrame's column names. The same [[RequestWindow]] as the read path
+  * keeps at most `concurrency` requests in flight per task, so
+  * cluster-wide load ≈ partitions × concurrency.
   *
   * Delivery contract: AT-LEAST-ONCE. A failed/retried Spark task re-sends
   * its partition; make the remote endpoint idempotent (e.g. key on a row
@@ -77,11 +75,13 @@ private final class HttpDataWriter(url: String, method: String,
   private val fieldNames = schema.fieldNames
   private val sent = new AtomicLong(0)
   private val failed = new AtomicLong(0)
-  private val pending = mutable.Queue.empty[Future[Unit]]
+  private val window =
+    new RequestWindow[Unit](concurrency, RequestWindow.deadline(timeoutSeconds, Nil))
+  private var rowIndex = 0L
 
   override def write(record: InternalRow): Unit = {
-    // bounded window: block on the oldest in-flight request once full
-    if (pending.size >= concurrency) Await.result(pending.dequeue(), Duration.Inf)
+    // bounded window: once full, wait for whichever request finishes first
+    if (window.isFull) window.take()
     val row = toScala(record.copy()).asInstanceOf[Row]
     val values: Map[String, Any] = fieldNames.zipWithIndex.map { case (n, i) =>
       n -> (row.get(i) match {
@@ -106,17 +106,17 @@ private final class HttpDataWriter(url: String, method: String,
         if (resp.error.isDefined || resp.status.forall(_ >= 400)) failed.incrementAndGet()
         ()
       }
-    pending.enqueue(fut)
+    window.submit(s"write row $rowIndex", fut)
+    rowIndex += 1
   }
 
   override def commit(): WriterCommitMessage = {
-    pending.foreach(Await.result(_, Duration.Inf))
-    pending.clear()
+    while (window.nonEmpty) window.take()
     if (failOnErrors && failed.get() > 0)
       throw new java.io.IOException(
         s"graft-http write: ${failed.get()} of ${sent.get()} requests failed against $url")
     HttpWriteCommit(sent.get(), failed.get())
   }
-  override def abort(): Unit = { pending.clear() }
+  override def abort(): Unit = ()
   override def close(): Unit = ()
 }

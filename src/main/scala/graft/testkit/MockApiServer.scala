@@ -22,6 +22,11 @@ import scala.jdk.CollectionConverters._
   *  - /api/fail          → always 500
   *  - /api/notfound      → always 404
   *  - /api/badjson       → 200 with a non-JSON body
+  *  - /api/delay         → waits the milliseconds the id starts with
+  *                         ("400-7" waits 400 ms, "0-7" answers at once)
+  *  - /api/hang          → sends 200 headers, then never the promised body
+  *                         (until `stop()`): a response future that never
+  *                         completes, past any request timeout
   *  - /token             → OAuth2 token endpoint (static deterministic token)
   *  - /                  → warmup probe (200)
   *
@@ -35,6 +40,7 @@ final class MockApiServer {
   /** Bodies received by /api/echo_body, in arrival order (write-path assertions). */
   val receivedBodies = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   private val flakyCounts = new ConcurrentHashMap[String, AtomicInteger]()
+  private val hangRelease = new java.util.concurrent.CountDownLatch(1)
 
   private var server: HttpServer = _
   def port: Int = server.getAddress.getPort
@@ -102,6 +108,20 @@ final class MockApiServer {
       respond(x, 200, s"""{"content_type":"$ct","received":$body}""")
     })
 
+    server.createContext("/api/delay", tracked { x =>
+      val id = params(x).getOrElse("id", "")
+      Thread.sleep(id.takeWhile(_.isDigit).toLongOption.getOrElse(0L))
+      respond(x, 200, s"""{"id":"$id","status":"ok"}""")
+    })
+
+    server.createContext("/api/hang", tracked { x =>
+      x.getResponseHeaders.set("Content-Type", "application/json")
+      x.sendResponseHeaders(200, 64)
+      x.getResponseBody.flush()
+      hangRelease.await()
+      x.close()
+    })
+
     server.createContext("/api/fail", tracked(x => respond(x, 500, """{"error":"boom"}""")))
     server.createContext("/api/notfound", tracked(x => respond(x, 404, """{"error":"nope"}""")))
     server.createContext("/api/badjson", tracked(x => respond(x, 200, "this is not json", "text/plain")))
@@ -123,5 +143,8 @@ final class MockApiServer {
     Option(flakyCounts.get(id)).map(_.get()).getOrElse(0)
 
   def reset(): Unit = { maxInFlight.set(0); totalRequests.set(0); flakyCounts.clear() }
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    hangRelease.countDown()
+    if (server != null) server.stop(0)
+  }
 }

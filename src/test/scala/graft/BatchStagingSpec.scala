@@ -6,8 +6,8 @@ import graft.config.ExecutionConfig
 import graft.orchestration.BatchProcessor
 
 /** Proves the per-attempt staging in BatchProcessor.process: the source is
-  * computed ONCE per attempt (cache materialization), not once per batch.
-  * Without the DISK_ONLY persist, every batch's action re-executes the full
+  * computed ONCE per attempt (the remaining set's checkpoint), not once per
+  * batch. Without that staging, every batch's action re-executes the full
   * source∖sink anti-join — the reference's flaw
   * (ref: src/orchestration/batch_processor.py:56-57,76-81) that becomes a
   * scale-killer at 100 TB. The accumulator fires once per source row
@@ -34,8 +34,8 @@ class BatchStagingSpec extends SparkSpec with Matchers {
     bp.process { df => batches += 1; df.count(); () }
 
     batches shouldBe 4 // 400 rows / batchSize 100
-    // One full source computation for the whole attempt (the rem.count()
-    // that materializes the cache). Un-staged, this would be ~2000:
+    // One full source computation for the whole attempt (the eager
+    // checkpoint of the remaining set). Un-staged, this would be ~2000:
     // 400 (count) + 4 batches × 400 (anti-join recompute per action).
     acc.value.longValue shouldBe 400L
   }

@@ -1,0 +1,88 @@
+package graft
+
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.scalatest.BeforeAndAfterAll
+import org.scalatest.matchers.should.Matchers
+
+import graft.config._
+import graft.orchestration.{BatchHandler, BatchProcessor, PipelineOrchestrator, TableManager}
+import graft.testkit.MockApiServer
+
+/** Spark-job budget and cache hygiene for the batch ingest loop. The
+  * remaining set is materialized once per attempt and every batch filters
+  * it, so a batch is one job. A `persist`ed remaining set would be
+  * re-cached by every sink append, re-running the anti-join and the
+  * repartition shuffle on each batch.
+  */
+class IngestJobBudgetSpec extends SparkSpec with Matchers with BeforeAndAfterAll {
+  private val server = new MockApiServer
+  override def beforeAll(): Unit = server.start()
+  override def afterAll(): Unit = server.stop()
+
+  // 200 rows in batches of 50: 4 batches on attempt 1, an empty attempt 2
+  private def config(sink: String) = PipelineConfig(
+    endpoint = EndpointConfig("test", server.baseUrl, "/api/data"),
+    transport = TransportConfig(baseTimeoutSeconds = 10, warmupTimeoutSeconds = 5),
+    middleware = Seq(JsonBodyConfig),
+    tables = TablesConfig(None, SinkTableConfig(sink, "demo", mode = "overwrite"),
+      Seq(ColumnMapping("request_id", Some("id")))),
+    execution = ExecutionConfig(numPartitions = 4, batchSize = 50, maxAttempts = 3,
+      maxConcurrentRequests = 8))
+
+  private lazy val source = spark.read.parquet(s"$sfDir/orders.parquet").limit(200)
+    .select("o_orderkey", "o_custkey")
+
+  test("a 4-batch ingest runs one Spark job per batch plus a fixed count per attempt") {
+    // warm pass first (uncaptured): the first run pays one-time engine and
+    // schema set-up that is not the per-batch cost pinned here
+    PipelineOrchestrator.runPipeline(spark, config("budget_warm"), Some(source), Some("o_orderkey"))
+    val rec = new Probe.JobRecorder
+    spark.sparkContext.addSparkListener(rec)
+    try {
+      rec.capture = true
+      PipelineOrchestrator.runPipeline(spark, config("budget_ingest"), Some(source), Some("o_orderkey"))
+      rec.capture = false
+      // let trailing listener events drain before reading the recorder
+      Thread.sleep(500)
+      spark.table("demo.budget_ingest").count() shouldBe 200
+      val jobs = rec.jobs
+      jobs.groupBy(_._1).foreach { case (site, js) => info(s"${js.size} × $site") }
+      info(s"ingest ran ${jobs.size} Spark jobs")
+      // measured 2026-10-17 (4 cores): 12 = 4 batch writes + 2 attempts ×
+      // 4 (the checkpoint, its AQE stage jobs for the anti-join and the
+      // repartition). The pin allows one more job per attempt; a batch that
+      // re-runs the anti-join costs several.
+      val (batches, attempts, perAttempt) = (4, 2, 5)
+      jobs.size should be <= batches + attempts * perAttempt
+    } finally spark.sparkContext.removeSparkListener(rec)
+  }
+
+  test("each attempt's checkpoint is released and no plan over the sink is cached") {
+    val cfg = config("budget_cache")
+    val sink = cfg.tables.sink.identifier
+    val tables = new TableManager(spark)
+    tables.createTable(cfg.tables.sink)
+    val src = PipelineOrchestrator.prepareSource(cfg, source, "o_orderkey")
+    val processor = new BatchProcessor(spark, src, sink, cfg.execution)
+    // plans over the sink that the CacheManager would answer from memory
+    def cachedOverSink(): Int =
+      Seq(processor.remaining(), spark.table(sink)).map(_.queryExecution.withCachedData
+        .collect { case r: InMemoryRelation => r }.size).sum
+    val persisted0 = spark.sparkContext.getPersistentRDDs.size
+    val during = Seq.newBuilder[(Int, Int)]
+    val handler = new BatchHandler(cfg, None, sink, tables.format)
+    processor.process { df =>
+      during += ((spark.sparkContext.getPersistentRDDs.size, cachedOverSink()))
+      handler.process(df)
+    }
+    spark.table(sink).count() shouldBe 200
+    // while the batches run, the remaining set is one checkpointed RDD and
+    // nothing in the CacheManager, where sink appends would re-cache it
+    during.result() should have size 4
+    all(during.result()) shouldBe ((persisted0 + 1, 0))
+    // and the attempt releases it
+    spark.sparkContext.getPersistentRDDs.size shouldBe persisted0
+    cachedOverSink() shouldBe 0
+    spark.catalog.isCached(sink) shouldBe false
+  }
+}
