@@ -15,7 +15,9 @@ import graft.queries.EvalQueries
   *   runMain graft.Probe <mode> [args...]
   *
   *  - `jobs [absorb|drain|query:<name>]`: Spark jobs of one bench body,
-  *    one line per labelled site (count, seconds, site) plus a total.
+  *    one line per labelled site (count, job seconds, driver seconds
+  *    before the site's jobs, site) plus a total with the body's non-job
+  *    driver seconds.
   *  - `time <query>... [-nN]`: N back-to-back `count()` runs per query;
   *    separates one-time cost (planning, codegen compile, footer reads)
   *    from steady-state execution.
@@ -78,17 +80,18 @@ object Probe {
   }
 
   /** Records each Spark job that starts while `capture` is set, with its
-    * wall nanos, under the `g:<phase>` label `ArtifactStore.labeled` sets
-    * (callSite under foreachBatch always points at the streaming start()
-    * and cannot attribute operator-internal jobs), else its call site,
-    * else its result stage's name (e.g. "parquet at Dedup.scala:544"),
-    * which catches AQE stage-materialization jobs launched outside any
-    * labelled phase. Read `jobs` after the listener bus has drained.
+    * start and end (the scheduler's event times, epoch ms), under the
+    * `g:<phase>` label `ArtifactStore.labeled` sets (callSite under
+    * foreachBatch always points at the streaming start() and cannot
+    * attribute operator-internal jobs), else its call site, else its
+    * result stage's name (e.g. "parquet at Dedup.scala:544"), which
+    * catches AQE stage-materialization jobs launched outside any labelled
+    * phase. Read `jobs`/`spans` after the listener bus has drained.
     */
   final class JobRecorder extends SparkListener {
     @volatile var capture = false
     private val starts = new ConcurrentHashMap[Int, (String, Long)]()
-    private val done = new ConcurrentLinkedQueue[(String, Long)]()
+    private val done = new ConcurrentLinkedQueue[(String, Long, Long)]()
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (capture) {
@@ -98,17 +101,34 @@ object Probe {
           .orElse(p.flatMap(x => Option(x.getProperty("callSite.short"))))
           .orElse(e.stageInfos.lastOption.map(_.name))
           .getOrElse("?")
-        starts.put(e.jobId, (site, System.nanoTime())); ()
+        starts.put(e.jobId, (site, e.time)); ()
       }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = {
       val st = starts.remove(e.jobId)
-      if (st != null) { done.add((st._1, System.nanoTime() - st._2)); () }
+      if (st != null) { done.add((st._1, st._2, e.time)); () }
     }
 
-    def jobs: Seq[(String, Long)] = {
+    /** (site, start ms, end ms) per finished job, in start order. */
+    def spans: Seq[(String, Long, Long)] = {
       import scala.jdk.CollectionConverters._
-      done.asScala.toSeq
+      done.asScala.toSeq.sortBy(_._2)
+    }
+
+    /** (site, wall nanos) per finished job. */
+    def jobs: Seq[(String, Long)] =
+      spans.map { case (site, start, end) => (site, (end - start) * 1000000L) }
+
+    /** (site, ms) per finished job: the driver time before it, from the
+      * latest end among the jobs that started earlier (or `fromMs` for
+      * the first) to its start; 0 when it overlaps a running job. */
+    def driverGaps(fromMs: Long): Seq[(String, Long)] = {
+      var prevEnd = fromMs
+      spans.map { case (site, start, end) =>
+        val gap = math.max(0L, start - prevEnd)
+        prevEnd = math.max(prevEnd, end)
+        (site, gap)
+      }
     }
   }
 
@@ -140,14 +160,22 @@ object Probe {
       stage(); run()
       stage()
       rec.capture = true
+      val t0 = System.currentTimeMillis()
       val bodySec = seconds(run())
+      val t1 = System.currentTimeMillis()
       rec.capture = false
       Thread.sleep(500) // let trailing listener events drain
       val all = rec.jobs
+      val gapMs = rec.driverGaps(t0)
+      val gaps = gapMs.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sum / 1e3 }
+      println("jobs  job wall  driver before  site")
       all.groupBy(_._1).map { case (k, v) => (k, v.size, v.map(_._2).sum / 1e9) }
-        .toSeq.sortBy(-_._3)
-        .foreach { case (site, n, sec) => println(f"$n%4d  $sec%7.3f s  $site") }
-      println(f"""{"mode":"$mode","total_jobs":${all.size},"body_sec":$bodySec%.3f,"sf":"$sfDir"}""")
+        .toSeq.sortBy { case (k, _, sec) => -(sec + gaps(k)) }
+        .foreach { case (site, n, sec) => println(f"$n%4d  $sec%7.3f s  ${gaps(site)}%11.3f s  $site") }
+      val lastEnd = (t0 +: rec.spans.map(_._3)).max
+      val driverSec = (gapMs.map(_._2).sum + math.max(0L, t1 - lastEnd)) / 1e3
+      println(f"""{"mode":"$mode","total_jobs":${all.size},"body_sec":$bodySec%.3f,""" +
+        f""""driver_nonjob_sec":$driverSec%.3f,"sf":"$sfDir"}""")
     }
   }
 

@@ -1231,31 +1231,25 @@ object Dedup {
     * one root, swapped in atomically. The meta records the doc column's
     * type (so a store whose every bucket was later deleted still reads
     * as a TYPED empty frame) and the avg bucket bytes this geometry was
-    * sized for (`bucketTargetBytes = 0` measures it post-swap — the
-    * auto-rebalance hook's reference point). */
+    * sized for (`bucketTargetBytes = 0` measures the staged `b=` dirs
+    * before the swap — the auto-rebalance hook's reference point). */
   private def writeLabelsBucketed(spark: org.apache.spark.sql.SparkSession,
       labels: DataFrame, path: String, n: Int,
       bucketTargetBytes: Long = 0L): Unit = {
     import spark.implicits._
-    def meta(target: Long) =
-      Seq((n, labels.schema("doc").dataType.catalogString, n, target))
-        .toDF("num_buckets", "doc_type", "canon_buckets",
-          "bucket_target_bytes")
     ArtifactStore.writeBucketedStore(spark,
       Seq(
         (labels.withColumn("b", pmod(hash(col("doc")), lit(n))), "b"),
         (labels.withColumn("c",
           pmod(hash(col("canonical_id")), lit(n))), "c")),
-      path, meta(bucketTargetBytes))
-    if (bucketTargetBytes == 0L) {
-      val sizes = ArtifactStore.bucketDirBytes(spark, path, "b")
-      val measured = if (sizes.isEmpty) 0L else sizes.sum / n
-      if (measured > 0L) {
-        val m = meta(measured)
-        ArtifactStore.writeParquetStaged(spark, m, s"$path/meta")
-        ArtifactStore.seedMeta(spark, path, m.head())
-      }
-    }
+      path, { staging =>
+        val target =
+          if (bucketTargetBytes > 0L) bucketTargetBytes
+          else ArtifactStore.bucketDirBytes(spark, staging, "b").sum / n
+        Seq((n, labels.schema("doc").dataType.catalogString, n, target))
+          .toDF("num_buckets", "doc_type", "canon_buckets",
+            "bucket_target_bytes")
+      })
   }
 
   /** INCREMENTAL canonical-label maintenance — the piece that makes the

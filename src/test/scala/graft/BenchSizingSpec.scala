@@ -29,24 +29,38 @@ class BenchSizingSpec extends SparkSpec {
       GraftSession.ListThreshold.toString)
   }
 
+  /** One file name per match of `re` in a src/main Scala file. */
+  private def hitsInMain(re: scala.util.matching.Regex): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator
+      .asScala.filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val n = re.findAllIn(java.nio.file.Files.readString(p)).length
+        Seq.fill(n)(p.getFileName.toString)
+      }.toSeq
+  }
+
   // Harness decisions that live in exactly one file of src/main: the
-  // session builder (GraftSession) and the blocking await of the bounded
-  // streaming drains (StreamOps.drain). Row: (pattern, the one file
-  // allowed to contain it once, what the pattern does).
+  // session builder (GraftSession), the blocking await of the bounded
+  // streaming drains (StreamOps.drain) and the store's byte count
+  // (ArtifactStore.dirBytes). Row: (pattern, the one file allowed to
+  // contain it once, what the pattern does).
   private val oneSite = Seq(
     ("SparkSession.builder", "GraftSession.scala", "builds a SparkSession"),
-    ("awaitTermination(", "StreamOps.scala", "blocks on a streaming query"))
+    ("awaitTermination(", "StreamOps.scala", "blocks on a streaming query"),
+    (".getContentSummary(", "ArtifactStore.scala", "counts bytes under a path"))
 
   for ((pattern, file, what) <- oneSite)
     test(s"src/main $what in exactly one place, ${file.stripSuffix(".scala")}") {
-      import scala.jdk.CollectionConverters._
-      val re = java.util.regex.Pattern.quote(pattern).r
-      val hits = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).iterator
-        .asScala.filter(_.toString.endsWith(".scala"))
-        .flatMap { p =>
-          val n = re.findAllIn(java.nio.file.Files.readString(p)).length
-          Seq.fill(n)(p.getFileName.toString)
-        }.toSeq
-      assert(hits === Seq(file))
+      assert(hitsInMain(java.util.regex.Pattern.quote(pattern).r) === Seq(file))
     }
+
+  // Hadoop's located listings (`listLocatedStatus`, and `listFiles(path,
+  // recursive)` — java.io.File's listFiles takes at most a filter) build
+  // a LocatedFileStatus per file; on the local FS without libhadoop each
+  // one forks a shell for the file's permission and owner.
+  test("src/main builds no Hadoop located listing") {
+    val located = """listLocatedStatus\(|\.listFiles\((?:[^()]|\([^()]*\))*,""".r
+    assert(hitsInMain(located) === Seq.empty)
+  }
 }

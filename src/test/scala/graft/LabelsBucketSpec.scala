@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
 
+import scala.jdk.CollectionConverters._
+
 import graft.operators.{ArtifactStore, Curation, Dedup, Profile, VectorIndex}
 
 /** The round-12 labels-store contract: hash-bucketed layout, O(touched)
@@ -638,34 +640,80 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
     labelMap(s"$root/labels") shouldBe labelMap(s"$root/labelsFull2")
   }
 
-  test("bucketDirBytesSampledAvg strides the id range — heavy high-id buckets land in the sample (round-15 verdict)") {
-    val root = freshRoot("bstride")
-    // 64 live buckets: ids 0-31 hold 1-byte files, 32-63 hold 101-byte
-    // files — the old smallest-32-ids sample read avg = 1 and missed
-    // the heavy half entirely; the ⌈64/32⌉ = 2 stride samples the even
-    // ids: 16 light + 16 heavy
-    for (k <- 0 until 64) {
-      val dir = new java.io.File(s"$root/b=$k")
-      require(dir.mkdirs(), s"could not create $dir")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$root/b=$k/part-0"),
-        Array.fill[Byte](if (k < 32) 1 else 101)(0))
-    }
-    val (avg, live) = ArtifactStore.bucketDirBytesSampledAvg(
-      spark, root, "b", maxDirs = 32)
-    live shouldBe 64
-    avg shouldBe (16L * 1 + 16L * 101) / 32
-    // N <= maxDirs: every dir sampled, exact average
-    val (avgAll, liveAll) = ArtifactStore.bucketDirBytesSampledAvg(
-      spark, root, "b", maxDirs = 64)
-    liveAll shouldBe 64
-    avgAll shouldBe (32L * 1 + 32L * 101) / 64
+  /** Summed lengths of the files under `dir`, `.crc` checksums skipped
+    * — the byte figure every store measurement must report. */
+  private def nioBytes(dir: String): Long = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try files.iterator.asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p) &&
+        !p.getFileName.toString.endsWith(".crc"))
+      .map(p => java.nio.file.Files.size(p)).sum
+    finally files.close()
+  }
+
+  /** The located-listing sum store code used to compute. */
+  private def listFilesBytes(dir: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val it = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listFiles(p, true)
+    var total = 0L
+    while (it.hasNext) total += it.next().getLen
+    total
+  }
+
+  test("store byte figures equal the data files' lengths, .crc excluded, and the located-listing sum") {
+    import spark.implicits._
+    val root = freshRoot("bbytes")
+    val n = 4
+    val rows = (1L to 40L).map(i => (i, s"v$i" * (i.toInt % 7 + 1))).toDF("doc", "v")
+    ArtifactStore.writeBucketedStore(spark,
+      Seq((rows.withColumn("b", pmod(hash(col("doc")), lit(n))), "b")),
+      root, _ => Seq(n).toDF("num_buckets"))
+    val dirs = ArtifactStore.listBucketDirs(spark, root)
+    dirs should have size n
+    // Spark's writer left checksum files beside the parts: the figures
+    // below must skip them
+    val crcs = java.nio.file.Files.list(java.nio.file.Paths.get(s"$root/b=0"))
+    try crcs.iterator.asScala.exists(_.toString.endsWith(".crc")) shouldBe true
+    finally crcs.close()
+    val local = dirs.map(d => new java.net.URI(d).getPath)
+    ArtifactStore.bucketDirBytes(spark, root, "b") shouldBe local.map(nioBytes)
+    local.map(listFilesBytes) shouldBe local.map(nioBytes)
+    // one mutation stages one rewritten bucket plus its commit marker;
+    // the counter's delta is exactly those bytes
+    val touched = Seq(3L).toDF("doc").localCheckpoint()
+    val upserts = Seq((3L, "rewritten")).toDF("doc", "v").localCheckpoint()
+    val k = touched.select(pmod(hash(col("doc")), lit(n))).head().getInt(0)
+    val before = ArtifactStore.stagedBytesWritten.get()
+    val returned = ArtifactStore.mutateBuckets(spark, root, "doc", n,
+      touched, touched, upserts)
+    val delta = ArtifactStore.stagedBytesWritten.get() - before
+    val expected = nioBytes(s"$root/b=$k") +
+      s"b,$k,true".getBytes("UTF-8").length
+    delta shouldBe expected
+    returned shouldBe expected
+    listFilesBytes(s"$root/b=$k") shouldBe nioBytes(s"$root/b=$k")
+  }
+
+  test("a bucketed labels build writes one meta whose target is the live b= bytes / N") {
+    val root = freshRoot("btarget")
+    Dedup.buildCanonicalLabels(spreadCorpus, "doc_id", "text",
+      s"$root/labels", shingleSize = 3, numHashes = 16, bands = 8,
+      threshold = 0.5, numBuckets = 4)
+    // read the meta back from disk, not from the cache the build seeded
+    ArtifactStore.invalidateMeta(spark, s"$root/labels")
+    val target = ArtifactStore.cachedMeta(spark, s"$root/labels").get
+      .getAs[Long]("bucket_target_bytes")
+    target should be > 0L
+    target shouldBe ArtifactStore.bucketDirBytes(spark, s"$root/labels", "b").sum / 4
   }
 
   test("bucketDirBytesSampledAvgN probes strided dirs directly — no root listing, same stride semantics (round 17)") {
     val root = freshRoot("bstriden")
-    // same layout as the listing twin's test: ids 0-31 light (1 byte),
-    // 32-63 heavy (101 bytes); stride ⌈64/32⌉ = 2 probes the even ids
+    // 64 live buckets: ids 0-31 hold 1-byte files, 32-63 hold 101-byte
+    // files — a smallest-32-ids sample would read avg = 1 and miss the
+    // heavy half entirely; stride ⌈64/32⌉ = 2 probes the even ids:
+    // 16 light + 16 heavy
     for (k <- 0 until 64) {
       val dir = new java.io.File(s"$root/b=$k")
       require(dir.mkdirs(), s"could not create $dir")
