@@ -1,8 +1,9 @@
 package graft.exec
 
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, Executors, Semaphore}
 import scala.concurrent.ExecutionContext
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Row
 
 import graft.auth.AuthStrategy
@@ -36,6 +37,22 @@ object WorkerResources {
           throw new UnsupportedOperationException(s"transport type '$other' is not implemented")
       }
     })
+
+  private val leasePools = new ConcurrentHashMap[String, Semaphore]()
+
+  /** Hold one of `permits` leases of the pool `run` until the current task
+    * completes (no-op outside a task). The batch path lets two batch jobs
+    * run at once; with one lease per task and `num_partitions` leases per
+    * run, the tasks making requests in this JVM stay at `num_partitions`
+    * however many task slots the session has. */
+  def holdLease(run: String, permits: Int): Unit = Option(TaskContext.get()).foreach { task =>
+    val pool = leasePools.computeIfAbsent(run, _ => new Semaphore(permits))
+    pool.acquire()
+    task.addTaskCompletionListener[Unit](_ => pool.release())
+  }
+
+  /** Forget the lease pool `run` once none of its tasks can be running. */
+  def dropLeases(run: String): Unit = { leasePools.remove(run); () }
 
   /** Shared continuation pool for request futures (I/O is NIO-driven inside
     * HttpClient; this pool only runs middleware continuations).
@@ -95,9 +112,12 @@ object PartitionExecutor {
 
   /** Build the serializable partition function. Captures only config case
     * classes + the rpc_url string (serialization discipline, ref:
-    * strategy.py:179).
+    * strategy.py:179). With a `leasePool`, each task holds one of that
+    * pool's `num_partitions` leases from its first request until it
+    * completes ([[WorkerResources.holdLease]]).
     */
-  def makeFn(cfg: PipelineConfig, rpcUrl: Option[String]): Iterator[Row] => Iterator[Row] = {
+  def makeFn(cfg: PipelineConfig, rpcUrl: Option[String],
+      leasePool: Option[String] = None): Iterator[Row] => Iterator[Row] = {
     rows =>
       implicit val ec: ExecutionContext = WorkerResources.executionContext
       val engine = WorkerResources.engine(cfg.transport, cfg.endpoint.baseUrl)
@@ -171,7 +191,12 @@ object PartitionExecutor {
         RequestWindow.deadline(cfg.transport.baseTimeoutSeconds,
           cfg.middleware.collect { case r: RetryConfig => r }))
 
+      var leased = false
       def submit(row: Row): Unit = {
+        if (!leased) {
+          leased = true
+          leasePool.foreach(WorkerResources.holdLease(_, cfg.execution.numPartitions))
+        }
         rateLimiter.foreach(_.acquire())
         val requestId = String.valueOf(row.getAs[Any]("request_id"))
         val rowMap: Map[String, String] = neededCols.iterator.map { c =>

@@ -1,12 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.matchers.should.Matchers
 
 import graft.config._
 import graft.testkit.MockApiServer
-import graft.orchestration.PipelineOrchestrator
+import graft.orchestration.{BatchHandler, BatchProcessor, PipelineOrchestrator, TableManager}
 
 /** End-to-end pipeline tests against real local-mode Spark + an in-JVM mock
   * API — the SURVEY.md §7.3 minimum slice plus the FIXTURES.md §5 scenarios.
@@ -181,6 +185,98 @@ class PipelineE2ESpec extends SparkSpec with Matchers with BeforeAndAfterAll {
     spark.table("demo.e2e_conc").count() shouldBe 120
     // 2 partitions × 3 in-flight (+1 slack for warmup overlap)
     server.maxInFlight.get() should be <= 7
+  }
+
+  private def batchThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala.map(_.getName).filter(_ == "graft-batch").toSet
+
+  test("two batches in flight stay within num_partitions × max_concurrent_requests") {
+    server.reset()
+    // 2 partitions on the width-4 session, 4 batches of ~16 rows at 100 ms
+    // a request: batch k+1's two tasks find free slots while batch k's
+    // run. Without the per-run lease pool, four tasks would request at once.
+    val cfg = baseConfig("/api/delay", "e2e_window_cap", middleware = Seq(JsonBodyConfig),
+      exec = ExecutionConfig(numPartitions = 2, batchSize = 16, maxAttempts = 1,
+        maxConcurrentRequests = 4))
+    val src = spark.range(64).selectExpr("concat('100-', id) AS sid")
+    PipelineOrchestrator.runPipeline(spark, cfg, Some(src), Some("sid"))
+    spark.table("demo.e2e_window_cap").count() shouldBe 64
+    info(s"mock API in-flight high-water: ${server.maxInFlight.get()}")
+    server.maxInFlight.get() should be <= 2 * 4
+    batchThreads() shouldBe empty
+  }
+
+  test("the handler is called one batch at a time, on the caller's thread") {
+    // perfbench's traced path wraps each call in a span of a tracer that is
+    // not thread-safe; the two-batch overlap must stay inside the handler
+    val cfg = baseConfig("/api/data", "e2e_handler_calls",
+      exec = ExecutionConfig(numPartitions = 4, batchSize = 50, maxAttempts = 1,
+        maxConcurrentRequests = 8))
+    val sink = cfg.tables.sink.identifier
+    val tables = new TableManager(spark)
+    tables.createTable(cfg.tables.sink)
+    val src = PipelineOrchestrator.prepareSource(cfg, ordersSource(200), "o_orderkey")
+    val handler = new BatchHandler(cfg, None, sink, tables.format)
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val active = new AtomicInteger
+    val overlap = new AtomicInteger
+    var calls = 0
+    new BatchProcessor(spark, src, sink, cfg.execution).process { df =>
+      overlap.accumulateAndGet(active.incrementAndGet(), math.max)
+      threads.add(Thread.currentThread())
+      calls += 1
+      try handler.process(df) finally active.decrementAndGet()
+    }
+    calls shouldBe 4
+    threads.asScala.toSet shouldBe Set(Thread.currentThread())
+    overlap.get() shouldBe 1
+    // settled before process returned
+    spark.table(sink).count() shouldBe 200
+  }
+
+  test("null source ids are counted, reported once and never sent") {
+    import spark.implicits._
+    val src = Seq(Some("a1"), Some("a2"), None).toDF("sid")
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    try PipelineOrchestrator.runPipeline(spark, baseConfig("/api/data", "e2e_null_ids"),
+      Some(src), Some("sid"))
+    finally System.setErr(stderr)
+    // a null id never matches the anti-join: sent, it would land as a
+    // "null" row on every attempt (max_attempts = 3) and every later run
+    spark.table("demo.e2e_null_ids").select("request_id").as[String].collect().sorted shouldBe
+      Array("a1", "a2")
+    err.toString.linesIterator.filter(_.startsWith("[Pipeline] WARN")).toSeq shouldBe
+      Seq("[Pipeline] WARN 1 source rows have a null id and are not sent")
+  }
+
+  test("a crash between a batch's staged write and its publish: no staged row shows, a re-run heals") {
+    val exec = ExecutionConfig(numPartitions = 2, batchSize = 25, maxAttempts = 1,
+      maxConcurrentRequests = 4)
+    val cfg = baseConfig("/api/data", "e2e_crash", exec = exec)
+    val resume = cfg.copy(tables = cfg.tables.copy(sink = cfg.tables.sink.copy(mode = "append")))
+    val src = ordersSource(100)
+    BatchHandler.testCrashPoint = 1
+    val err =
+      try intercept[IllegalStateException](
+        PipelineOrchestrator.runPipeline(spark, cfg, Some(src), Some("o_orderkey")))
+      finally BatchHandler.testCrashPoint = 0
+    err.getMessage should include("testCrashPoint=1")
+    batchThreads() shouldBe empty
+    val location = new java.io.File(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier("e2e_crash", Some("demo"))).location)
+    val staging = new java.io.File(location, BatchHandler.stagingRoot)
+    // the first two of the four batches ran and staged their rows; the
+    // table shows none of them
+    spark.read.parquet(s"${staging.getPath}/*").count() should be > 0L
+    spark.catalog.refreshTable("demo.e2e_crash")
+    spark.table("demo.e2e_crash").count() shouldBe 0
+    PipelineOrchestrator.runPipeline(spark, resume, Some(src), Some("o_orderkey"))
+    val ids = spark.table("demo.e2e_crash").select("request_id").collect().map(_.getString(0))
+    ids.length shouldBe 100
+    ids.distinct.length shouldBe 100
+    staging.exists() shouldBe false
   }
 
   test("column mapping transform applies upper (quirk Q3 implemented)") {
