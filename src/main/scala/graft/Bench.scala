@@ -66,8 +66,8 @@ object Bench {
     "x61_incremental_neardup", "x62_bloom_incremental_dedup",
     "x63_cluster_balanced_sample",
     "x76_bm25", "x77_pagerank", "x78_zorder_layout", "x80_resample",
-    // (x84's r6→r7 doubling is attributed: the ScaleProbe mad_outliers
-    // row/domain pair both measure ~flat (0.03/0.05), so the operator is
+    // (x84's r6→r7 doubling is attributed: its row and domain growth
+    // exponents measured ~flat (0.03/0.05), so the operator is
     // overhead-bound at sf0.1 and its absolute time tracks machine state,
     // not data shape — read it against the calibration object.)
     "x82_lm_surprise", "x84_mad_outliers", "x88_curation_funnel",
@@ -123,8 +123,8 @@ object Bench {
     // x158b already times that micro-batch machinery; x169/x170 share
     // x164's probe shape over a 500-row corpus where per-run build
     // dominates; x171/x172 are per-run-build + count-scan reports. The
-    // round's perf evidence is the absorbbytes_labels ScaleProbe pair,
-    // not a wall-clock headliner.)
+    // write-path claim (an absorb rewrites only the buckets it touches) is
+    // a count LabelsBucketSpec asserts, not a wall-clock headliner.)
     "x164_ivf_index_lifecycle", "x120b_bpe_encode_from_vocab",
     "x119_bpe_merges", "x120_bpe_encode", "x121_jsonl_stream_quarantine",
     "x122_decayed_engagement", "x123_csv_quarantine", "x124_mixture_replay",
@@ -152,12 +152,13 @@ object Bench {
     // drains are covered by x112/x113/x14.)
     // (x150b is x150's per-length hash-join twin — the pair difference
     // measures the join-algebra trade at a config-sized rule list; the
-    // rules-x-m ScaleProbe pair measures it at robots scale.)
+    // robots-scale figures are history in README "Scale design".)
     "x149_stream_daily_actives", "x150_url_policy",
     "x150b_url_policy_bylength",
     // (x150c the shuffle twin is excluded at the config-sized rule
     // list — it would time shuffle overhead the broadcast shapes don't
-    // pay; the rules-×m ScaleProbe is where its algebra wins.)
+    // pay; its algebra wins only at robots-scale rule lists, see README
+    // "Scale design".)
     // (b41 is the one-pass scan+partial-agg class, b43 the
     // global-scalar-subquery decorrelation class; b42/b44 are excluded
     // as instances of the already-benched multi-join and join-agg

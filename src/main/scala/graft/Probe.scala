@@ -31,7 +31,6 @@ import graft.queries.EvalQueries
   *  - `smoke`: `SparkEntry.entry` on the user-path session (cwd
   *    warehouse); run it twice to exercise the cross-JVM leftover-location
   *    guard (TableManager.deleteLeftoverLocation).
-  *  - `scale [maxMultiplier] [opPrefix,...]`: ScaleProbe's growth sweeps.
   *
   * `jobs`, `time`, `copy`, `plan` and `show` read the data dir from
   * SPARK_GRAFT_SF_DIR (e.g. the sf0.01 testdata dir; job counts are
@@ -41,8 +40,7 @@ object Probe {
   type QueryFn = (SparkSession, String) => DataFrame
 
   private val usage = "usage: Probe jobs [absorb|drain|query:<q>] | time <q>... [-nN] | " +
-    "copy [n] | plan <q,...> [mode] [outDir [suffix]] | show <q> | smoke | " +
-    "scale [maxMult] [opPrefix,...]"
+    "copy [n] | plan <q,...> [mode] [outDir [suffix]] | show <q> | smoke"
 
   def main(args: Array[String]): Unit = {
     val rest = args.toSeq.drop(1)
@@ -55,7 +53,6 @@ object Probe {
       case Some("plan")  => plan(rest, sfDir)
       case Some("show")  => show(rest, sfDir)
       case Some("smoke") => smoke
-      case Some("scale") => ScaleProbe.run(_, rest.toArray)
       case _ => fail(usage)
     }
     val spark = GraftSession(userPath = args.head == "smoke")

@@ -3,7 +3,7 @@ package graft.auth
 import java.io.{BufferedInputStream, IOException, InputStream}
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ExecutorService, Executors, ScheduledExecutorService, TimeUnit}
+import java.util.concurrent.{CountDownLatch, ExecutorService, Executors, ScheduledExecutorService, TimeUnit}
 import scala.concurrent.ExecutionContext
 
 import graft.model.Token
@@ -18,6 +18,9 @@ import graft.util.Json
 final class DriverTokenManager(manager: TokenManager)(implicit ec: ExecutionContext) {
   import DriverTokenManager.TickSeconds
   private var exec: Option[ScheduledExecutorService] = None
+  // opened by the first tick that leaves a token cached; a failed fetch
+  // leaves it shut and the next tick retries
+  private val ready = new CountDownLatch(1)
 
   def start(): Unit = synchronized {
     if (exec.isEmpty) {
@@ -27,6 +30,7 @@ final class DriverTokenManager(manager: TokenManager)(implicit ec: ExecutionCont
       s.scheduleWithFixedDelay(() => {
         try scala.concurrent.Await.ready(manager.getToken(), scala.concurrent.duration.Duration(30, "s"))
         catch { case _: Exception => () }
+        if (manager.currentToken.nonEmpty) ready.countDown()
       }, 0L, TickSeconds, TimeUnit.SECONDS)
       exec = Some(s)
     }
@@ -35,12 +39,9 @@ final class DriverTokenManager(manager: TokenManager)(implicit ec: ExecutionCont
   def stop(): Unit = synchronized { exec.foreach(_.shutdownNow()); exec = None }
 
   /** Block until the first token is available (readiness). */
-  def awaitReady(timeoutSeconds: Int = 30): Unit = {
-    val deadline = System.nanoTime() + timeoutSeconds * 1000000000L
-    while (manager.currentToken.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-    if (manager.currentToken.isEmpty)
+  def awaitReady(timeoutSeconds: Int = 30): Unit =
+    if (!ready.await(timeoutSeconds.toLong, TimeUnit.SECONDS))
       throw new RuntimeException(s"Driver token manager not ready after ${timeoutSeconds}s")
-  }
 }
 
 object DriverTokenManager {

@@ -2293,7 +2293,7 @@ object Dedup {
     val grams = base.select(col("doc"), explode(expr(
         s"array_distinct(transform(sequence(1, greatest(length(key) - ${gramSize - 1}, 1)), " +
           s"i -> substring(key, i, $gramSize)))")).as("g"))
-    // Frequency pruning (the q-gram flood guard the ScaleProbe surfaced):
+    // Frequency pruning (the q-gram flood guard; BudgetDedupSpec pins it):
     // a gram shared by more than `maxBucket` records generates bucket²
     // candidate pairs while carrying almost no blocking signal — the
     // low-entropy stop-grams of the key domain. Dropping them bounds the

@@ -4425,8 +4425,9 @@ object ExtensionQueries {
       |  FROM f)""".stripMargin
 
   /** The x88 corpus→training-set funnel body, parameterized by the
-    * staging strategy so ScaleProbe can A/B the two shapes on identical
-    * data (`funnel_staged` / `funnel_unstaged`).
+    * staging strategy. `stageCheckpoints = false` is the fully
+    * declarative twin whose plan `PlanSpec` inspects: the staged default
+    * hides its subtrees behind localCheckpoint scans.
     *
     * `stageCheckpoints = true` eagerly `localCheckpoint()`s each stage's
     * slim id-set: the report is a union of 6 stage rows and Spark does NOT
@@ -4442,11 +4443,11 @@ object ExtensionQueries {
     * the feature-set shuffle across the LSH bucket/verify paths, every
     * stage runs with no barrier, and nothing is driver-materialized.
     *
-    * MEASURED (round-8 ScaleProbe A/B, `funnel_staged` vs
-    * `funnel_unstaged`, 1×–16× on the sf0.1 corpus, two independent
-    * sweeps): the shapes CROSS between 8× and 16×. Unstaged wins up to 8×
-    * (4.3–6.7 s vs 5.4–8.3 s — the barriers cost more than the replayed
-    * prefix while the shared exchanges are memory-resident), staged wins
+    * MEASURED (round 8, both shapes in one session, 1×–16× on the sf0.1
+    * corpus, two independent sweeps): the shapes CROSS between 8× and
+    * 16×. Unstaged wins up to 8× (4.3–6.7 s vs 5.4–8.3 s — the barriers
+    * cost more than the replayed prefix while the shared exchanges are
+    * memory-resident), staged wins
     * at 16× in both sweeps (10.3/11.1 s vs 14.1/13.2 s) and carries the
     * flatter exponent (0.23 vs 0.39–0.43) — re-running the corpus-wide
     * dedup prefix per branch is the term that grows, exactly the

@@ -117,16 +117,6 @@ object StreamOps {
     df.sparkSession.table(name)
   }
 
-  /** Append-mode `drain` into a fresh parquet dir with a fresh
-    * checkpoint: (the appended rows, the finished query). */
-  private def drainToFreshDir(df: DataFrame,
-      prefix: String): (DataFrame, StreamingQuery) = {
-    val outDir = java.nio.file.Files.createTempDirectory(s"$prefix-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory(s"$prefix-ckpt").toString
-    val q = drain(df, prefix, "append", ToParquet(outDir, ckpt))
-    (df.sparkSession.read.parquet(outDir), q)
-  }
-
   /** The artifact-drain shape: one micro-batch per file under
     * `streamDir`, each handed to `body`, resuming from `checkpointDir`. */
   private def fileDrain(spark: SparkSession, streamDir: String,
@@ -274,7 +264,9 @@ object StreamOps {
     */
   private def runAppendDrain(agg: DataFrame,
       prefix: String): (DataFrame, Long) = {
-    val (out, q) = drainToFreshDir(agg, prefix)
+    val outDir = java.nio.file.Files.createTempDirectory(s"$prefix-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory(s"$prefix-ckpt").toString
+    val q = drain(agg, prefix, "append", ToParquet(outDir, ckpt))
     // sum over the LAST progress entry that actually reports state
     // operators: a chained-stateful drain (x149's dedup + agg) reports one
     // entry per operator, and the eviction claim is about their combined
@@ -285,7 +277,7 @@ object StreamOps {
     val stateRows = q.recentProgress.toSeq.reverse
       .find(_.stateOperators.nonEmpty)
       .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    (out, stateRows)
+    (agg.sparkSession.read.parquet(outDir), stateRows)
   }
 
   /** APPEND-MODE twin of `windowedEventAgg` — the shape that runs forever
@@ -1414,27 +1406,6 @@ object StreamOps {
       .selectExpr("key.value AS user_id", "list_element._1 AS t_us",
         "list_element._2 AS cents")
 
-  /** Sessionizer drain over a pre-staged time-ordered day dir (one
-    * micro-batch per day file, so timers fire as the watermark crosses
-    * each day), returning (closed sessions emitted, events left in the
-    * ListState buffer after the drain — read through the SAME statestore
-    * path `sessionBufferFromState` uses). The buffer bound is events of
-    * not-yet-provably-closed sessions — rate × (gap + watermark lag)
-    * worth of tail — independent of stream LENGTH; the probe curve
-    * certifies it flat as the staged days grow ×m.
-    */
-  private[graft] def sessionStateProbe(spark: SparkSession,
-      streamDir: String, gap: java.time.Duration): (Long, Long) =
-    withRocksDbStore(spark) {
-      val root = java.nio.file.Files.createTempDirectory("graft-probe-sess")
-      val outDir = s"$root/out"; val ckpt = s"$root/ckpt"
-      drain(sessionTimerStream(
-          openStream(spark, streamDir, oneFilePerBatch = true)(), gap),
-        "graft-probe-sess", "append", ToParquet(outDir, ckpt))
-      (spark.read.parquet(outDir).count(),
-        sessionBufferFromState(spark, ckpt).count())
-    }
-
   /** Progress row of the streaming MG monitor (one per shard per batch —
     * the observable the sink keeps; the real product is the state).
     */
@@ -1624,107 +1595,6 @@ object StreamOps {
       ()
     }
     dir.toString
-  }
-
-  // ---- ScaleProbe hooks (streaming-state exponents) ----------------------
-  //
-  // The batch operators' scaling claims are probe-measured; these hooks do
-  // the same for the STATEFUL STREAMING claims ("state bounded by
-  // watermark/horizon/shards, whatever the stream length or vocabulary
-  // does"). Each drains a TIME-ORDERED chunked stream dir with
-  // maxFilesPerTrigger=1 — one micro-batch per chunk, so the watermark
-  // advances BETWEEN batches and eviction is actually observable (a
-  // single-batch drain never evicts mid-batch and would report state =
-  // everything, refuting nothing) — and returns the MAX state-row count
-  // across all batches (the honest bound: a mid-stream spike shows; the
-  // final batch alone could understate).
-
-  /** Peak state of a finished drain: the max over batches of the state
-    * rows summed across its stateful operators (-1 if none reported). */
-  private def peakStateRows(q: StreamingQuery): Long = {
-    val s = q.recentProgress.toSeq.filter(_.stateOperators.nonEmpty)
-      .map(_.stateOperators.map(_.numRowsTotal).sum)
-    if (s.isEmpty) -1L else s.max
-  }
-
-  /** Windowed append-mode aggregate (the x112/x113/x89/x53 drain shape)
-    * over a pre-staged time-ordered chunk dir: per-(day, key) counts into
-    * a parquet sink. Returns (appended rows, max state rows) — the state
-    * bound is open windows × keys, independent of stream LENGTH.
-    */
-  private[graft] def hotKeyWindowStateProbe(spark: SparkSession,
-      streamDir: String, keyCol: String): (Long, Long) = {
-    val agg = openStream(spark, streamDir, oneFilePerBatch = true)()
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day").as("w"), col(keyCol).as("key"))
-      .agg(count(lit(1)).as("cnt"))
-    val (out, q) = drainToFreshDir(agg, "graft-probe-hotw")
-    (out.count(), peakStateRows(q))
-  }
-
-  /** Chained-stateful daily-actives (the x149 machinery: event-time
-    * dedup + windowed count in one query) over a pre-staged time-ordered
-    * chunk dir. Returns (appended rows, max over batches of the SUM of
-    * both operators' state rows) — the combined bound is open-horizon
-    * dedup keys + open windows, independent of stream LENGTH.
-    */
-  private[graft] def dauChainedStateProbe(spark: SparkSession,
-      streamDir: String): (Long, Long) = {
-    val agg = openStream(spark, streamDir, oneFilePerBatch = true)()
-      .withWatermark("ts", "1 day")
-      .select(col("ts"), col("user_id"),
-        window(col("ts"), "1 day").getField("start").as("day"))
-      .dropDuplicatesWithinWatermark("user_id", "day")
-      .groupBy(window(col("ts"), "1 day").as("w"))
-      .agg(count(lit(1)).as("actives"))
-    val (out, q) = drainToFreshDir(agg, "graft-probe-dau")
-    (out.count(), peakStateRows(q))
-  }
-
-  /** Stream-stream left-semi join (the x34/x133/x136/x137 machinery) over
-    * a pre-staged time-ordered chunk dir, fixed `horizon`. Returns
-    * (output rows, max state rows) — the state bound is rate × horizon
-    * (+ watermark lag), independent of stream LENGTH.
-    */
-  private[graft] def joinHorizonStateProbe(spark: SparkSession,
-      streamDir: String, horizon: String): (Long, Long) = {
-    val src = openStream(spark, streamDir, oneFilePerBatch = true)
-    val views = src().filter(col("event_type") === "view")
-      .select(col("user_id").as("v_user"), col("ts").as("v_ts"),
-        col("event_id").as("v_event"))
-      .withWatermark("v_ts", "1 minute")
-    val purchases = src().filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("event_id").as("p_event"))
-      .withWatermark("p_ts", "1 minute")
-    val joined = views.join(purchases,
-        col("p_user") === col("v_user") &&
-          col("p_ts") >= col("v_ts") &&
-          col("p_ts") <= col("v_ts") + expr(s"INTERVAL $horizon"),
-        "left_semi")
-      .select(col("v_user"), col("v_event"))
-    val qn = s"probe_ssj_${System.nanoTime()}"
-    val q = drain(joined, qn, "append", ToMemory)
-    val out = spark.table(qn).count()
-    spark.catalog.dropTempView(qn)
-    (out, peakStateRows(q))
-  }
-
-  /** Streaming Misra–Gries drain (the x138 machinery) over `docs`, in
-    * `chunks` micro-batches. Returns the statestore row count after the
-    * drain — it must stay ≤ shards × (k−1) whatever the vocabulary does
-    * (MG counters only merge, so the final count is also the max), read
-    * through the same statestore-source path the snapshot consumer uses.
-    */
-  private[graft] def mgStateProbe(spark: SparkSession, docs: DataFrame,
-      k: Int, shards: Int, chunks: Int): Long = {
-    val streamDir = stageStreamDirChunksDf(spark, docs, "graft-probe-mg", chunks)
-    val root = java.nio.file.Files.createTempDirectory("graft-probe-mg-ckpt")
-    heavyHittersMgDrain(spark, streamDir, s"$root/ckpt", s"$root/ticks",
-      k, shards)
-    spark.read.format("statestore")
-      .option("stateVarName", "mg")
-      .load(s"$root/ckpt").count()
   }
 
   /** Run `body` with the RocksDB state store provider set (state v2

@@ -140,6 +140,39 @@ class AuthSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
     an[Exception] should be thrownBy Await.result(worker.getToken(), 30.seconds)
   }
 
+  test("bootstrapper becomes ready after a failed first fetch: the next refresh tick retries") {
+    val p = new TokenProvider {
+      val calls = new AtomicInteger(0)
+      def getToken()(implicit ec: ExecutionContext): Future[Token] =
+        if (calls.incrementAndGet() == 1) Future.failed(new java.io.IOException("idp down"))
+        else Future.successful(Token("tok", Some(Instant.now().plusSeconds(300))))
+      def telemetry: Map[String, Any] = Map.empty
+    }
+    val boot = new RpcBootstrapper(p, refreshMargin = 60, driverHost = "127.0.0.1")
+    val rpcUrl = boot.start()
+    try {
+      p.calls.get() shouldBe 2
+      Await.result(new RpcTokenProvider(rpcUrl).getToken(), 10.seconds)
+        .tokenValue shouldBe "tok"
+    } finally boot.stop()
+  }
+
+  test("awaitReady fails with the named error when no fetch ever succeeds") {
+    val p = new TokenProvider {
+      def getToken()(implicit ec: ExecutionContext): Future[Token] =
+        Future.failed(new java.io.IOException("idp down"))
+      def telemetry: Map[String, Any] = Map.empty
+    }
+    val refresher = new DriverTokenManager(new TokenManager(p, 60))
+    refresher.start()
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[RuntimeException](refresher.awaitReady(timeoutSeconds = 1))
+      e.getMessage shouldBe "Driver token manager not ready after 1s"
+      (System.nanoTime() - t0) / 1e9 should be >= 0.9
+    } finally refresher.stop()
+  }
+
   test("token RPC answers a sequential fetch without a delayed-ACK stall") {
     val boot = new RpcBootstrapper(new CountingProvider("tok"), refreshMargin = 60,
       driverHost = "127.0.0.1")

@@ -43,14 +43,18 @@ class BenchSizingSpec extends SparkSpec {
   // Harness decisions that live in exactly one file of src/main: the
   // session builder (GraftSession), the blocking await of the bounded
   // streaming drains (StreamOps.drain), the store's byte count
-  // (ArtifactStore.dirBytes) and the driver thread that carries the
-  // caller's Spark thread-locals (DriverThread.start). Row: (pattern, the
-  // one file allowed to contain it once, what the pattern does).
+  // (ArtifactStore.dirBytes), the driver thread that carries the
+  // caller's Spark thread-locals (DriverThread.start), the one listener
+  // that records jobs (Probe.JobRecorder) and the one read of a finished
+  // drain's progress (StreamOps.runAppendDrain). Row: (pattern, the one
+  // file allowed to contain it once, what the pattern does).
   private val oneSite = Seq(
     ("SparkSession.builder", "GraftSession.scala", "builds a SparkSession"),
     ("awaitTermination(", "StreamOps.scala", "blocks on a streaming query"),
     (".getContentSummary(", "ArtifactStore.scala", "counts bytes under a path"),
-    ("withThreadLocalCaptured(", "DriverThread.scala", "submits Spark work from a driver thread"))
+    ("withThreadLocalCaptured(", "DriverThread.scala", "submits Spark work from a driver thread"),
+    ("addSparkListener(", "Probe.scala", "attaches a Spark listener"),
+    ("recentProgress", "StreamOps.scala", "reads a streaming query's progress"))
 
   for ((pattern, file, what) <- oneSite)
     test(s"src/main $what in exactly one place, ${file.stripSuffix(".scala")}") {

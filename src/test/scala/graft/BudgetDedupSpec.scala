@@ -117,6 +117,48 @@ class BudgetDedupSpec extends SparkSpec with Matchers {
       Set((1L, 2L))
   }
 
+  // m × 10 near-duplicate docs that share `header` and differ only in a
+  // 3-digit tail (every feature they share floods past maxBucket = 5), plus
+  // m genuine pairs (ids 1000 + 2j, 1001 + 2j) on words no other doc uses.
+  private def floodCorpus(m: Int, header: String,
+      pair: Int => (String, String)) = {
+    import spark.implicits._
+    val flood = (1 to 10 * m).map(i => (i.toLong, f"$header $i%03d"))
+    val pairs = (0 until m).flatMap { j =>
+      val (a, b) = pair(j)
+      Seq((1000L + 2 * j, a), (1001L + 2 * j, b))
+    }
+    (flood ++ pairs).toDF("doc_id", "text")
+  }
+
+  private val nato = Seq("alpha bravo charlie delta echo foxtrot",
+    "golf hotel india juliet kilo lima", "mike november oscar papa quebec romeo",
+    "sierra tango uniform victor whiskey xray")
+  private val licence =
+    "standard license header terms apply to this document revision two zero"
+  private type GuardedOp = (org.apache.spark.sql.DataFrame, Long) => org.apache.spark.sql.DataFrame
+
+  for ((name, header, pair, op) <- Seq[(String, String, Int => (String, String), GuardedOp)](
+      ("shingleContainment", licence, j => (nato(j), nato(j)), (df, cap) =>
+        Dedup.shingleContainment(df, "doc_id", "text", shingleSize = 3,
+          thresholdPct = 50, maxBucket = cap)),
+      ("ngramJaccard", licence, j => (nato(j), nato(j)), (df, cap) =>
+        Dedup.ngramJaccard(df, "doc_id", "text", n = 12, threshold = 0.5,
+          maxBucket = cap)),
+      ("editDistanceDedup", "standard title",
+        j => (nato(j).take(16), nato(j).take(15) + "z"), (df, cap) =>
+        Dedup.editDistanceDedup(df, "doc_id", "text", maxDist = 3,
+          gramSize = 6, maxBucket = cap))))
+    test(s"$name flood guard: guarded pairs grow with the genuine pairs (1× to 4×), unguarded ones with the flood squared") {
+      def pairs(m: Int, cap: Long) = op(floodCorpus(m, header, pair), cap)
+        .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
+      def genuine(m: Int) = (0 until m).map(j => (1000L + 2 * j, 1001L + 2 * j)).toSet
+      pairs(1, 5L) shouldBe genuine(1)
+      pairs(4, 5L) shouldBe genuine(4)
+      // the flood is real: without the guard all C(40, 2) near-dups pair
+      pairs(4, Long.MaxValue).size shouldBe 40 * 39 / 2 + 4
+    }
+
   test("batchByLength: per-shard length sort, exact padding accounting") {
     import spark.implicits._
     // one shard (numShards=1): lengths 1,1,2,2,3,3 in batches of 2 ->

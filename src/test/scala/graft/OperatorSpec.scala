@@ -745,6 +745,42 @@ class OperatorSpec extends SparkSpec with Matchers {
     bad.getMessage should include("nlist")
   }
 
+  test("IVF probe reads only its nprobe cells: rows-read A/B against the same store flattened") {
+    import spark.implicits._
+    import graft.operators.VectorIndex
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select("vec_id", "embedding")
+    val root = java.nio.file.Files.createTempDirectory("graft-ivfcells").toString
+    val (cells, flat) = (s"$root/cells", s"$root/flat")
+    VectorIndex.buildIvfIndex(emb, "vec_id", "embedding", cells, nlist = 8)
+    // the control: a copy of the same store with no cell=<k> dirs, which
+    // routes the probe down the flat-store full scan
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(cells),
+      new java.io.File(flat))
+    val vectors = spark.read.parquet(s"$flat/vectors").localCheckpoint()
+    graft.operators.ArtifactStore.deletePath(spark, s"$flat/vectors")
+    vectors.write.parquet(s"$flat/vectors")
+    // one query held on the driver, so neither run reads it from a file
+    val q = Seq((-1L, emb.filter(col("vec_id") === 7L).head()
+        .getAs[scala.collection.Seq[Float]]("embedding").toArray))
+      .toDF("vec_id", "embedding")
+    def probe(idx: String) = org.apache.spark.sql.graft.InputBytesMeter
+      .measureIO(spark.sparkContext) {
+        VectorIndex.probeIvfIndex(q, idx, "vec_id", "embedding", k = 5,
+          nprobe = 2).orderBy("rank").collect().map(_.getLong(2)).toSeq
+      }
+    val (prunedTop, _, prunedRows) = probe(cells)
+    val (flatTop, _, flatRows) = probe(flat)
+    prunedTop shouldBe flatTop
+    prunedTop.head shouldBe 7L
+    info(s"rows read: $prunedRows cell-pruned, $flatRows flat")
+    flatRows should be >= 500L // the flat probe scans every stored vector
+    // 2 of 8 cells hold about a quarter of the vectors; a probe that scans
+    // every cell of the partitioned store reads as much as the flat one
+    assert(prunedRows * 2 < flatRows,
+      s"cell-pruned probe read $prunedRows rows, flat store read $flatRows")
+  }
+
   test("IVF ids sidecar: content-independent absorb skip, id-pruned retract scoping, lifecycle consistency") {
     import spark.implicits._
     import graft.operators.VectorIndex
