@@ -200,8 +200,9 @@ private[graft] object ArtifactStore {
   }
 
   /** The artifact's single-row `meta` store, read once per (JVM,
-    * qualified path); `None` caches "this root predates the meta
-    * store". Roots mutated outside the artifact APIs (a raw file copy
+    * qualified path); `None` caches "no meta store here" (the artifact
+    * families read it through `layoutMeta`, which fails loud on that).
+    * Roots mutated outside the artifact APIs (a raw file copy
     * over an existing root) are on the caller — `invalidateMeta` is the
     * escape hatch, and it covers BOTH caches: the substore SCHEMA
     * cache shares the meta's lifecycle, and its stale entry is the
@@ -218,6 +219,21 @@ private[graft] object ArtifactStore {
         metaReads.incrementAndGet()
         Some(spark.read.parquet(s"$root/meta").head())
       })
+
+  /** The meta row of a root its family reads and mutates through ONE
+    * layout: every field of `fields` must be recorded. A root with no
+    * meta, or a meta written before one of the fields existed, throws
+    * [[StoreLayoutException]] naming the root, the missing field and
+    * `build`, the call that writes the current layout — an old store
+    * fails loudly instead of silently taking a full scan. */
+  def layoutMeta(spark: SparkSession, root: String, build: String,
+      fields: String*): Row = {
+    val row = cachedMeta(spark, root)
+      .getOrElse(throw new StoreLayoutException(root, "meta", build))
+    fields.find(f => !row.schema.fieldNames.contains(f))
+      .foreach(f => throw new StoreLayoutException(root, f, build))
+    row
+  }
 
   /** Keyed repartition with a PINNED partition count, for use directly
     * before a partitionBy write (round 16). The keyless
@@ -266,17 +282,6 @@ private[graft] object ArtifactStore {
         .partitionBy(partitionCols: _*).parquet(staging.toString)
     stagedBytesWritten.addAndGet(dirBytes(fs, staging))
     swapRootStaged(fs, path)
-  }
-
-  /** Whether `dir` holds `<colName>=<value>` partition dirs — the layout
-    * probe consumers use to pick the pruned read path (stores written
-    * before a substore was partition-laid-out read flat forever). */
-  def hasPartitionDirs(spark: SparkSession, dir: String,
-      colName: String): Boolean = {
-    val fs = fileSystem(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith(colName + "="))
   }
 
   private def fileSystem(spark: SparkSession,
@@ -400,29 +405,18 @@ private[graft] object ArtifactStore {
   def appendMissing(spark: SparkSession, root: String, sub: String,
       keyCol: String, batchKeys: DataFrame, rows: DataFrame,
       partitionCols: Seq[String] = Nil,
-      presentSource: Option[DataFrame] = None,
       presentKeys: Option[DataFrame] = None,
       presentKeysCount: Option[Long] = None): Unit = {
     // present-check source: by default the whole substore (key column
-    // only), which is a corpus-sized read PER ABSORB — the readbytes
-    // probe measured it at exponent 0.67 across a ×16 corpus. Callers
-    // whose substore is partitioned by a DETERMINISTIC function of the
-    // row content (features f = pmod(hash(doc)), buckets h =
-    // pmod(hash(band, sig)), vectors cell = frozen-codebook argmax)
-    // pass the store pre-filtered to the batch's own partitions: any
-    // previously-committed row for a batch key lives in exactly those
-    // dirs, so the pruned check cannot miss a present key. A pruned
-    // check on CONTENT-derived partitions is sound for crash-retry
-    // replay (same content → same partitions) but not against an
-    // out-of-contract re-ingest of a committed key with NEW content —
-    // callers with an id-keyed sidecar pass `presentKeys` (the already-
-    // materialized present key set from a content-INDEPENDENT read)
-    // instead, which closes that hole (round-13 advisory).
+    // only), which is a corpus-sized read PER APPEND. The partitioned
+    // artifact stores (LSH features/buckets, IVF vectors/ids) pass
+    // `presentKeys` instead — the already-materialized present key set
+    // from a pruned, content-INDEPENDENT read of their id-keyed
+    // partitions (round-13 advisory).
     lazy val present = presentKeys.getOrElse {
       labeled(spark, s"append_present_$sub") {
-        val store = presentSource.getOrElse(
-          readParquetCached(spark, s"$root/$sub", Seq(s"$root/$sub")))
-        store.select(keyCol)
+        readParquetCached(spark, s"$root/$sub", Seq(s"$root/$sub"))
+          .select(keyCol)
           .join(broadcast(batchKeys), Seq(keyCol), "left_semi")
           .distinct().transform(eagerCheckpoint)
       }
@@ -462,7 +456,8 @@ private[graft] object ArtifactStore {
     fresh.write.mode("append").parquet(s"$root/tombstones")
   }
 
-  /** Fold the tombstone set into `subs` physically — one corpus-sized
+  /** Fold the tombstone set into `subs` (each a substore and the column
+    * its dirs partition on) physically — one corpus-sized
     * rewrite amortizing any number of retractions, after which readers
     * stop paying the anti-join and retracted keys may be re-ingested.
     * Idempotent and crash-safe: each store swaps independently (a
@@ -470,13 +465,12 @@ private[graft] object ArtifactStore {
     * is deleted LAST), and a retry completes whatever a crash left
     * undone.
     */
-  def compact(spark: SparkSession, root: String, subs: Seq[String],
-      keyCol: String, partitionCols: Map[String, Seq[String]] = Map.empty)
-      : Unit = {
+  def compact(spark: SparkSession, root: String, keyCol: String,
+      subs: Seq[(String, String)]): Unit = {
     if (hasTombstones(spark, root)) {
-      subs.foreach { sub =>
+      subs.foreach { case (sub, partitionCol) =>
         writeParquetStaged(spark, readStore(spark, root, sub, keyCol),
-          s"$root/$sub", partitionCols.getOrElse(sub, Nil))
+          s"$root/$sub", Seq(partitionCol))
       }
       deletePath(spark, s"$root/tombstones")
     }
@@ -575,8 +569,7 @@ private[graft] object ArtifactStore {
   case class BucketGeom(prefix: String, bucketCol: String,
       numBuckets: Int, bucketKeys: DataFrame)
 
-  /** Full write of a bucketed store (build / rebalance / out-of-place
-    * copy): each geometry's `<prefix>=<k>` partition dirs, then the
+  /** Full write of a bucketed store (build / rebalance): each geometry's `<prefix>=<k>` partition dirs, then the
     * meta beside them, all inside `<path>.__staging`, then one root
     * swap. Each `parts` entry is (frame CARRYING its partition column,
     * that column's name); the frames repartition on the bucket column
@@ -1160,3 +1153,12 @@ private[graft] object ArtifactStore {
     }
   }
 }
+
+/** A store root whose meta is missing (`field` = "meta") or predates its
+  * family's current layout: the artifact families read and mutate one
+  * layout each, so the store must be rebuilt with `build`. */
+final class StoreLayoutException(val root: String, val field: String,
+    val build: String) extends IllegalStateException(
+  if (field == "meta") s"artifact store at $root has no meta — rebuild it with $build"
+  else s"artifact store at $root has a meta without `$field`: it predates " +
+    s"the current layout — rebuild it with $build")

@@ -651,13 +651,7 @@ object Dedup {
   def rebalanceLshIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, numBucketParts: Int = 0): Unit = {
     ArtifactStore.repairStore(spark, path)
-    val meta = ArtifactStore.cachedMeta(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"rebalanceLshIndex: no meta store at $path"))
-    require(lshBucketParts(spark, path).isDefined &&
-      lshFeatureParts(spark, path).isDefined,
-      s"rebalanceLshIndex: $path predates the partitioned layout — " +
-        "rebuild it instead")
+    val meta = lshMeta(spark, path)
     val bands = meta.getAs[Int]("bands")
     // live (tombstone-folded) substores; reads stay valid through the
     // staging writes because the live root is untouched until the swap
@@ -703,24 +697,13 @@ object Dedup {
     * part count. */
   private def lshFeatPartOf(m: Int) = pmod(hash(col("doc")), lit(m))
 
-  /** The index's bucket-part count — `Some(m)` on stores partitioned by
-    * band-sig hash (builds since round 13); `None` on earlier flat
-    * stores, which keep the full-scan probe path. */
-  private def lshBucketParts(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[Int] =
-    ArtifactStore.cachedMeta(spark, indexPath).flatMap(r =>
-      if (r.schema.fieldNames.contains("bucket_parts"))
-        Some(r.getAs[Int]("bucket_parts"))
-      else None)
-
-  /** The index's feature-part count (doc-hash partitioning of the
-    * features substore) — absent on earlier flat stores. */
-  private def lshFeatureParts(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Option[Int] =
-    ArtifactStore.cachedMeta(spark, indexPath).flatMap(r =>
-      if (r.schema.fieldNames.contains("feature_parts"))
-        Some(r.getAs[Int]("feature_parts"))
-      else None)
+  /** The index's meta row, checked against its one layout: buckets in
+    * `h=` dirs and features in `f=` dirs, their part counts
+    * (`bucket_parts`, `feature_parts`) beside the build parameters. */
+  private def lshMeta(spark: org.apache.spark.sql.SparkSession,
+      indexPath: String): org.apache.spark.sql.Row =
+    ArtifactStore.layoutMeta(spark, indexPath, "Dedup.buildLshIndex",
+      "shingle_size", "num_hashes", "bands", "bucket_parts", "feature_parts")
 
   /** The stored buckets RESTRICTED to the partitions a probe batch's
     * own band-sigs occupy: the batch's distinct h set is collected
@@ -732,34 +715,28 @@ object Dedup {
     */
   private def storedBucketsForProbe(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      bBuckets: DataFrame): DataFrame =
-    lshBucketParts(spark, indexPath) match {
-      case Some(m) =>
-        val hs = bBuckets.select(lshPartOf(m).as("h")).distinct()
-          .collect().map(_.getInt(0)).toIndexedSeq
-        ArtifactStore.tombstoneFiltered(spark, indexPath, "doc",
-          ArtifactStore.readParquetCached(spark, s"$indexPath/buckets",
-              Seq(s"$indexPath/buckets"))
-            .filter(col("h").isin(hs: _*)))
-      case None => indexStore(spark, indexPath, "buckets")
-    }
+      bBuckets: DataFrame): DataFrame = {
+    val m = lshMeta(spark, indexPath).getAs[Int]("bucket_parts")
+    val hs = bBuckets.select(lshPartOf(m).as("h")).distinct()
+      .collect().map(_.getInt(0)).toIndexedSeq
+    ArtifactStore.tombstoneFiltered(spark, indexPath, "doc",
+      ArtifactStore.readParquetCached(spark, s"$indexPath/buckets",
+          Seq(s"$indexPath/buckets"))
+        .filter(col("h").isin(hs: _*)))
+  }
 
-  /** The stored features RESTRICTED to the given doc-hash partitions
-    * (`None` ids = the full tombstone-filtered store — flat-layout
-    * fallback). An empty id set reads as the typed empty frame. */
+  /** The stored features RESTRICTED to the given doc-hash partitions;
+    * an empty id set reads as the typed empty frame. */
   private def storedFeaturesForDocs(
       spark: org.apache.spark.sql.SparkSession, indexPath: String,
-      fIds: Option[Seq[Int]]): DataFrame =
-    fIds match {
-      case Some(ids) =>
-        val base = ArtifactStore.readParquetCached(spark,
-          s"$indexPath/features", Seq(s"$indexPath/features"))
-        val pruned =
-          if (ids.isEmpty) base.limit(0)
-          else base.filter(col("f").isin(ids.toIndexedSeq: _*))
-        ArtifactStore.tombstoneFiltered(spark, indexPath, "doc", pruned)
-      case None => indexStore(spark, indexPath, "features")
-    }
+      fIds: Seq[Int]): DataFrame = {
+    val base = ArtifactStore.readParquetCached(spark,
+      s"$indexPath/features", Seq(s"$indexPath/features"))
+    val pruned =
+      if (fIds.isEmpty) base.limit(0)
+      else base.filter(col("f").isin(fIds.toIndexedSeq: _*))
+    ArtifactStore.tombstoneFiltered(spark, indexPath, "doc", pruned)
+  }
 
   /** Checkpoint with any number of collect_set bucket metrics riding
     * the one action — the multi-set sibling of
@@ -802,16 +779,13 @@ object Dedup {
       labelBucketsN: Option[Int] = None)
       : (DataFrame, Option[Seq[Int]]) = {
     val storedB = storedBucketsForProbe(spark, indexPath, bBuckets)
-    val sets =
-      lshFeatureParts(spark, indexPath).map(mf =>
-        "fbk" -> pmod(hash(col("doc_b")), lit(mf))).toSeq ++
+    val mf = lshMeta(spark, indexPath).getAs[Int]("feature_parts")
+    val sets = ("fbk" -> pmod(hash(col("doc_b")), lit(mf))) +:
       labelBucketsN.map(n =>
         "lbk" -> pmod(hash(col("doc_b")), lit(n))).toSeq
     val (cand, _, bks) = checkpointWithBucketSets(
       crossSideCandidates(bBuckets, storedB), "lsh_probe_cand", sets)
-    val iFeats = storedFeaturesForDocs(spark, indexPath,
-      if (lshFeatureParts(spark, indexPath).isDefined) bks.get("fbk")
-      else None)
+    val iFeats = storedFeaturesForDocs(spark, indexPath, bks("fbk"))
     (verifyCrossJaccard(cand, bFeats, iFeats, threshold),
       bks.get("lbk"))
   }
@@ -826,24 +800,21 @@ object Dedup {
       indexPath: String): Unit = ArtifactStore.invalidateMeta(spark, indexPath)
 
   /** Validate a caller's MinHash parameters against the `meta` store a
-    * `buildLshIndex` write left beside the index. Indexes from before
-    * the meta store (no `meta` dir) skip the check — the contract is
-    * then the caller's to uphold, as it always was. The stored
-    * parameters are read ONCE per (JVM, path) and served from the
-    * `ArtifactStore` meta cache after that.
+    * `buildLshIndex` write left beside the index. The stored parameters
+    * are read ONCE per (JVM, path) and served from the `ArtifactStore`
+    * meta cache after that.
     */
   private def checkIndexParams(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, shingleSize: Int, numHashes: Int,
       bands: Int): Unit = {
-    ArtifactStore.cachedMeta(spark, indexPath).foreach { r =>
-      val (ss, nh, bb) = (r.getAs[Int]("shingle_size"),
-        r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"))
-      require(ss == shingleSize && nh == numHashes && bb == bands,
-        s"LSH index at $indexPath was built with shingleSize=$ss, " +
-          s"numHashes=$nh, bands=$bb but the probe asked for " +
-          s"$shingleSize/$numHashes/$bands — mismatched signatures never " +
-          "collide, so every probe would silently read as novel")
-    }
+    val r = lshMeta(spark, indexPath)
+    val (ss, nh, bb) = (r.getAs[Int]("shingle_size"),
+      r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"))
+    require(ss == shingleSize && nh == numHashes && bb == bands,
+      s"LSH index at $indexPath was built with shingleSize=$ss, " +
+        s"numHashes=$nh, bands=$bb but the probe asked for " +
+        s"$shingleSize/$numHashes/$bands — mismatched signatures never " +
+        "collide, so every probe would silently read as novel")
   }
 
   /** Probe a fresh batch against a persisted LSH index (`buildLshIndex`).
@@ -895,17 +866,11 @@ object Dedup {
     * stores physically when they grow.
     */
   private def indexStore(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, which: String): DataFrame =
+      indexPath: String, which: String): DataFrame = {
+    lshMeta(spark, indexPath)
     ArtifactStore.readStore(spark, indexPath, which, "doc")
+  }
 
-  /** Hint broadcast only below a row bound — the graceful-degradation
-    * wrapper for sets that are *typically* takedown-sized but unbounded
-    * when an upstream contract is broken. Caller must pass a
-    * localCheckpointed frame: the guard count is then a block scan, and
-    * the frame is not recomputed by its consumers. Above the limit the
-    * plain frame is returned (AQE still broadcasts when the actual
-    * bytes are small — only the unconditional driver-side hint is
-    * dropped). */
   /** localCheckpoint + row count in ONE action: the broadcast guards
     * below need the checkpointed sets' counts, and a separate count()
     * job per guarded set is exactly the per-batch overhead a
@@ -926,30 +891,13 @@ object Dedup {
     * one checkpoint action (round-13): the pruned point-readers need
     * pmod(hash(key), n) of the frame they are about to look up, and a
     * separate distinct-collect per lookup is exactly the per-batch job
-    * overhead the Observation trick exists to avoid. `buckets = None`
-    * when the store isn't bucketed (nBuckets None) — callers fall back
-    * to full reads. */
+    * overhead the Observation trick exists to avoid. */
   private def checkpointWithCountAndBuckets(df: DataFrame, tag: String,
-      keyCol: String, nBuckets: Option[Int])
-      : (DataFrame, Long, Option[Seq[Int]]) =
-    nBuckets match {
-      case None =>
-        val (ck, n) = checkpointWithCount(df, tag)
-        (ck, n, None)
-      case Some(nb) => ArtifactStore.labeled(df.sparkSession, tag) {
-        val obs = org.apache.spark.sql.Observation(
-          tag + "_" + java.util.UUID.randomUUID().toString.take(8))
-        val ck = df.observe(obs, count(lit(1)).as("n"),
-          collect_set(pmod(hash(col(keyCol)), lit(nb))).as("bk"))
-          .transform(ArtifactStore.eagerCheckpoint)
-        val n = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        val bk = Option(obs.get("bk"))
-          .map(_.asInstanceOf[scala.collection.Seq[Any]]
-            .map(_.asInstanceOf[Int]).toSeq)
-          .getOrElse(Seq.empty)
-        (ck, n, Some(bk))
-      }
-    }
+      keyCol: String, nBuckets: Int): (DataFrame, Long, Seq[Int]) = {
+    val (ck, n, sets) = checkpointWithBucketSets(df, tag,
+      Seq("bk" -> pmod(hash(col(keyCol)), lit(nBuckets))))
+    (ck, n, sets("bk"))
+  }
 
   /** Distinct id set of a batch, checkpointed with its count AND its
     * label-bucket ids in ONE observed job — the drain's replay guard
@@ -959,11 +907,10 @@ object Dedup {
     * `batchIdsPre` contract of [[absorbIntoLabelsNoRead]]). */
   private[graft] def batchIdsForLabels(
       spark: org.apache.spark.sql.SparkSession, labelsPath: String,
-      keys: DataFrame, keyCol: String)
-      : (DataFrame, Long, Option[Seq[Int]]) =
+      keys: DataFrame, keyCol: String): (DataFrame, Long, Seq[Int]) =
     checkpointWithCountAndBuckets(
       keys.select(col(keyCol).as("doc")).distinct(), "drain_ids", "doc",
-      labelsNumBuckets(spark, labelsPath))
+      labelsMeta(spark, labelsPath).getAs[Int]("num_buckets"))
 
   /** Hint broadcast only below a row bound — graceful degradation for
     * sets that are *typically* takedown-sized but unbounded when an
@@ -1049,9 +996,9 @@ object Dedup {
     * so a bucket is ~100 MB AND N well exceeds the typical maintenance
     * batch's distinct-doc count — bytes written per mutation are
     * min(|touched|, N) × bucketBytes, flat in the corpus when both
-    * hold (probe-measured: `absorb_labels_bytes`). Flat single-dir
-    * stores written by earlier generations stay readable and mutable
-    * (full-swap fallback).
+    * hold (probe-measured: `absorb_labels_bytes`). This is the store's
+    * only layout: a root whose meta lacks any of its fields fails every
+    * read and mutation with a `StoreLayoutException` — rebuild it here.
     */
   def buildCanonicalLabels(docs: DataFrame, idCol: String, textCol: String,
       path: String, shingleSize: Int = 3, numHashes: Int = 16,
@@ -1069,21 +1016,17 @@ object Dedup {
     writeLabelsBucketed(spark, labels, path, n, bucketTargetBytes)
   }
 
-  /** Read a canonical-labels store: bucketed roots (num_buckets meta —
-    * the `buildCanonicalLabels` layout) via the explicit bucket-dir
-    * list, pre-bucketing flat roots via a plain read. Every labels
-    * consumer goes through here. A store whose every row was retracted
-    * has NO bucket dirs (deleted-bucket mutations) — it reads as an
-    * empty frame typed from the meta's recorded doc type, so a total
-    * takedown followed by a fresh absorb is a legal lifecycle. */
+  /** Read a canonical-labels store (the `buildCanonicalLabels` layout)
+    * via the explicit `b=` bucket-dir list. Every labels consumer goes
+    * through here. A store whose every row was retracted has NO bucket
+    * dirs (deleted-bucket mutations) — it reads as an empty frame typed
+    * from the meta's recorded doc type, so a total takedown followed by
+    * a fresh absorb is a legal lifecycle. */
   def readLabels(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    labelsNumBuckets(spark, path) match {
-      case Some(_) =>
-        readLabelDirs(spark, path,
-          ArtifactStore.listBucketDirs(spark, path))
-      case None => spark.read.parquet(path)
-    }
+      path: String): DataFrame = {
+    labelsMeta(spark, path)
+    readLabelDirs(spark, path, ArtifactStore.listBucketDirs(spark, path))
+  }
 
   /** Read an explicit bucket-dir subset of a labels store; an empty
     * list reads as the TYPED empty frame (the doc type is in the meta),
@@ -1097,13 +1040,7 @@ object Dedup {
       ArtifactStore.readParquetCached(spark, path, dirs, "#leaf")
         .select("doc", "canonical_id", "is_keeper")
     else {
-      val docType = ArtifactStore.cachedMeta(spark, path)
-        .filter(_.schema.fieldNames.contains("doc_type"))
-        .map(_.getAs[String]("doc_type"))
-        .getOrElse(throw new IllegalStateException(
-          s"readLabels: bucketed store at $path has no bucket dirs " +
-            "and its meta predates the doc_type field — crashed " +
-            "mutation? run ArtifactStore.repairStore"))
+      val docType = labelsMeta(spark, path).getAs[String]("doc_type")
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -1133,38 +1070,33 @@ object Dedup {
     * given doc keys occupy — O(touched buckets) bytes instead of the
     * corpus. The returned frame is a SUPERSET restricted to those
     * buckets (hash co-residents included); callers apply their joins
-    * exactly as they would against the full table. Flat stores fall
-    * back to the full read. `bucketIds`, when supplied, must be the
-    * keys' pmod(hash(doc), num_buckets) set (piggybacked off an
-    * existing action); otherwise one tiny distinct-collect derives it.
+    * exactly as they would against the full table. `bucketIds`, when
+    * supplied, must be the keys' pmod(hash(doc), num_buckets) set
+    * (piggybacked off an existing action); otherwise one tiny
+    * distinct-collect derives it.
     */
   def readLabelsForDocs(spark: org.apache.spark.sql.SparkSession,
       path: String, docKeys: DataFrame,
-      bucketIds: Option[Seq[Int]] = None): DataFrame =
-    labelsNumBuckets(spark, path) match {
-      case Some(n) =>
-        val ids = bucketIds.getOrElse(bucketIdsOf(docKeys, "doc", n))
-        readLabelDirs(spark, path, bucketDirsFor(spark, path, "b", ids))
-      case None => readLabels(spark, path)
-    }
+      bucketIds: Option[Seq[Int]] = None): DataFrame = {
+    val n = labelsMeta(spark, path).getAs[Int]("num_buckets")
+    val ids = bucketIds.getOrElse(bucketIdsOf(docKeys, "doc", n))
+    readLabelDirs(spark, path, bucketDirsFor(spark, path, "b", ids))
+  }
 
   /** POINT READ by canonical — all label rows of the given components,
     * from the canonical-keyed `c=<k>` twin geometry (the secondary
     * index that makes retraction's member lookup and absorb's relabel
     * derivation O(touched buckets); a doc-hash layout cannot serve a
     * by-component read because members scatter across doc buckets).
-    * Superset semantics as `readLabelsForDocs`. Stores without the twin
-    * (flat, or bucketed before round 13) fall back to the full read. */
+    * Superset semantics as `readLabelsForDocs`. */
   private[graft] def membersOfCanonicals(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      canonKeys: DataFrame, bucketIds: Option[Seq[Int]] = None): DataFrame =
-    labelsCanonBuckets(spark, path) match {
-      case Some(n) =>
-        val ids = bucketIds.getOrElse(
-          bucketIdsOf(canonKeys, canonKeys.columns.head, n))
-        readLabelDirs(spark, path, bucketDirsFor(spark, path, "c", ids))
-      case None => readLabels(spark, path)
-    }
+      canonKeys: DataFrame, bucketIds: Option[Seq[Int]] = None): DataFrame = {
+    val n = labelsMeta(spark, path).getAs[Int]("canon_buckets")
+    val ids = bucketIds.getOrElse(
+      bucketIdsOf(canonKeys, canonKeys.columns.head, n))
+    readLabelDirs(spark, path, bucketDirsFor(spark, path, "c", ids))
+  }
 
   /** Re-bucket a labels store to a new bucket count — the periodic
     * maintenance dual of the O(touched) mutations for when the corpus
@@ -1186,47 +1118,22 @@ object Dedup {
     // the committed staging — the marker evidence gone, the
     // inconsistency permanent
     ArtifactStore.repairStore(spark, path)
-    require(labelsNumBuckets(spark, path).isDefined,
-      s"rebalanceLabels: $path is not a bucketed labels store")
     // materialize before the root swap deletes the dirs the plan read
     val labels = readLabels(spark, path).transform(ArtifactStore.eagerCheckpoint)
     writeLabelsBucketed(spark, labels, path, numBuckets)
   }
 
-  /** The labels store's bucket count — `Some(n)` marks the bucketed
-    * layout, `None` a pre-bucketing flat store (the meta row is cached
-    * per (JVM, path) like every artifact meta). */
-  private def labelsNumBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Int] =
-    ArtifactStore.cachedMeta(spark, path).flatMap(r =>
-      if (r.schema.fieldNames.contains("num_buckets"))
-        Some(r.getAs[Int]("num_buckets"))
-      else None)
+  /** The labels store's meta row, checked against its one layout: the
+    * doc-keyed `b=` geometry (`num_buckets`), its canonical-keyed `c=`
+    * twin (`canon_buckets`), the doc column's type (`doc_type`) and the
+    * auto-rebalance hook's sizing target (`bucket_target_bytes`). The
+    * row is cached per (JVM, path) like every artifact meta. */
+  private def labelsMeta(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.Row =
+    ArtifactStore.layoutMeta(spark, path, "Dedup.buildCanonicalLabels",
+      "num_buckets", "canon_buckets", "doc_type", "bucket_target_bytes")
 
-  /** Bucket count of the CANONICAL-keyed twin geometry (`c=<k>` dirs) —
-    * present on stores written since round 13; `None` on earlier
-    * bucketed stores, whose member lookups fall back to a full read. */
-  private def labelsCanonBuckets(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Int] =
-    ArtifactStore.cachedMeta(spark, path).flatMap(r =>
-      if (r.schema.fieldNames.contains("canon_buckets"))
-        Some(r.getAs[Int]("canon_buckets"))
-      else None)
-
-  /** The store's bucket-byte sizing target (round-13 auto-rebalance
-    * hook): builds record the avg live-bucket bytes they produced;
-    * `absorbIntoLabels` compares the current average against it and
-    * triggers `rebalanceLabels` on ~4× drift. Absent on older stores —
-    * the hook stays off. */
-  private def labelsTargetBytes(spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[Long] =
-    ArtifactStore.cachedMeta(spark, path).flatMap(r =>
-      if (r.schema.fieldNames.contains("bucket_target_bytes"))
-        Some(r.getAs[Long]("bucket_target_bytes"))
-      else None)
-
-  /** Full bucketed-store write (build, rebalance, out-of-place merge
-    * copies): meta + BOTH geometries — `b=<k>` doc-keyed and `c=<k>`
+  /** Full bucketed-store write (build, rebalance): meta + BOTH geometries — `b=<k>` doc-keyed and `c=<k>`
     * canonical-keyed (the member-lookup secondary index) — staged as
     * one root, swapped in atomically. The meta records the doc column's
     * type (so a store whose every bucket was later deleted still reads
@@ -1293,24 +1200,19 @@ object Dedup {
     * indexed corpus (the `incrementalNearDup` contract); parameters must
     * match the index build or signatures won't collide.
     *
-    * `outLabelsPath`/`outIndexPath` default to in-place update (the
-    * production shape; the labels rewrite materializes via
-    * localCheckpoint before overwriting the path it read). Passing fresh
-    * paths leaves the base artifacts untouched — the what-if/audit mode,
-    * and what repeated evaluations of the strict gate use. Returns the
-    * merged labels read back from the written store.
+    * The update is IN PLACE; a what-if absorb that must leave the base
+    * untouched copies the two roots first and absorbs into the copies
+    * (x152). Returns the merged labels read back from the store.
     */
   def absorbIntoLabels(batch: DataFrame, idCol: String, textCol: String,
       labelsPath: String, indexPath: String,
       shingleSize: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      threshold: Double = 0.5,
-      outLabelsPath: Option[String] = None,
-      outIndexPath: Option[String] = None): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     absorbIntoLabelsNoRead(batch, idCol, textCol, labelsPath, indexPath,
-      shingleSize, numHashes, bands, threshold, outLabelsPath, outIndexPath)
+      shingleSize, numHashes, bands, threshold)
     val spark = batch.sparkSession
     ArtifactStore.labeled(spark, "absorb_final_read") {
-      readLabels(spark, outLabelsPath.getOrElse(labelsPath))
+      readLabels(spark, labelsPath)
     }
   }
 
@@ -1328,17 +1230,16 @@ object Dedup {
       textCol: String, labelsPath: String, indexPath: String,
       shingleSize: Int = 3, numHashes: Int = 16, bands: Int = 4,
       threshold: Double = 0.5,
-      outLabelsPath: Option[String] = None,
-      outIndexPath: Option[String] = None,
       batchIdsPre: Option[(DataFrame, Long)] = None): Unit = {
     val spark = batch.sparkSession
     checkIndexParams(spark, indexPath, shingleSize, numHashes, bands)
-    val outLabels = outLabelsPath.getOrElse(labelsPath)
-    val outIndex = outIndexPath.getOrElse(indexPath)
     // heal any crashed predecessor BEFORE reading the store: a killed
     // bucket mutation can leave a mixed live state whose marked staging
     // rolls forward here (no-op fast path: a few FS existence checks)
     ArtifactStore.repairStore(spark, labelsPath)
+    val labelsRow = labelsMeta(spark, labelsPath)
+    val (n, cb) = (labelsRow.getAs[Int]("num_buckets"),
+      labelsRow.getAs[Int]("canon_buckets"))
 
     // batch front end, shared by three consumers (bb pairs, bi probe,
     // index append) — checkpoint the per-doc feature sets once. The
@@ -1347,44 +1248,34 @@ object Dedup {
     // they are per-row expressions of (doc, features), and the separate
     // bBuckets aggregation that used to derive them was a fixed 2-job
     // term per absorbed batch (absorb_partsets in the `Probe jobs` counts).
-    val mfPre = lshFeatureParts(spark, indexPath)
-    val mPre = lshBucketParts(spark, indexPath)
+    val indexRow = lshMeta(spark, indexPath)
+    val (mf, m) = (indexRow.getAs[Int]("feature_parts"),
+      indexRow.getAs[Int]("bucket_parts"))
     val rowsPerBand = numHashes / bands
-    val partsObs =
-      if (mfPre.isEmpty && mPre.isEmpty) None
-      else Some(org.apache.spark.sql.Observation(
-        "absorb_parts_" + java.util.UUID.randomUUID().toString.take(8)))
+    val partsObs = org.apache.spark.sql.Observation(
+      "absorb_parts_" + java.util.UUID.randomUUID().toString.take(8))
     val bFeats = ArtifactStore.labeled(spark, "absorb_bfeats") {
-      val base = shingleFeatureSets(batch, idCol, textCol, shingleSize)
-      partsObs.map { o =>
-        // per-row band h-ids: same sig derivation as bandBuckets, kept
-        // in lockstep (concat_ws of the band's minhash slots, hashed
-        // with the band id) — collect_list + flatten + array_distinct
-        // because collect_set over array values is not guaranteed
-        val withSigs = base.withColumn("__sigs",
+      // per-row band h-ids: same sig derivation as bandBuckets, kept in
+      // lockstep (concat_ws of the band's minhash slots, hashed with the
+      // band id) — collect_list + flatten + array_distinct because
+      // collect_set over array values is not guaranteed
+      val hs = (0 until bands).map { b =>
+        val parts = (0 until rowsPerBand).map(r =>
+          col("__sigs").getItem(b * rowsPerBand + r))
+        pmod(hash(lit(b), concat_ws("_", parts: _*)), lit(m))
+      }
+      shingleFeatureSets(batch, idCol, textCol, shingleSize)
+        .withColumn("__sigs",
           graft.functions.MinHashSignature.ofCol(col("features"), numHashes))
-        val aggs =
-          mfPre.map(mf => array_distinct(collect_list(
-            pmod(hash(col("doc")), lit(mf)))).as("__f")).toSeq ++
-          mPre.map { m =>
-            val hs = (0 until bands).map { b =>
-              val parts = (0 until rowsPerBand).map(r =>
-                col("__sigs").getItem(b * rowsPerBand + r))
-              pmod(hash(lit(b), concat_ws("_", parts: _*)), lit(m))
-            }
-            array_distinct(flatten(collect_list(array(hs: _*)))).as("__h")
-          }
-        withSigs.observe(o, aggs.head, aggs.tail: _*).drop("__sigs")
-      }.getOrElse(base)
+        .observe(partsObs,
+          array_distinct(collect_list(pmod(hash(col("doc")), lit(mf))))
+            .as("__f"),
+          array_distinct(flatten(collect_list(array(hs: _*)))).as("__h"))
+        .drop("__sigs")
         .transform(ArtifactStore.eagerCheckpoint)
     }
-    // (guarded per metric: Observation.get throws on a key that was
-    // never aggregated — "__h" exists only when the buckets substore is
-    // partitioned, "__f" only when the features substore is)
-    def observedParts(name: String, included: Boolean): Seq[Int] =
-      if (!included) Seq.empty
-      else partsObs
-        .flatMap(o => Option(o.get(name)))
+    def observedParts(name: String): Seq[Int] =
+      Option(partsObs.get(name))
         .map(_.asInstanceOf[scala.collection.Seq[Any]]
           .map(_.asInstanceOf[Int]).toSeq)
         .getOrElse(Seq.empty)
@@ -1404,13 +1295,6 @@ object Dedup {
         s"absorbIntoLabels: batch contains ids tombstoned in $indexPath — " +
           "run compactLshIndex before re-ingesting a retracted id")
     }
-    val nb = labelsNumBuckets(spark, labelsPath)
-    val cb = labelsCanonBuckets(spark, labelsPath)
-    // full-table handle: ONLY the flat-store fallback and the
-    // out-of-place merged copy force this corpus-sized read — every
-    // lookup on the bucketed in-place path below is bucket-pruned
-    // (round-12 verdict #2)
-    lazy val labels = readLabels(spark, labelsPath)
 
     // batch-batch near-dup edges
     val bbCand = bBuckets.as("l").join(bBuckets.as("r"),
@@ -1429,7 +1313,7 @@ object Dedup {
     // action, zero corpus-wide scans (round-12 verdict #2/#7)
     val (biRaw0, biBk) = ArtifactStore.labeled(spark, "absorb_probe") {
       probeStored(spark, indexPath, bFeats, bBuckets,
-        threshold, labelBucketsN = nb)
+        threshold, labelBucketsN = Some(n))
     }
     val biRaw = biRaw0.select(col("doc_a"), col("doc_b"))
     // batch-index near-dup edges, index endpoint CONTRACTED to its
@@ -1459,7 +1343,7 @@ object Dedup {
     // the merge checkpoint also carries the nodes' label-bucket ids —
     // the is-old-canonical lookup below prunes on them (zero extra jobs)
     val (newLabels, _, nlBk) = checkpointWithCountAndBuckets(
-      canonicalize(nodes, "doc", edges), "absorb_merge", "doc", nb)
+      canonicalize(nodes, "doc", edges), "absorb_merge", "doc", n)
 
     // which of the merge's nodes are STORED canonicals: every stored
     // canonical keeps a SELF-ROW (doc == canonical_id — the build and
@@ -1468,7 +1352,7 @@ object Dedup {
     // buckets, never a corpus-wide distinct over canonical_id
     val oldCanon = ArtifactStore.labeled(spark, "absorb_oldcanon_read") {
       readLabelsForDocs(spark, labelsPath,
-          newLabels.select("doc"), nlBk)
+          newLabels.select("doc"), Some(nlBk))
         .filter(col("doc") === col("canonical_id")).select("doc")
     }
     // relabel map: old canonicals whose component minimum changed —
@@ -1500,7 +1384,7 @@ object Dedup {
     // action) before any store mutation below.
     lazy val (movedUpserts, nMoved) = checkpointWithCount(
       membersOfCanonicals(spark, labelsPath,
-          relabel.select(col("__old")), relBk)
+          relabel.select(col("__old")), Some(relBk))
         .join(relabelH, col("canonical_id") === col("__old"))
         .select(col("doc"), col("__new").as("canonical_id"))
         .join(broadcast(batchIds), Seq("doc"), "left_anti")
@@ -1512,352 +1396,239 @@ object Dedup {
     // staging job that re-reads it never touches the store it mutates
     lazy val touchedUpserts = movedUpserts.unionByName(batchInsert)
     lazy val nUpserts = nMoved + nBatch
-    // full merged table — only the flat-store and out-of-place paths
-    // pay this corpus-sized materialization
-    lazy val merged = labels
-      .join(broadcast(batchIds), Seq("doc"), "left_anti")
-      .join(relabelH, labels("canonical_id") === col("__old"), "left")
-      .select(col("doc"),
-        coalesce(col("__new"), col("canonical_id")).as("canonical_id"))
-      .unionByName(batchRows)
-      .select(col("doc"), col("canonical_id"),
-        (col("doc") === col("canonical_id")).as("is_keeper"))
-      .transform(ArtifactStore.eagerCheckpoint)
 
     // WRITE ORDERING (crash recovery contract): the index grows FIRST
-    // and the labels swap LAST, because the index append is idempotent
+    // and the labels mutate LAST, because the index append is idempotent
     // (per-store doc anti-join below — a retry skips rows a previous
-    // partial run already committed) while the labels write is a swap.
-    // A failure anywhere is recovered by RE-RUNNING THE SAME ABSORB:
+    // partial run already committed) while the labels write is a bucket
+    // mutation. A failure anywhere is recovered by RE-RUNNING THE SAME
+    // ABSORB:
     //  - before the index append: nothing changed;
-    //  - between the two index appends, or before the labels swap: the
+    //  - between the two index appends, or before the labels write: the
     //    retry's appends skip the committed rows, and its label merge is
     //    undisturbed — batch docs already sitting in the index carry no
     //    stored-label row, so their probe hits drop out of the
     //    batch–index edge set (the labels join) and the merge recomputes
     //    exactly as if the partial append had not happened;
-    //  - the labels write last: flat stores swap via writeParquetStaged
-    //    (if `<labels>` is missing after a crash the previous store is
-    //    intact at `<labels>.__old` — rename back, retry); bucketed
-    //    stores mutate through the two-phase commit-marker protocol
-    //    (ArtifactStore.mutateBuckets) whose repair —
-    //    ArtifactStore.repairStore — rolls an interrupted apply forward
-    //    (or discards an unmarked staging), after which re-running the
-    //    absorb is exact: its batch-id anti-join skips rows committed
-    //    buckets already hold.
+    //  - the labels write last: the buckets mutate through the two-phase
+    //    commit-marker protocol (ArtifactStore.mutateBuckets) whose
+    //    repair — ArtifactStore.repairStore — rolls an interrupted apply
+    //    forward (or discards an unmarked staging), after which
+    //    re-running the absorb is exact: its batch-id anti-join skips
+    //    rows committed buckets already hold.
     // The OLD ordering (labels first, index second) was unrecoverable:
     // a failure between the writes left labels CONTAINING the batch, so
     // a retry found nothing to do and the index silently missed the
     // batch's near-dup edges forever (round-10 advisory).
+    //
+    // Idempotent index append: drop batch rows each store already holds
+    // (ArtifactStore.appendMissing — the present set checkpoints before
+    // the append job mutates the directory it read). The buckets grow
+    // inside their h dirs and the features inside their f dirs, so probe
+    // pruning stays valid. The (already checkpointed) batchIds stand in
+    // for the appends' key set: bFeats' docs are a subset (null-text
+    // docs filtered), and a SUPERSET of keys is harmless to the
+    // present-check — one fewer checkpoint job per absorb.
+    //
+    // CONTENT-INDEPENDENT present check (round-13 advisory): the
+    // features substore's f = pmod(hash(doc)) depends only on the id, so
+    // ONE pruned read of the batch docs' own f dirs (observed on the
+    // bFeats checkpoint above — zero extra jobs) gives the committed-doc
+    // set that gates BOTH substores — an out-of-contract re-ingest of a
+    // committed doc with NEW text (whose band-sigs land in different h
+    // dirs) is caught and skipped. Features append first, buckets
+    // second: a crash between them leaves the retry's presentDocs
+    // CONTAINING the batch, and the buckets check below derives the
+    // committed docs' h dirs from their STORED feature sets, so it still
+    // completes the missing bucket rows. Normal path (nothing present):
+    // one checkpoint job total, and the buckets store isn't read at all.
+    val (fIds, hIds) = (observedParts("__f"), observedParts("__h"))
+    val pObs = org.apache.spark.sql.Observation(
+      "lsh_present_" + java.util.UUID.randomUUID().toString.take(8))
+    val presentDocs = ArtifactStore.labeled(spark, "absorb_lsh_present") {
+      ArtifactStore.readParquetCached(spark,
+          s"$indexPath/features", Seq(s"$indexPath/features"))
+        .filter(col("f").isin(fIds: _*)).select("doc")
+        .join(broadcast(batchIds), Seq("doc"), "left_semi")
+        .distinct()
+        .observe(pObs, count(lit(1)).as("__n"))
+        .transform(ArtifactStore.eagerCheckpoint)
+    }
     // the index-side present count doubles as the labels-side REPLAY
     // detector (zero extra jobs): the index is written FIRST, so a
     // crashed prior attempt that reached the labels appends necessarily
-    // committed the batch's index rows — Some(0) therefore certifies no
-    // batch row can exist in the labels store and the insert-append
-    // fast path below skips its probe read entirely
-    val indexPresent: Option[Long] =
-    if (outIndex == indexPath) {
-      // idempotent append: drop batch rows each store already holds
-      // (ArtifactStore.appendMissing — the store scan checkpoints
-      // before the append job mutates the directory it scanned).
-      // Partitioned buckets stores grow inside their h dirs so probe
-      // pruning stays valid.
-      // the (already checkpointed) batchIds stand in for the appends'
-      // key set: bFeats' docs are a subset (null-text docs filtered),
-      // and a SUPERSET of keys is harmless to the present-check — one
-      // fewer checkpoint job per absorb
-      val batchDocs = batchIds
-      val mfOpt = lshFeatureParts(spark, indexPath)
-      val mOpt = lshBucketParts(spark, indexPath)
-      // present-check pruning sets for BOTH substores in ONE tiny job
-      // over the checkpointed batch derivation (never a store read):
-      // a batch doc's committed feature rows live in its f =
-      // pmod(hash(doc)) dir and its committed bucket rows carry ITS
-      // band-sigs (deterministic from the text) — h = pmod(hash(band,
-      // sig)) — so the pruned present-checks cannot miss a committed
-      // key (round-13: appendMissing's full-substore key scan was the
-      // drain path's last corpus-sized read)
-      // pruning sets observed on the bFeats checkpoint above — zero
-      // extra jobs (round 16; was a separate 2-job bBuckets aggregation)
-      val (fIds, hIds) = (observedParts("__f", mfOpt.isDefined),
-        observedParts("__h", mOpt.isDefined))
-      (mfOpt, mOpt) match {
-        case (Some(mf), Some(m)) =>
-          // CONTENT-INDEPENDENT present check (round-13 advisory): the
-          // features substore's f = pmod(hash(doc)) depends only on the
-          // id, so ONE pruned read of the batch docs' own f dirs gives
-          // the committed-doc set that gates BOTH substores — an
-          // out-of-contract re-ingest of a committed doc with NEW text
-          // (whose band-sigs land in different h dirs, which the old
-          // h-pruned buckets check missed) is caught and skipped, the
-          // benign full-scan behavior. Features append first, buckets
-          // second: a crash between them leaves the retry's presentDocs
-          // CONTAINING the batch, and the buckets check below derives
-          // the committed docs' h dirs from their STORED feature sets,
-          // so it still completes the missing bucket rows. Normal path
-          // (nothing present): one checkpoint job total — one FEWER
-          // than the old two per-substore checks — and the buckets
-          // store isn't read at all.
-          val pObs = org.apache.spark.sql.Observation(
-            "lsh_present_" + java.util.UUID.randomUUID().toString.take(8))
-          val presentDocs = ArtifactStore.labeled(spark, "absorb_lsh_present") {
-            ArtifactStore.readParquetCached(spark,
-                s"$outIndex/features", Seq(s"$outIndex/features"))
-              .filter(col("f").isin(fIds: _*)).select("doc")
-              .join(broadcast(batchDocs), Seq("doc"), "left_semi")
-              .distinct()
-              .observe(pObs, count(lit(1)).as("__n"))
-              .transform(ArtifactStore.eagerCheckpoint)
-          }
-          val nPresentDocs = Option(pObs.get("__n"))
-            .map(_.asInstanceOf[Long]).getOrElse(0L)
-          ArtifactStore.appendMissing(spark, outIndex, "features", "doc",
-            batchDocs, bFeats.withColumn("f", lshFeatPartOf(mf)),
-            partitionCols = Seq("f"), presentKeys = Some(presentDocs),
-            presentKeysCount = Some(nPresentDocs))
-          val bucketsPresent =
-            if (nPresentDocs == 0L) presentDocs // empty, typed (doc)
-            else {
-              // rare path (crash retry / out-of-contract re-ingest):
-              // the committed docs' bucket rows carry band-sigs derived
-              // from their STORED feature sets — recompute those sigs
-              // from the features substore (map-side, present-set-
-              // sized) so the h pruning covers the committed dirs even
-              // when the batch's own text changed
-              val committedSigs = bandBuckets(
-                ArtifactStore.readParquetCached(spark,
-                    s"$outIndex/features", Seq(s"$outIndex/features"))
-                  .filter(col("f").isin(fIds: _*))
-                  .join(broadcast(presentDocs), Seq("doc"), "left_semi")
-                  .select("doc", "features"),
-                numHashes, bands)
-              val committedH = committedSigs
-                .select(lshPartOf(m).as("h")).distinct()
-                .collect().map(_.getInt(0))
-              val hsAll = (hIds ++ committedH).distinct.toIndexedSeq
-              ArtifactStore.readParquetCached(spark,
-                  s"$outIndex/buckets", Seq(s"$outIndex/buckets"))
-                .filter(col("h").isin(hsAll: _*)).select("doc")
-                .join(broadcast(presentDocs), Seq("doc"), "left_semi")
-                .distinct().transform(ArtifactStore.eagerCheckpoint)
-            }
-          ArtifactStore.appendMissing(spark, outIndex, "buckets", "doc",
-            batchDocs, bBuckets.withColumn("h", lshPartOf(m)),
-            partitionCols = Seq("h"), presentKeys = Some(bucketsPresent),
-            presentKeysCount = if (nPresentDocs == 0L) Some(0L) else None)
-          Some(nPresentDocs)
-        case _ =>
-          // legacy layouts (flat, or single-substore partitioning from
-          // interim generations): the default full-substore key checks
-          // are content-independent already
-          mfOpt match {
-            case Some(mf) =>
-              ArtifactStore.appendMissing(spark, outIndex, "features",
-                "doc", batchDocs, bFeats.withColumn("f", lshFeatPartOf(mf)),
-                partitionCols = Seq("f"),
-                presentSource = Some(
-                  ArtifactStore.readParquetCached(spark,
-                      s"$outIndex/features", Seq(s"$outIndex/features"))
-                    .filter(col("f").isin(fIds: _*))))
-            case None =>
-              ArtifactStore.appendMissing(spark, outIndex, "features",
-                "doc", batchDocs, bFeats)
-          }
-          mOpt match {
-            case Some(m) =>
-              ArtifactStore.appendMissing(spark, outIndex, "buckets",
-                "doc", batchDocs, bBuckets.withColumn("h", lshPartOf(m)),
-                partitionCols = Seq("h"),
-                presentSource = Some(
-                  ArtifactStore.readParquetCached(spark,
-                      s"$outIndex/buckets", Seq(s"$outIndex/buckets"))
-                    .filter(col("h").isin(hIds: _*))))
-            case None =>
-              ArtifactStore.appendMissing(spark, outIndex, "buckets",
-                "doc", batchDocs, bBuckets)
-          }
-          None
+    // committed the batch's index rows — 0 therefore certifies no batch
+    // row can exist in the labels store and the insert-append fast path
+    // below skips its probe read entirely
+    val nPresentDocs = Option(pObs.get("__n"))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    ArtifactStore.appendMissing(spark, indexPath, "features", "doc",
+      batchIds, bFeats.withColumn("f", lshFeatPartOf(mf)),
+      partitionCols = Seq("f"), presentKeys = Some(presentDocs),
+      presentKeysCount = Some(nPresentDocs))
+    val bucketsPresent =
+      if (nPresentDocs == 0L) presentDocs // empty, typed (doc)
+      else {
+        // rare path (crash retry / out-of-contract re-ingest): the
+        // committed docs' bucket rows carry band-sigs derived from their
+        // STORED feature sets — recompute those sigs from the features
+        // substore (map-side, present-set-sized) so the h pruning covers
+        // the committed dirs even when the batch's own text changed
+        val committedSigs = bandBuckets(
+          ArtifactStore.readParquetCached(spark,
+              s"$indexPath/features", Seq(s"$indexPath/features"))
+            .filter(col("f").isin(fIds: _*))
+            .join(broadcast(presentDocs), Seq("doc"), "left_semi")
+            .select("doc", "features"),
+          numHashes, bands)
+        val committedH = committedSigs
+          .select(lshPartOf(m).as("h")).distinct()
+          .collect().map(_.getInt(0))
+        val hsAll = (hIds ++ committedH).distinct.toIndexedSeq
+        ArtifactStore.readParquetCached(spark,
+            s"$indexPath/buckets", Seq(s"$indexPath/buckets"))
+          .filter(col("h").isin(hsAll: _*)).select("doc")
+          .join(broadcast(presentDocs), Seq("doc"), "left_semi")
+          .distinct().transform(ArtifactStore.eagerCheckpoint)
       }
+    ArtifactStore.appendMissing(spark, indexPath, "buckets", "doc",
+      batchIds, bBuckets.withColumn("h", lshPartOf(m)),
+      partitionCols = Seq("h"), presentKeys = Some(bucketsPresent),
+      presentKeysCount = if (nPresentDocs == 0L) Some(0L) else None)
+
+    // REPLAY PROBE (pruned, id-keyed — content-independent): has a
+    // crashed prior attempt already committed batch rows into the
+    // doc-keyed geometry? Its emptiness is what licenses the
+    // insert-append fast path below. The probe read itself is GATED on
+    // the index-side present count (zero extra jobs on the normal path):
+    // the index commits before the labels, so a batch the index has
+    // never seen cannot have label rows — only when the index says "seen
+    // before" (crash retry or the out-of-contract case) does the probe
+    // actually scan the batch ids' buckets.
+    val nPresentB: Long =
+      if (nPresentDocs == 0L) 0L
+      else ArtifactStore.labeled(spark, "absorb_replay_probe") {
+        val pObs = org.apache.spark.sql.Observation(
+          "absorb_present_" + java.util.UUID.randomUUID().toString.take(8))
+        readLabelsForDocs(spark, labelsPath, batchIds, Some(nlBk))
+          .join(broadcast(batchIds), Seq("doc"), "left_semi")
+          .select("doc").distinct()
+          .observe(pObs, count(lit(1)).as("__n"))
+          .transform(ArtifactStore.eagerCheckpoint)
+        Option(pObs.get("__n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      }
+    // plain partitioned append of label rows into both geometries' live
+    // bucket dirs — new part-files only, no bucket content is read or
+    // rewritten. ONE Spark job for both geometries (the
+    // mutateBucketsMulti g/k staging trick): rows land tagged under
+    // `.__appstage/g=<p>/k=<k>`, then driver-side renames move each
+    // part-file into its live `<p>=<k>` dir — file moves, no second
+    // shuffle. Crash anywhere leaves either inert `.__appstage` debris
+    // (deleted on the next entry repair) or a partial move, which the
+    // gated replay probe catches on retry exactly like the old
+    // two-append window (per-doc atomicity holds: a doc's row lives in
+    // exactly one staged file).
+    def appendGeometries(rows: DataFrame): Unit =
+      ArtifactStore.labeled(spark, "absorb_append_geoms") {
+      import org.apache.hadoop.fs.Path
+      val fsys = new Path(labelsPath)
+        .getFileSystem(spark.sessionState.newHadoopConf())
+      val stage = s"$labelsPath/.__appstage"
+      ArtifactStore.deletePath(spark, stage)
+      val parts = Seq(("b", pmod(hash(col("doc")), lit(n))),
+        ("c", pmod(hash(col("canonical_id")), lit(cb))))
+      val staged = parts.map { case (g, k) =>
+          rows.select(lit(g).as("g"), k.as("k"), col("doc"),
+            col("canonical_id"), col("is_keeper"))
+        }.reduce(_ unionByName _)
+      // a two-geometry append of B docs writes ~2·min(B, N) bucket
+      // files, and the per-file open/footer/close is the phase's real
+      // wall cost, so the write must run parallel: writeRepartition pins
+      // the partition count AQE would otherwise coalesce to ONE task
+      // (measured 1.6 s per micro-batch). File count is unchanged (one
+      // file per (g, k) group either way).
+      ArtifactStore.writeRepartition(staged, Seq(col("g"), col("k")))
+        .write.mode("overwrite").partitionBy("g", "k").parquet(stage)
+      parts.foreach { case (g, _) =>
+        val gDir = new Path(s"$stage/g=$g")
+        if (fsys.exists(gDir)) fsys.listStatus(gDir).foreach { kSt =>
+          val kName = kSt.getPath.getName // k=<id>
+          if (kName.startsWith("k=")) {
+            val target = new Path(
+              s"$labelsPath/$g=${kName.stripPrefix("k=")}")
+            fsys.mkdirs(target)
+            fsys.listStatus(kSt.getPath).foreach { f =>
+              if (f.getPath.getName.startsWith("part-"))
+                require(fsys.rename(f.getPath,
+                  new Path(target, f.getPath.getName)),
+                  s"appendGeometries: could not move ${f.getPath}")
+            }
+          }
+        }
+      }
+      ArtifactStore.deletePath(spark, stage)
+      }
+    if (nPresentB == 0L) {
+      // INSERT-APPEND fast path (round-13 verdict #1): under the
+      // ids-disjoint contract the batch's rows are pure inserts in BOTH
+      // geometries, so they append as new files — the two-phase bucket
+      // rewrite is needed only for the MOVED rows (old members whose
+      // canonical changed), whose buckets it rewrites and nothing else.
+      // An absorb of all-novel docs (the production crawl shape)
+      // therefore writes O(batch) bytes and reads no bucket content at
+      // all. Crash recovery stays re-run: the mutation is
+      // marker-protected as before; a crash between the two geometry
+      // appends leaves committed batch rows in b= that the replay probe
+      // sees, routing the retry down the full fallback mutation below,
+      // which drops-and-reinserts them exactly once and completes the
+      // missing twin rows.
+      if (nRelabel > 0L) {
+        val movedDocs = movedUpserts.select("doc")
+        ArtifactStore.mutateBucketsMulti(spark, labelsPath, "doc",
+          Seq(ArtifactStore.BucketGeom("b", "doc", n, movedDocs),
+            ArtifactStore.BucketGeom("c", "canonical_id", cb,
+              relabel.select(col("__old").as("canonical_id"))
+                .unionByName(
+                  relabel.select(col("__new").as("canonical_id"))))),
+          hintIfSmall(movedDocs, nMoved, DefaultBroadcastRowLimit),
+          movedUpserts)
+        ()
+      }
+      appendGeometries(batchInsert)
     } else {
-      // the audit copies are written FLAT (f/h are physical layouts of
-      // the base, not part of the row contract)
-      indexStore(spark, indexPath, "features").drop("f")
-        .unionByName(bFeats).write.mode("overwrite")
-        .parquet(s"$outIndex/features")
-      indexStore(spark, indexPath, "buckets").drop("h")
-        .unionByName(bBuckets).write.mode("overwrite")
-        .parquet(s"$outIndex/buckets")
-      // the grown copy keeps the build-parameter contract of its base —
-      // but NOT the base's partition-layout fields (bucket_parts /
-      // feature_parts): the copy was just written FLAT, and a meta
-      // claiming a pruned layout the dirs don't have would make the
-      // copy's probes filter on a nonexistent h/f column
-      if (ArtifactStore.exists(spark, s"$indexPath/meta")) {
-        spark.read.parquet(s"$indexPath/meta")
-          .drop("bucket_parts", "feature_parts")
-          .write.mode("overwrite").parquet(s"$outIndex/meta")
-        invalidateIndexMeta(spark, outIndex)
-      }
-      None
+      // crash-replay fallback: rewrite every bucket holding a batch row
+      // or a moved row (the pre-round-14 shape) — drops the
+      // partially-committed batch rows and re-inserts everything exactly
+      // once, converging both geometries
+      val touchedDocs = touchedUpserts.select("doc")
+      ArtifactStore.mutateBucketsMulti(spark, labelsPath, "doc",
+        Seq(ArtifactStore.BucketGeom("b", "doc", n, touchedDocs),
+          ArtifactStore.BucketGeom("c", "canonical_id", cb,
+            touchedUpserts.select(col("canonical_id")).unionByName(
+              relabel.select(col("__old").as("canonical_id"))))),
+        hintIfSmall(touchedDocs, nUpserts, DefaultBroadcastRowLimit),
+        touchedUpserts)
+      ()
     }
-    nb match {
-      case Some(n) if outLabels == labelsPath =>
-        // REPLAY PROBE (pruned, id-keyed — content-independent): has a
-        // crashed prior attempt already committed batch rows into the
-        // doc-keyed geometry? Its emptiness is what licenses the
-        // insert-append fast path below. The probe read itself is
-        // GATED on the index-side present count (zero extra jobs on
-        // the normal path): the index commits before the labels, so a
-        // batch the index has never seen cannot have label rows — only
-        // when the index says "seen before" (crash retry or the
-        // out-of-contract case) does the probe actually scan the batch
-        // ids' buckets.
-        val nPresentB: Long =
-          if (indexPresent.contains(0L)) 0L
-          else ArtifactStore.labeled(spark, "absorb_replay_probe") {
-            val pObs = org.apache.spark.sql.Observation(
-              "absorb_present_" + java.util.UUID.randomUUID().toString.take(8))
-            readLabelsForDocs(spark, labelsPath, batchIds, nlBk)
-              .join(broadcast(batchIds), Seq("doc"), "left_semi")
-              .select("doc").distinct()
-              .observe(pObs, count(lit(1)).as("__n"))
-              .transform(ArtifactStore.eagerCheckpoint)
-            Option(pObs.get("__n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-          }
-        // plain partitioned append of label rows into both geometries'
-        // live bucket dirs — new part-files only, no bucket content is
-        // read or rewritten. ONE Spark job for both geometries (the
-        // mutateBucketsMulti g/k staging trick): rows land tagged under
-        // `.__appstage/g=<p>/k=<k>`, then driver-side renames move each
-        // part-file into its live `<p>=<k>` dir — file moves, no second
-        // shuffle. Crash anywhere leaves either inert `.__appstage`
-        // debris (deleted on the next entry repair) or a partial move,
-        // which the gated replay probe catches on retry exactly like
-        // the old two-append window (per-doc atomicity holds: a doc's
-        // row lives in exactly one staged file).
-        def appendGeometries(rows: DataFrame): Unit =
-          ArtifactStore.labeled(spark, "absorb_append_geoms") {
-          import org.apache.hadoop.fs.Path
-          val fsys = new Path(outLabels)
-            .getFileSystem(spark.sessionState.newHadoopConf())
-          val stage = s"$outLabels/.__appstage"
-          ArtifactStore.deletePath(spark, stage)
-          val parts =
-            Seq(("b", pmod(hash(col("doc")), lit(n)))) ++
-              cb.map(m => ("c", pmod(hash(col("canonical_id")), lit(m))))
-          val staged = parts.map { case (g, k) =>
-              rows.select(lit(g).as("g"), k.as("k"), col("doc"),
-                col("canonical_id"), col("is_keeper"))
-            }.reduce(_ unionByName _)
-          // EXPLICIT-COUNT repartition (round 16): a two-geometry
-          // append of B docs writes ~2·min(B, N) bucket files, and the
-          // FILE-WRITE overhead — open/footer/close per tiny parquet
-          // file — is the phase's real wall cost, so it must run
-          // parallel. Both the keyless repartition(g, k) (AQE coalesces
-          // the tiny shuffle to ONE partition under the bench's 64 KB
-          // floor) and coalesce(1) serialize ~190 file writes onto a
-          // single task — measured 1.6 s per micro-batch, the largest
-          // single site in the drain. Pinning the partition count keeps
-          // AQE's hands off; file count is unchanged (one file per
-          // (g, k) group either way — a group never splits without a
-          // same-key collision, and groups per task only concatenate).
-          staged.repartition(
-              spark.sessionState.conf.numShufflePartitions,
-              col("g"), col("k"))
-            .write.mode("overwrite").partitionBy("g", "k").parquet(stage)
-          parts.foreach { case (g, _) =>
-            val gDir = new Path(s"$stage/g=$g")
-            if (fsys.exists(gDir)) fsys.listStatus(gDir).foreach { kSt =>
-              val kName = kSt.getPath.getName // k=<id>
-              if (kName.startsWith("k=")) {
-                val target = new Path(
-                  s"$outLabels/$g=${kName.stripPrefix("k=")}")
-                fsys.mkdirs(target)
-                fsys.listStatus(kSt.getPath).foreach { f =>
-                  if (f.getPath.getName.startsWith("part-"))
-                    require(fsys.rename(f.getPath,
-                      new Path(target, f.getPath.getName)),
-                      s"appendGeometries: could not move ${f.getPath}")
-                }
-              }
-            }
-          }
-          ArtifactStore.deletePath(spark, stage)
-          }
-        if (nPresentB == 0L) {
-          // INSERT-APPEND fast path (round-13 verdict #1): under the
-          // ids-disjoint contract the batch's rows are pure inserts in
-          // BOTH geometries, so they append as new files — the
-          // two-phase bucket rewrite is needed only for the MOVED rows
-          // (old members whose canonical changed), whose buckets it
-          // rewrites and nothing else. An absorb of all-novel docs
-          // (the production crawl shape) therefore writes
-          // O(batch) bytes and reads no bucket content at all, where
-          // the old path re-staged every touched bucket of both
-          // geometries. Crash recovery stays re-run: the mutation is
-          // marker-protected as before; a crash between the two
-          // geometry appends leaves committed batch rows in b= that
-          // the replay probe sees, routing the retry down the full
-          // fallback mutation below, which drops-and-reinserts them
-          // exactly once and completes the missing twin rows.
-          if (nRelabel > 0L) {
-            val movedDocs = movedUpserts.select("doc")
-            val geoms =
-              ArtifactStore.BucketGeom("b", "doc", n, movedDocs) +:
-              cb.map(m => ArtifactStore.BucketGeom("c", "canonical_id", m,
-                relabel.select(col("__old").as("canonical_id"))
-                  .unionByName(
-                    relabel.select(col("__new").as("canonical_id"))))).toSeq
-            ArtifactStore.mutateBucketsMulti(spark, outLabels, "doc",
-              geoms,
-              hintIfSmall(movedDocs, nMoved, DefaultBroadcastRowLimit),
-              movedUpserts)
-            ()
-          }
-          appendGeometries(batchInsert)
-        } else {
-          // crash-replay fallback: rewrite every bucket holding a batch
-          // row or a moved row (the pre-round-14 shape) — drops the
-          // partially-committed batch rows and re-inserts everything
-          // exactly once, converging both geometries
-          val touchedDocs = touchedUpserts.select("doc")
-          val geoms = ArtifactStore.BucketGeom("b", "doc", n, touchedDocs) +:
-            cb.map(m => ArtifactStore.BucketGeom("c", "canonical_id", m,
-              touchedUpserts.select(col("canonical_id")).unionByName(
-                relabel.select(col("__old").as("canonical_id"))))).toSeq
-          ArtifactStore.mutateBucketsMulti(spark, outLabels, "doc", geoms,
-            hintIfSmall(touchedDocs, nUpserts, DefaultBroadcastRowLimit),
-            touchedUpserts)
-          ()
-        }
-        // AUTO-REBALANCE hook (round-12 verdict #5): bucket bytes grow
-        // with the corpus at fixed N, so the absorb that pushed the avg
-        // live-bucket bytes ~4x past the build's recorded target
-        // triggers the re-bucketing the operator would otherwise wait
-        // for a human to schedule. The drift estimate is a BOUNDED
-        // deterministic sample (round-15): listing all N dirs per
-        // absorb was an O(N) FS-metadata term — at production
-        // N ∝ corpus, an O(corpus) LIST storm per batch on an object
-        // store. No Spark job on the no-trigger path.
-        labelsTargetBytes(spark, labelsPath).foreach { target =>
-          if (target > 0L) {
-            // strided DIRECT dir probes (round 17): the hook's caller
-            // knows N, so the drift sample skips the full root listing
-            // (~2N child stats per absorb — the drain's thread dumps
-            // caught it) and probes ~32 bucket dirs directly
-            val (avg, live) = ArtifactStore.bucketDirBytesSampledAvgN(
-              spark, outLabels, "b", n)
-            if (avg > 4L * target)
-              rebalanceLabels(spark, outLabels,
-                math.max(n + 1,
-                  math.ceil(avg.toDouble * live / target).toInt))
-          }
-        }
-      case Some(n) =>
-        // out-of-place copy keeps the base's bucket geometry
-        writeLabelsBucketed(spark, merged, outLabels, n)
-      case None =>
-        ArtifactStore.writeParquetStaged(spark, merged, outLabels)
+    // AUTO-REBALANCE hook (round-12 verdict #5): bucket bytes grow with
+    // the corpus at fixed N, so the absorb that pushed the avg
+    // live-bucket bytes ~4x past the build's recorded target triggers
+    // the re-bucketing the operator would otherwise wait for a human to
+    // schedule. The drift estimate is a BOUNDED deterministic sample
+    // (round-15): listing all N dirs per absorb was an O(N) FS-metadata
+    // term — at production N ∝ corpus, an O(corpus) LIST storm per batch
+    // on an object store. No Spark job on the no-trigger path.
+    val target = labelsRow.getAs[Long]("bucket_target_bytes")
+    if (target > 0L) {
+      // strided DIRECT dir probes (round 17): the hook's caller knows N,
+      // so the drift sample skips the full root listing (~2N child stats
+      // per absorb — the drain's thread dumps caught it) and probes ~32
+      // bucket dirs directly
+      val (avg, live) = ArtifactStore.bucketDirBytesSampledAvgN(
+        spark, labelsPath, "b", n)
+      if (avg > 4L * target)
+        rebalanceLabels(spark, labelsPath,
+          math.max(n + 1, math.ceil(avg.toDouble * live / target).toInt))
     }
   }
 
@@ -1901,17 +1672,14 @@ object Dedup {
     * `compactLshIndex` folds tombstones into the stores physically as
     * periodic maintenance. Write ordering mirrors `absorbIntoLabels`:
     * tombstones first (idempotent — an anti-join skips already-present
-    * ids), labels swap last (`writeParquetStaged`); a crash anywhere is
+    * ids), the labels' bucket mutation last; a crash anywhere is
     * recovered by re-running the same retraction (the tombstone filter
     * changes nothing the retry reads: it re-derives edges among
     * SURVIVORS only).
     *
-    * In-place by default (the production shape); `outLabelsPath`/
-    * `outIndexPath` write an untouched-base audit copy instead — the
-    * out-of-place index copy is written PHYSICALLY compacted (retracted
-    * rows dropped, no tombstones dir). Signature parameters are not
-    * needed: nothing is re-shingled. Returns the merged labels read
-    * back from the written store.
+    * The update is IN PLACE. Signature parameters are not needed:
+    * nothing is re-shingled. Returns the merged labels read back from
+    * the store.
     *
     * `broadcastRowLimit` degrades the takedown-sized broadcasts
     * gracefully (round-11 verdict #2): the rid/touched-canonical/
@@ -1926,24 +1694,18 @@ object Dedup {
     */
   def retractFromLabels(retract: DataFrame, idCol: String,
       labelsPath: String, indexPath: String, threshold: Double = 0.5,
-      outLabelsPath: Option[String] = None,
-      outIndexPath: Option[String] = None,
       maxBucket: Option[Long] = None,
       broadcastRowLimit: Long = 4000000L): DataFrame = {
     val spark = retract.sparkSession
     maxBucket.foreach(cap => require(cap >= 2,
       "retractFromLabels: maxBucket must be >= 2"))
-    val outLabels = outLabelsPath.getOrElse(labelsPath)
-    val outIndex = outIndexPath.getOrElse(indexPath)
     // heal any crashed predecessor BEFORE reading the store (see
     // absorbIntoLabels' entry repair)
     ArtifactStore.repairStore(spark, labelsPath)
-    val nb = labelsNumBuckets(spark, labelsPath)
-    val cb = labelsCanonBuckets(spark, labelsPath)
-    // full-table handle — only the flat-store fallback and the
-    // out-of-place merged copy force a corpus read; the point lookups
-    // below are bucket-pruned (round-12 verdict #2)
-    lazy val labels = readLabels(spark, labelsPath)
+    val labelsRow = labelsMeta(spark, labelsPath)
+    val (n, cb) = (labelsRow.getAs[Int]("num_buckets"),
+      labelsRow.getAs[Int]("canon_buckets"))
+    val mf = lshMeta(spark, indexPath).getAs[Int]("feature_parts")
     // the rids checkpoint carries their LABEL-bucket ids (the
     // touched-canonical lookup reads only the buckets holding a
     // retracted id) and their FEATURE-partition ids (the indexed-rid
@@ -1951,10 +1713,8 @@ object Dedup {
     // Observation riding the one action
     val (rids0, nRids, ridSets) = checkpointWithBucketSets(
       retract.select(col(idCol).as("doc")).distinct(), "retract_rids",
-      nb.map(n => "lbk" -> pmod(hash(col("doc")), lit(n))).toSeq ++
-        lshFeatureParts(spark, indexPath).map(mf =>
-          "fbk" -> pmod(hash(col("doc")), lit(mf))).toSeq)
-    val ridBk = if (nb.isDefined) ridSets.get("lbk") else None
+      Seq("lbk" -> pmod(hash(col("doc")), lit(n)),
+        "fbk" -> pmod(hash(col("doc")), lit(mf))))
     val rids = hintIfSmall(rids0, nRids, broadcastRowLimit)
 
     // touched components and their member/survivor doc sets — all
@@ -1963,7 +1723,7 @@ object Dedup {
     // jobs). The affected-canonical checkpoint also carries the
     // canonical-bucket ids the MEMBER lookup prunes on.
     val (affCanon0, nAff, affBk) = checkpointWithCountAndBuckets(
-      readLabelsForDocs(spark, labelsPath, rids0, ridBk)
+      readLabelsForDocs(spark, labelsPath, rids0, ridSets.get("lbk"))
         .join(rids, Seq("doc"), "left_semi")
         .select("canonical_id").distinct(), "retract_canon",
       "canonical_id", cb)
@@ -1974,7 +1734,7 @@ object Dedup {
     // secondary index that makes a by-component read O(touched buckets)
     // where the doc-hash layout scatters members corpus-wide.
     val (members0, nMembers) = checkpointWithCount(
-      membersOfCanonicals(spark, labelsPath, affCanon0, affBk)
+      membersOfCanonicals(spark, labelsPath, affCanon0, Some(affBk))
         .join(affCanon, Seq("canonical_id"), "left_semi")
         .select("doc"), "retract_members")
     // the survivor checkpoint also carries the survivors' FEATURE
@@ -1982,7 +1742,7 @@ object Dedup {
     // only those dirs of the stored features
     val (survivors0, nSurv, survFBk) = checkpointWithCountAndBuckets(
       members0.join(rids, Seq("doc"), "left_anti"), "retract_survivors",
-      "doc", lshFeatureParts(spark, indexPath))
+      "doc", mf)
     val survivors = hintIfSmall(survivors0, nSurv, broadcastRowLimit)
 
     // re-derive the touched components' surviving edges from the STORED
@@ -2010,71 +1770,33 @@ object Dedup {
     val relabeled = canonicalize(survivors0, "doc", pairs)
       .transform(ArtifactStore.eagerCheckpoint)
 
-    // full merged table — only the flat-store and out-of-place paths
-    // pay this corpus-sized materialization
-    lazy val merged = labels
-      .join(affCanon, Seq("canonical_id"), "left_anti")
-      .select(col("doc"), col("canonical_id"), col("is_keeper"))
-      .unionByName(relabeled)
-      .transform(ArtifactStore.eagerCheckpoint)
-
-    // index mutation first (idempotent), labels swap last — the same
-    // recovery-by-retry contract as absorbIntoLabels' write phase
-    if (outIndex == indexPath) {
-      // tombstone only ids the index actually HOLDS (round-11 advisory):
-      // an id never indexed (null-text doc, or a takedown for a doc that
-      // was never crawled) would otherwise sit in the tombstone store
-      // forever and fail a future absorb's clash guard for a genuinely
-      // new doc reusing the id — forcing a corpus-sized compact for a
-      // retraction that never touched the index
-      val indexedRids = storedFeaturesForDocs(spark, indexPath,
-          if (lshFeatureParts(spark, indexPath).isDefined)
-            ridSets.get("fbk")
-          else None)
-        .select("doc").join(rids, Seq("doc"), "left_semi")
-        .distinct().transform(ArtifactStore.eagerCheckpoint)
-      ArtifactStore.appendTombstones(spark, outIndex, "doc", indexedRids)
-    } else {
-      // audit copy: physically compacted, base untouched
-      indexStore(spark, indexPath, "features").drop("f")
-        .join(rids, Seq("doc"), "left_anti")
-        .write.mode("overwrite").parquet(s"$outIndex/features")
-      indexStore(spark, indexPath, "buckets").drop("h")
-        .join(rids, Seq("doc"), "left_anti")
-        .write.mode("overwrite").parquet(s"$outIndex/buckets")
-      // layout fields stripped for the same reason as absorb's audit
-      // copy: this copy is flat
-      if (ArtifactStore.exists(spark, s"$indexPath/meta")) {
-        spark.read.parquet(s"$indexPath/meta")
-          .drop("bucket_parts", "feature_parts")
-          .write.mode("overwrite").parquet(s"$outIndex/meta")
-        invalidateIndexMeta(spark, outIndex)
-      }
-      None
-    }
-    nb match {
-      case Some(n) if outLabels == labelsPath =>
-        // O(touched) path: drop every touched component's rows from
-        // exactly the buckets that hold one, re-insert the survivors
-        // under their new canonicals — retracted docs simply have no
-        // upsert row. Idempotent under replay: a second pass finds the
-        // rids gone from the labels, so no component is touched. Both
-        // geometries mutate under ONE marker: the canonical-keyed
-        // twin's touched buckets are the affected OLD canonicals (all
-        // member rows leave them) plus the survivors' new canonicals.
-        val geoms = ArtifactStore.BucketGeom("b", "doc", n, members0) +:
-          cb.map(m => ArtifactStore.BucketGeom("c", "canonical_id", m,
-            affCanon0.unionByName(
-              relabeled.select(col("canonical_id"))))).toSeq
-        ArtifactStore.mutateBucketsMulti(spark, outLabels, "doc", geoms,
-          hintIfSmall(members0, nMembers, broadcastRowLimit), relabeled)
-        ()
-      case Some(n) =>
-        writeLabelsBucketed(spark, merged, outLabels, n)
-      case None =>
-        ArtifactStore.writeParquetStaged(spark, merged, outLabels)
-    }
-    readLabels(spark, outLabels)
+    // index mutation first (idempotent), labels last — the same
+    // recovery-by-retry contract as absorbIntoLabels' write phase.
+    // Tombstone only ids the index actually HOLDS (round-11 advisory):
+    // an id never indexed (null-text doc, or a takedown for a doc that
+    // was never crawled) would otherwise sit in the tombstone store
+    // forever and fail a future absorb's clash guard for a genuinely
+    // new doc reusing the id — forcing a corpus-sized compact for a
+    // retraction that never touched the index
+    val indexedRids = storedFeaturesForDocs(spark, indexPath,
+        ridSets("fbk"))
+      .select("doc").join(rids, Seq("doc"), "left_semi")
+      .distinct().transform(ArtifactStore.eagerCheckpoint)
+    ArtifactStore.appendTombstones(spark, indexPath, "doc", indexedRids)
+    // O(touched) label mutation: drop every touched component's rows
+    // from exactly the buckets that hold one, re-insert the survivors
+    // under their new canonicals — retracted docs simply have no upsert
+    // row. Idempotent under replay: a second pass finds the rids gone
+    // from the labels, so no component is touched. Both geometries
+    // mutate under ONE marker: the canonical-keyed twin's touched
+    // buckets are the affected OLD canonicals (all member rows leave
+    // them) plus the survivors' new canonicals.
+    ArtifactStore.mutateBucketsMulti(spark, labelsPath, "doc",
+      Seq(ArtifactStore.BucketGeom("b", "doc", n, members0),
+        ArtifactStore.BucketGeom("c", "canonical_id", cb,
+          affCanon0.unionByName(relabeled.select(col("canonical_id"))))),
+      hintIfSmall(members0, nMembers, broadcastRowLimit), relabeled)
+    readLabels(spark, labelsPath)
   }
 
   /** Fold the tombstone set into the index stores physically — the
@@ -2088,14 +1810,11 @@ object Dedup {
     * rows), and a retry completes whatever a crash left undone.
     */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Unit =
-    ArtifactStore.compact(spark, indexPath, Seq("features", "buckets"),
-      "doc",
-      partitionCols =
-        lshBucketParts(spark, indexPath)
-          .map(_ => Map("buckets" -> Seq("h"))).getOrElse(Map.empty) ++
-        lshFeatureParts(spark, indexPath)
-          .map(_ => Map("features" -> Seq("f"))).getOrElse(Map.empty))
+      indexPath: String): Unit = {
+    lshMeta(spark, indexPath)
+    ArtifactStore.compact(spark, indexPath, "doc",
+      Seq("features" -> "f", "buckets" -> "h"))
+  }
 
   /** Exact n-gram Jaccard dedup via inverted-index join: docs sharing at
     * least one NON-FLOODED character-n-gram are verified exactly. For

@@ -161,15 +161,12 @@ object VectorIndex {
   /** The sidecar's partition key. */
   private def idPartOf(mi: Int) = pmod(hash(col("vec_id")), lit(mi))
 
-  /** The sidecar's part count — `Some(mi)` on stores built/retrained
-    * since the sidecar round; `None` on earlier stores, whose by-id
-    * reads keep the full-scan fallback. */
-  private def idParts(spark: SparkSession,
-      indexPath: String): Option[Int] =
-    ArtifactStore.cachedMeta(spark, indexPath).flatMap(r =>
-      if (r.schema.fieldNames.contains("id_parts"))
-        Some(r.getAs[Int]("id_parts"))
-      else None)
+  /** The index's meta row, checked against its one layout: vectors in
+    * `cell=` dirs, the `ids` sidecar in `i=` dirs (`id_parts`), and the
+    * `epochs` store. */
+  private def ivfMeta(spark: SparkSession, indexPath: String): Row =
+    ArtifactStore.layoutMeta(spark, indexPath, "VectorIndex.buildIvfIndex",
+      "nlist", "id_parts")
 
   private def writeIdsSidecar(spark: SparkSession, path: String,
       rows: DataFrame, mi: Int, overwrite: Boolean): Unit = {
@@ -234,23 +231,14 @@ object VectorIndex {
     * nearest stored cells — the shared exact-scoring core of
     * `probeIvfIndex` (top-k over it) and `hardNegativesFromIvfIndex`
     * (dup-band filter, THEN top-k). */
-  /** Whether the index's vectors substore is laid out in cell=<k>
-    * partition dirs (every store built/retrained since the pruning
-    * round). Flat stores from earlier generations keep the full-scan
-    * read path. */
-  private def cellPartitioned(spark: SparkSession,
-      indexPath: String): Boolean =
-    ArtifactStore.hasPartitionDirs(spark, s"$indexPath/vectors", "cell")
-
   private def probeScored(queries: DataFrame, indexPath: String,
       idCol: String, vecCol: String, nprobe: Int,
       keep: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     val spark = queries.sparkSession
-    ArtifactStore.cachedMeta(spark, indexPath).foreach { m =>
-      require(nprobe <= m.getAs[Int]("nlist"),
-        s"probeIvfIndex: nprobe=$nprobe exceeds the stored nlist=" +
-          s"${m.getAs[Int]("nlist")} at $indexPath")
-    }
+    val nlist = ivfMeta(spark, indexPath).getAs[Int]("nlist")
+    require(nprobe <= nlist,
+      s"probeIvfIndex: nprobe=$nprobe exceeds the stored nlist=$nlist " +
+        s"at $indexPath")
     val codebook = ArtifactStore.readParquetCached(spark,
       s"$indexPath/centroids", Seq(s"$indexPath/centroids"))
     val q = nonZero(queries, vecCol).select(col(idCol).as("query_id"),
@@ -270,20 +258,13 @@ object VectorIndex {
     // store, so a probe reads ≤ |cells| of the corpus's cell dirs
     // instead of all of them. The nprobe restriction used to be applied
     // INSIDE the join, after a full corpus-sized scan.
-    val (probes, vectors) =
-      if (cellPartitioned(spark, indexPath)) {
-        val p = probes0.localCheckpoint()
-        val cells = p.select("cell").distinct().collect().map(_.get(0))
-        val cellType = codebook.schema("cid").dataType
-        val pruned = ArtifactStore.readParquetCached(spark,
-            s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
-          .filter(col("cell").isin(cells.toIndexedSeq: _*))
-          .withColumn("cell", col("cell").cast(cellType))
-        (p, ArtifactStore.tombstoneFiltered(spark, indexPath, "vec_id",
-          pruned))
-      } else
-        (probes0,
-          ArtifactStore.readStore(spark, indexPath, "vectors", "vec_id"))
+    val probes = probes0.localCheckpoint()
+    val cells = probes.select("cell").distinct().collect().map(_.get(0))
+    val vectors = ArtifactStore.tombstoneFiltered(spark, indexPath, "vec_id",
+      ArtifactStore.readParquetCached(spark,
+          s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
+        .filter(col("cell").isin(cells.toIndexedSeq: _*))
+        .withColumn("cell", col("cell").cast(codebook.schema("cid").dataType)))
     // metadata predicate (filtered search): on the STORED columns, ahead
     // of the join — Catalyst pushes stored-column conjuncts into the
     // (already cell-pruned) parquet scan
@@ -332,27 +313,23 @@ object VectorIndex {
     * can only live in the cell this batch just computed — the presence
     * check reads those dirs, not the corpus. The drain replay guard's
     * per-micro-batch read (the vector twin of the labels drain's
-    * `readLabelsForDocs` guard). Flat stores fall back to the full
-    * tombstone-filtered read.
+    * `readLabelsForDocs` guard).
     */
   def searchablePresentIds(batch: DataFrame, idCol: String,
       vecCol: String, indexPath: String): DataFrame = {
     val spark = batch.sparkSession
+    ivfMeta(spark, indexPath)
     val vecs = nonZero(batch, vecCol).select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("vec"))
     val ids = vecs.select("vec_id").distinct()
-    val stored =
-      if (cellPartitioned(spark, indexPath)) {
-        val cells = assign(vecs,
-            ArtifactStore.readParquetCached(spark,
-              s"$indexPath/centroids", Seq(s"$indexPath/centroids")))
-          .select("cell").distinct().collect().map(_.get(0)).toIndexedSeq
-        ArtifactStore.tombstoneFiltered(spark, indexPath, "vec_id",
-          ArtifactStore.readParquetCached(spark,
-              s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
-            .filter(col("cell").isin(cells: _*)))
-      } else ArtifactStore.readStore(spark, indexPath, "vectors",
-        "vec_id")
+    val cells = assign(vecs,
+        ArtifactStore.readParquetCached(spark,
+          s"$indexPath/centroids", Seq(s"$indexPath/centroids")))
+      .select("cell").distinct().collect().map(_.get(0)).toIndexedSeq
+    val stored = ArtifactStore.tombstoneFiltered(spark, indexPath, "vec_id",
+      ArtifactStore.readParquetCached(spark,
+          s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
+        .filter(col("cell").isin(cells: _*)))
     stored.select("vec_id")
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
   }
@@ -363,11 +340,14 @@ object VectorIndex {
     * embed-and-absorb loop is replay-safe. Ids must be disjoint from
     * the indexed corpus; a batch id colliding with a TOMBSTONED id
     * fails loud (compact first — the re-crawl supersede path), exactly
-    * like `Dedup.absorbIntoLabels`.
+    * like `Dedup.absorbIntoLabels`. The index must carry the current
+    * layout (`ids` sidecar, `epochs` store, `id_parts` in the meta); an
+    * older one fails with a `StoreLayoutException` — rebuild it.
     */
   def absorbIntoIvfIndex(batch: DataFrame, idCol: String, vecCol: String,
       indexPath: String): Unit = {
     val spark = batch.sparkSession
+    val mi = ivfMeta(spark, indexPath).getAs[Int]("id_parts")
     val vecs = nonZero(batch, vecCol).select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("vec"))
     if (ArtifactStore.hasTombstones(spark, indexPath)) {
@@ -385,116 +365,72 @@ object VectorIndex {
     // number for the rows its anti-join skips plus the remainder, so
     // the batch stays ONE epoch; a replay after both writes appends no
     // vectors and at worst burns an unused epoch number, which the
-    // audit (grouping by the VECTORS' epochs) never shows. Indexes
-    // written before the epoch machinery stay absorbable (no stamp —
-    // the audit folds them into epoch 0).
-    val assigned0 = assign(vecs,
-      ArtifactStore.readParquetCached(spark, s"$indexPath/centroids",
-        Seq(s"$indexPath/centroids")))
-    val nextEpoch =
-      if (ArtifactStore.exists(spark, s"$indexPath/epochs"))
-        Some(ArtifactStore.readParquetCached(spark,
-          s"$indexPath/epochs", Seq(s"$indexPath/epochs"))
-          .agg(coalesce(max("epoch"), lit(0)).cast("int"))
-          .head().getInt(0) + 1)
-      else None
-    // the batch's cell set rides the checkpoint action via an
-    // Observation (zero extra jobs — the checkpointWithBucketSets
-    // pattern); it prunes the legacy (no-sidecar) present-check below
-    val obs = org.apache.spark.sql.Observation(
-      "ivf_absorb_" + java.util.UUID.randomUUID().toString.take(8))
-    val assigned = nextEpoch.fold(assigned0)(e =>
-        assigned0.withColumn("epoch", lit(e)))
-      .observe(obs, collect_set(col("cell")).as("__cells"))
+    // audit (grouping by the VECTORS' epochs) never shows.
+    val nextEpoch = ArtifactStore.readParquetCached(spark,
+        s"$indexPath/epochs", Seq(s"$indexPath/epochs"))
+      .agg(coalesce(max("epoch"), lit(0)).cast("int"))
+      .head().getInt(0) + 1
+    val assigned = assign(vecs,
+        ArtifactStore.readParquetCached(spark, s"$indexPath/centroids",
+          Seq(s"$indexPath/centroids")))
+      .withColumn("epoch", lit(nextEpoch))
       .transform(ArtifactStore.eagerCheckpoint)
-    // collect_set materializes as mutable.ArraySeq — convert, don't
-    // cast to the immutable default Seq
-    val cells = Option(obs.get("__cells"))
-      .map(_.asInstanceOf[scala.collection.Seq[Any]].toIndexedSeq)
-      .getOrElse(IndexedSeq())
-    val miOpt = idParts(spark, indexPath)
-      .filter(_ => ArtifactStore.exists(spark, s"$indexPath/ids"))
-    miOpt match {
-      case Some(mi) =>
-        // CONTENT-INDEPENDENT present check (round-13 advisory): the
-        // sidecar is keyed by id hash, so an out-of-contract re-ingest
-        // of a committed id with NEW vector content (whose cell differs
-        // — the cell-pruned check would miss it) is still caught and
-        // skipped, the benign pre-pruning behavior. One pruned read of
-        // the batch ids' own i=<k> dirs; the present row set rides a
-        // checkpoint with its count as an Observation.
-        val pObs = org.apache.spark.sql.Observation(
-          "ivf_present_" + java.util.UUID.randomUUID().toString.take(8))
-        val presentRows = sidecarForIds(spark, indexPath, mi,
-            assigned.select("vec_id"))
-          .join(broadcast(assigned.select("vec_id").distinct()),
-            Seq("vec_id"), "left_semi")
-          .select("vec_id", "cell")
-          .observe(pObs, count(lit(1)).as("__n"))
-          .transform(ArtifactStore.eagerCheckpoint)
-        val nPresent = Option(pObs.get("__n"))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        val present = presentRows.select("vec_id").distinct()
-        // WRITE ORDER: sidecar FIRST, vectors second. The sidecar is
-        // the id-keyed truth the present check reads, so a crash
-        // between the two appends leaves the retry's present set
-        // CONTAINING the batch — and the vectors append below derives
-        // its own present set from the sidecar's committed CELLS, so it
-        // still completes the missing vector rows. (The drain replay
-        // guard deliberately reads the vectors store, written LAST —
-        // a sidecar-only id must read as not-yet-searchable.)
-        ArtifactStore.appendMissing(spark, indexPath, "ids", "vec_id",
-          assigned.select("vec_id"),
-          assigned.select(col("vec_id"), col("cell"))
-            .withColumn("i", idPartOf(mi)),
-          partitionCols = Seq("i"), presentKeys = Some(present))
-        // vectors present set: a committed batch row can only exist for
-        // an id the sidecar held BEFORE this absorb (the sidecar commits
-        // in one atomic job), and its committed cell is IN the present
-        // sidecar rows — so the normal path (nothing present) pays ZERO
-        // extra reads, and the crash-retry path reads only the present
-        // ids' committed cell dirs.
-        val vecPresent =
-          if (nPresent == 0L) present
-          else {
-            val pCells = presentRows.select("cell").distinct()
-              .collect().map(_.get(0)).toIndexedSeq
-            ArtifactStore.readParquetCached(spark,
-                s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
-              .filter(col("cell").isin(pCells: _*))
-              .select("vec_id")
-              .join(broadcast(present), Seq("vec_id"), "left_semi")
-              .distinct().transform(ArtifactStore.eagerCheckpoint)
-          }
-        ArtifactStore.appendMissing(spark, indexPath, "vectors", "vec_id",
-          assigned.select("vec_id"), assigned,
-          partitionCols = Seq("cell"), presentKeys = Some(vecPresent))
-      case None =>
-        // layout-preserving append: a cell-partitioned store grows new
-        // part-files inside the batch's cell dirs (probe pruning stays
-        // valid); pre-partitioning flat stores keep appending flat.
-        // The present-check prunes to the batch's own cells: the
-        // codebook is FROZEN, so a previously-committed row for a batch
-        // id was assigned to the same cell this batch just computed
-        // (sound for crash-retry replay; the sidecar path above is what
-        // closes the content-dependence hole for newer stores).
-        if (cellPartitioned(spark, indexPath)) {
-          ArtifactStore.appendMissing(spark, indexPath, "vectors", "vec_id",
-            assigned.select("vec_id"), assigned,
-            partitionCols = Seq("cell"),
-            presentSource = Some(
-              ArtifactStore.readParquetCached(spark,
-                  s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
-                .filter(col("cell").isin(cells: _*))))
-        } else
-          ArtifactStore.appendMissing(spark, indexPath, "vectors", "vec_id",
-            assigned.select("vec_id"), assigned)
-    }
-    nextEpoch.foreach { e =>
-      import spark.implicits._
-      Seq(e).toDF("epoch").write.mode("append")
-        .parquet(s"$indexPath/epochs")
-    }
+    // CONTENT-INDEPENDENT present check (round-13 advisory): the sidecar
+    // is keyed by id hash, so an out-of-contract re-ingest of a committed
+    // id with NEW vector content (whose cell differs — a cell-pruned
+    // check would miss it) is still caught and skipped. One pruned read
+    // of the batch ids' own i=<k> dirs; the present row set rides a
+    // checkpoint with its count as an Observation.
+    val pObs = org.apache.spark.sql.Observation(
+      "ivf_present_" + java.util.UUID.randomUUID().toString.take(8))
+    val presentRows = sidecarForIds(spark, indexPath, mi,
+        assigned.select("vec_id"))
+      .join(broadcast(assigned.select("vec_id").distinct()),
+        Seq("vec_id"), "left_semi")
+      .select("vec_id", "cell")
+      .observe(pObs, count(lit(1)).as("__n"))
+      .transform(ArtifactStore.eagerCheckpoint)
+    val nPresent = Option(pObs.get("__n"))
+      .map(_.asInstanceOf[Long]).getOrElse(0L)
+    val present = presentRows.select("vec_id").distinct()
+    // WRITE ORDER: sidecar FIRST, vectors second. The sidecar is the
+    // id-keyed truth the present check reads, so a crash between the two
+    // appends leaves the retry's present set CONTAINING the batch — and
+    // the vectors append below derives its own present set from the
+    // sidecar's committed CELLS, so it still completes the missing
+    // vector rows. (The drain replay guard deliberately reads the vectors
+    // store, written LAST — a sidecar-only id must read as
+    // not-yet-searchable.)
+    ArtifactStore.appendMissing(spark, indexPath, "ids", "vec_id",
+      assigned.select("vec_id"),
+      assigned.select(col("vec_id"), col("cell"))
+        .withColumn("i", idPartOf(mi)),
+      partitionCols = Seq("i"), presentKeys = Some(present))
+    // vectors present set: a committed batch row can only exist for an
+    // id the sidecar held BEFORE this absorb (the sidecar commits in one
+    // atomic job), and its committed cell is IN the present sidecar rows
+    // — so the normal path (nothing present) pays ZERO extra reads, and
+    // the crash-retry path reads only the present ids' committed cell
+    // dirs. New rows land inside their cell dirs, so probe pruning stays
+    // valid.
+    val vecPresent =
+      if (nPresent == 0L) present
+      else {
+        val pCells = presentRows.select("cell").distinct()
+          .collect().map(_.get(0)).toIndexedSeq
+        ArtifactStore.readParquetCached(spark,
+            s"$indexPath/vectors", Seq(s"$indexPath/vectors"))
+          .filter(col("cell").isin(pCells: _*))
+          .select("vec_id")
+          .join(broadcast(present), Seq("vec_id"), "left_semi")
+          .distinct().transform(ArtifactStore.eagerCheckpoint)
+      }
+    ArtifactStore.appendMissing(spark, indexPath, "vectors", "vec_id",
+      assigned.select("vec_id"), assigned,
+      partitionCols = Seq("cell"), presentKeys = Some(vecPresent))
+    import spark.implicits._
+    Seq(nextEpoch).toDF("epoch").write.mode("append")
+      .parquet(s"$indexPath/epochs")
   }
 
   /** Codebook DRIFT audit (round-11 verdict #5) — the retrain trigger
@@ -508,19 +444,16 @@ object VectorIndex {
     * shifted ingest distribution raises the error trend and piles its
     * vectors into the few cells nearest the shift — the two curves a
     * maintenance loop alarms on to schedule `buildIvfIndex` anew
-    * (spec-planted both ways; strict-gated as x171). Pre-epoch stores
-    * read as one epoch-0 generation. Returns (epoch, vectors,
+    * (spec-planted both ways; strict-gated as x171). Returns (epoch, vectors,
     * avg_err_x1m, max_cell_rows, max_cell_share_x10000).
     */
   def auditIvfDrift(spark: SparkSession, indexPath: String): DataFrame = {
+    ivfMeta(spark, indexPath)
     val vectors = ArtifactStore.readStore(spark, indexPath, "vectors",
       "vec_id")
     val centroids = ArtifactStore.readParquetCached(spark,
       s"$indexPath/centroids", Seq(s"$indexPath/centroids"))
-    val withEpoch =
-      if (vectors.schema.fieldNames.contains("epoch")) vectors
-      else vectors.withColumn("epoch", lit(0))
-    val err = withEpoch
+    val err = vectors
       .join(broadcast(centroids), col("cell") === col("cid"))
       .select(col("epoch"), col("cell"),
         floor((lit(1.0) - Similarity.cosine(col("vec"), col("centroid")))
@@ -545,6 +478,7 @@ object VectorIndex {
   def retractFromIvfIndex(retract: DataFrame, idCol: String,
       indexPath: String): Unit = {
     val spark = retract.sparkSession
+    val mi = ivfMeta(spark, indexPath).getAs[Int]("id_parts")
     val rids = retract.select(col(idCol).as("vec_id")).distinct()
       .transform(ArtifactStore.eagerCheckpoint)
     // tombstone only ids the index actually HOLDS (the round-11 labels
@@ -556,33 +490,20 @@ object VectorIndex {
     // over the VECTOR, so cell pruning can't apply — the sidecar's
     // i = pmod(hash(vec_id)) dirs can, making the per-takedown read
     // O(takedown × bucketBytes) instead of a full vec_id column scan of
-    // the corpus. Sidecar-less legacy stores keep the full scan.
-    val held = idParts(spark, indexPath)
-      .filter(_ => ArtifactStore.exists(spark, s"$indexPath/ids"))
-      .map(mi => sidecarForIds(spark, indexPath, mi, rids))
-      .getOrElse(ArtifactStore.readParquetCached(spark,
-        s"$indexPath/vectors", Seq(s"$indexPath/vectors")))
-    val indexed = held
+    // the corpus.
+    val indexed = sidecarForIds(spark, indexPath, mi, rids)
       .select("vec_id").join(broadcast(rids), Seq("vec_id"), "left_semi")
       .distinct().transform(ArtifactStore.eagerCheckpoint)
     ArtifactStore.appendTombstones(spark, indexPath, "vec_id", indexed)
   }
 
-  /** Fold tombstones into the vectors store physically (layout-
-    * preserving: a cell-partitioned store compacts back into cell
-    * dirs); after it, retracted ids may be re-ingested. */
+  /** Fold tombstones into the vectors store and the ids sidecar
+    * physically (back into their cell and id-hash dirs); after it,
+    * retracted ids may be re-ingested. */
   def compactIvfIndex(spark: SparkSession, indexPath: String): Unit = {
-    val subs =
-      if (ArtifactStore.exists(spark, s"$indexPath/ids"))
-        Seq("vectors", "ids")
-      else Seq("vectors")
-    ArtifactStore.compact(spark, indexPath, subs, "vec_id",
-      partitionCols =
-        (if (cellPartitioned(spark, indexPath))
-          Map("vectors" -> Seq("cell"))
-        else Map.empty[String, Seq[String]]) ++
-        (if (subs.contains("ids")) Map("ids" -> Seq("i"))
-        else Map.empty[String, Seq[String]]))
+    ivfMeta(spark, indexPath)
+    ArtifactStore.compact(spark, indexPath, "vec_id",
+      Seq("vectors" -> "cell", "ids" -> "i"))
   }
 
   /** RETRAIN — what consumes `auditIvfDrift`'s alarm (round-12 verdict
@@ -618,11 +539,7 @@ object VectorIndex {
       trainIterations: Int = 4): Unit = {
     require(trainIterations >= 1,
       "retrainIvfIndex: trainIterations must be >= 1")
-    val nlist = ArtifactStore.cachedMeta(spark, indexPath)
-      .map(_.getAs[Int]("nlist"))
-      .getOrElse(throw new IllegalStateException(
-        s"retrainIvfIndex: no meta store at $indexPath — retrain needs " +
-          "the build-parameter contract (nlist)"))
+    val nlist = ivfMeta(spark, indexPath).getAs[Int]("nlist")
     import spark.implicits._
     // live vectors only (tombstone-filtered), materialized BEFORE the
     // swap unlinks the files this plan reads

@@ -873,7 +873,7 @@ object StreamOps {
     val pObs = org.apache.spark.sql.Observation(
       "drain_present_" + java.util.UUID.randomUUID().toString.take(8))
     val present = graft.operators.ArtifactStore.labeled(s, "drain_replay_guard") {
-      graft.operators.Dedup.readLabelsForDocs(s, labelsPath, ids, bk)
+      graft.operators.Dedup.readLabelsForDocs(s, labelsPath, ids, Some(bk))
         .join(broadcast(ids), Seq("doc"), "left_semi")
         .select("doc")
         // distinct BEFORE the observed count (round-16 advisory): the

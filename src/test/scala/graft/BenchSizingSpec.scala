@@ -45,21 +45,31 @@ class BenchSizingSpec extends SparkSpec {
   // streaming drains (StreamOps.drain), the store's byte count
   // (ArtifactStore.dirBytes), the driver thread that carries the
   // caller's Spark thread-locals (DriverThread.start), the one listener
-  // that records jobs (Probe.JobRecorder) and the one read of a finished
-  // drain's progress (StreamOps.runAppendDrain). Row: (pattern, the one
-  // file allowed to contain it once, what the pattern does).
+  // that records jobs (Probe.JobRecorder), the one read of a finished
+  // drain's progress (StreamOps.runAppendDrain) and the pinned partition
+  // count ahead of a partitioned store write, which keeps AQE from
+  // coalescing it onto one task (ArtifactStore.writeRepartition). Row:
+  // (pattern, the one file allowed to contain it once, what the pattern
+  // does).
   private val oneSite = Seq(
     ("SparkSession.builder", "GraftSession.scala", "builds a SparkSession"),
     ("awaitTermination(", "StreamOps.scala", "blocks on a streaming query"),
     (".getContentSummary(", "ArtifactStore.scala", "counts bytes under a path"),
     ("withThreadLocalCaptured(", "DriverThread.scala", "submits Spark work from a driver thread"),
     ("addSparkListener(", "Probe.scala", "attaches a Spark listener"),
-    ("recentProgress", "StreamOps.scala", "reads a streaming query's progress"))
+    ("recentProgress", "StreamOps.scala", "reads a streaming query's progress"),
+    ("numShufflePartitions", "ArtifactStore.scala", "pins a store write's partition count"))
 
   for ((pattern, file, what) <- oneSite)
     test(s"src/main $what in exactly one place, ${file.stripSuffix(".scala")}") {
       assert(hitsInMain(java.util.regex.Pattern.quote(pattern).r) === Seq(file))
     }
+
+  // Every artifact mutation runs in place on its family's one store
+  // layout; a caller that must keep the base copies the roots first (x152).
+  test("src/main offers no out-of-place artifact mutation") {
+    assert(hitsInMain("outLabelsPath|outIndexPath".r) === Seq.empty)
+  }
 
   // Hadoop's located listings (`listLocatedStatus`, and `listFiles(path,
   // recursive)` — java.io.File's listFiles takes at most a filter) build

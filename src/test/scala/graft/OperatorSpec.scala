@@ -385,17 +385,16 @@ class OperatorSpec extends SparkSpec with Matchers {
         shingleSize = 3, numHashes = 16, bands = 4, threshold = 0.5)
     }
     mismatch.getMessage should include("built with shingleSize=3, numHashes=16, bands=8")
-    // a pre-meta index (no meta dir) skips the check — the caller's
-    // contract, as before. The cache must be dropped to simulate a
-    // fresh JVM looking at this path: the build above seeded it.
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(s"$path/meta"))
+    // an index with no meta dir has no layout to read through: the
+    // probe fails with the named layout error. The cache must be dropped
+    // to simulate a fresh JVM looking at this path: the build above
+    // seeded it.
+    rmDir(s"$path/meta")
     Dedup.invalidateIndexMeta(spark, path)
-    Dedup.probeLshIndex(batch, path, "doc_id", "text",
-      shingleSize = 3, numHashes = 16, bands = 4, threshold = 0.5)
-      .count() // no throw
+    intercept[graft.operators.StoreLayoutException] {
+      Dedup.probeLshIndex(batch, path, "doc_id", "text",
+        shingleSize = 3, numHashes = 16, bands = 4, threshold = 0.5)
+    }.getMessage should include("Dedup.buildLshIndex")
   }
 
   test("index meta is read at most once per (JVM, path); the build seeds the cache") {
@@ -469,11 +468,12 @@ class OperatorSpec extends SparkSpec with Matchers {
       shingleSize = 3, numHashes = 16, bands = 8, threshold = 0.5)
     Dedup.buildLshIndex(corpus, "doc_id", "text", s"$root/idx",
       shingleSize = 3, numHashes = 16, bands = 8)
+    // absorb in place into a copy, leaving the base untouched
+    copyDir(s"$root/labels", s"$root/labels2")
+    copyDir(s"$root/idx", s"$root/idx2")
     val inc = Dedup.absorbIntoLabels(batch, "doc_id", "text",
-        s"$root/labels", s"$root/idx", shingleSize = 3, numHashes = 16,
-        bands = 8, threshold = 0.5,
-        outLabelsPath = Some(s"$root/labels2"),
-        outIndexPath = Some(s"$root/idx2"))
+        s"$root/labels2", s"$root/idx2", shingleSize = 3, numHashes = 16,
+        bands = 8, threshold = 0.5)
       .orderBy("doc").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     Dedup.buildCanonicalLabels(corpus.unionByName(batch), "doc_id", "text",
@@ -563,10 +563,11 @@ class OperatorSpec extends SparkSpec with Matchers {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
       .filter(kv => Seq(5L, 10L, 20L).contains(kv._1)) shouldBe
       Map(5L -> 5L, 10L -> 5L, 20L -> 5L)
-    val out = Dedup.retractFromLabels(retract, "doc_id", s"$root/labels",
-        s"$root/idx", threshold = 0.5,
-        outLabelsPath = Some(s"$root/labels2"),
-        outIndexPath = Some(s"$root/idx2"))
+    // retract in place from a copy, leaving the base untouched
+    copyDir(s"$root/labels", s"$root/labels2")
+    copyDir(s"$root/idx", s"$root/idx2")
+    val out = Dedup.retractFromLabels(retract, "doc_id", s"$root/labels2",
+        s"$root/idx2", threshold = 0.5)
       .orderBy("doc").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
     Dedup.buildCanonicalLabels(
@@ -581,9 +582,6 @@ class OperatorSpec extends SparkSpec with Matchers {
     val canon = out.map(r => r._1 -> r._2).toMap
     canon shouldBe Map(10L -> 10L, 20L -> 20L, 30L -> 30L, 65L -> 65L,
       70L -> 70L, 71L -> 70L)
-    // the out-of-place index copy is PHYSICALLY compacted
-    spark.read.parquet(s"$root/idx2/features").select("doc").collect()
-      .map(_.getLong(0)).sorted.toSeq shouldBe Seq(10L, 20L, 30L, 65L, 70L, 71L)
     Dedup.probeLshIndex(docs(900L -> z), s"$root/idx2", "doc_id", "text",
         shingleSize = 3, numHashes = 16, bands = 8, threshold = 0.5)
       .select("doc_b").collect().map(_.getLong(0)).toSeq shouldBe Seq(65L)
@@ -751,34 +749,40 @@ class OperatorSpec extends SparkSpec with Matchers {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select("vec_id", "embedding")
     val root = java.nio.file.Files.createTempDirectory("graft-ivfcells").toString
-    val (cells, flat) = (s"$root/cells", s"$root/flat")
-    VectorIndex.buildIvfIndex(emb, "vec_id", "embedding", cells, nlist = 8)
-    // the control: a copy of the same store with no cell=<k> dirs, which
-    // routes the probe down the flat-store full scan
-    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(cells),
-      new java.io.File(flat))
-    val vectors = spark.read.parquet(s"$flat/vectors").localCheckpoint()
-    graft.operators.ArtifactStore.deletePath(spark, s"$flat/vectors")
-    vectors.write.parquet(s"$flat/vectors")
+    VectorIndex.buildIvfIndex(emb, "vec_id", "embedding", root, nlist = 8)
     // one query held on the driver, so neither run reads it from a file
     val q = Seq((-1L, emb.filter(col("vec_id") === 7L).head()
         .getAs[scala.collection.Seq[Float]]("embedding").toArray))
       .toDF("vec_id", "embedding")
-    def probe(idx: String) = org.apache.spark.sql.graft.InputBytesMeter
-      .measureIO(spark.sparkContext) {
-        VectorIndex.probeIvfIndex(q, idx, "vec_id", "embedding", k = 5,
+    val (prunedTop, _, prunedRows) = org.apache.spark.sql.graft
+      .InputBytesMeter.measureIO(spark.sparkContext) {
+        VectorIndex.probeIvfIndex(q, root, "vec_id", "embedding", k = 5,
           nprobe = 2).orderBy("rank").collect().map(_.getLong(2)).toSeq
       }
-    val (prunedTop, _, prunedRows) = probe(cells)
-    val (flatTop, _, flatRows) = probe(flat)
+    // the control: a direct full read of the same store's vectors, then
+    // the same answer derived from it — the query's 2 nearest cells,
+    // scored exactly, top 5
+    val (flatVecs, _, flatRows) = org.apache.spark.sql.graft
+      .InputBytesMeter.measureIO(spark.sparkContext) {
+        spark.read.parquet(s"$root/vectors").localCheckpoint()
+      }
+    val qv = q.select(col("embedding").cast("array<double>").as("qv"))
+    val nearCells = spark.read.parquet(s"$root/centroids").crossJoin(qv)
+      .orderBy(Similarity.cosine(col("qv"), col("centroid")).desc,
+        col("cid"))
+      .limit(2).collect().map(_.getAs[Any]("cid"))
+    val flatTop = flatVecs.filter(col("cell").isin(nearCells.toIndexedSeq: _*))
+      .crossJoin(qv)
+      .orderBy(Similarity.cosine(col("qv"), col("vec")).desc, col("vec_id"))
+      .limit(5).collect().map(_.getAs[Long]("vec_id")).toSeq
     prunedTop shouldBe flatTop
     prunedTop.head shouldBe 7L
-    info(s"rows read: $prunedRows cell-pruned, $flatRows flat")
-    flatRows should be >= 500L // the flat probe scans every stored vector
+    info(s"rows read: $prunedRows cell-pruned, $flatRows full read")
+    flatRows should be >= 500L // the full read scans every stored vector
     // 2 of 8 cells hold about a quarter of the vectors; a probe that scans
-    // every cell of the partitioned store reads as much as the flat one
+    // every cell reads as much as the full read
     assert(prunedRows * 2 < flatRows,
-      s"cell-pruned probe read $prunedRows rows, flat store read $flatRows")
+      s"cell-pruned probe read $prunedRows rows, full read $flatRows")
   }
 
   test("IVF ids sidecar: content-independent absorb skip, id-pruned retract scoping, lifecycle consistency") {
@@ -796,7 +800,7 @@ class OperatorSpec extends SparkSpec with Matchers {
     val vecIds = spark.read.parquet(s"$root/vectors")
       .select("vec_id").collect().map(_.getLong(0)).sorted
     sidecarIds shouldBe vecIds
-    graft.operators.ArtifactStore.hasPartitionDirs(spark, s"$root/ids", "i") shouldBe true
+    new java.io.File(s"$root/ids").list().exists(_.startsWith("i=")) shouldBe true
     // OUT-OF-CONTRACT re-ingest: a committed id arrives again with NEW
     // vector content (different cell). The id-keyed present check must
     // skip it — benign, like the pre-pruning full-scan check — instead
@@ -817,32 +821,22 @@ class OperatorSpec extends SparkSpec with Matchers {
     spark.read.parquet(s"$root/ids")
       .filter(col("vec_id") === committed).count() shouldBe 1L
     // RETRACT SCOPING reads the takedown ids' sidecar partitions, not a
-    // corpus-wide vec_id scan — A/B against the same store with the
-    // sidecar removed (the legacy fallback path)
-    val legacy = java.nio.file.Files
-      .createTempDirectory("graft-sidecarc").toString + "/idx"
-    VectorIndex.buildIvfIndex(emb.filter(col("vec_id") % 4 =!= 0),
-      "vec_id", "embedding", legacy, nlist = 4)
-    graft.operators.ArtifactStore.deletePath(spark, s"$legacy/ids")
-    spark.read.parquet(s"$legacy/meta").drop("id_parts")
-      .write.mode("overwrite").parquet(s"$legacy/meta2")
-    graft.operators.ArtifactStore.deletePath(spark, s"$legacy/meta")
-    new java.io.File(s"$legacy/meta2")
-      .renameTo(new java.io.File(s"$legacy/meta")) shouldBe true
-    graft.operators.Dedup.invalidateIndexMeta(spark, legacy)
+    // corpus-wide vec_id scan — A/B against a direct full read of the
+    // same store's vec_id column, scoped to the same ids
     val takedown = vecIds.takeRight(2).toSeq.toDF("vec_id")
+    val (_, _, controlRows) = org.apache.spark.sql.graft.InputBytesMeter
+      .measureIO(spark.sparkContext) {
+        spark.read.parquet(s"$root/vectors").select("vec_id")
+          .join(broadcast(takedown), Seq("vec_id"), "left_semi").count()
+      }
     val (_, _, prunedRows) = org.apache.spark.sql.graft.InputBytesMeter
       .measureIO(spark.sparkContext) {
         VectorIndex.retractFromIvfIndex(takedown, "vec_id", root)
       }
-    val (_, _, controlRows) = org.apache.spark.sql.graft.InputBytesMeter
-      .measureIO(spark.sparkContext) {
-        VectorIndex.retractFromIvfIndex(takedown, "vec_id", legacy)
-      }
     assert(prunedRows < controlRows,
       s"pruned retract scoping read $prunedRows rows, " +
-        s"legacy full scan read $controlRows")
-    // both stores tombstoned exactly the 2 held ids
+        s"full vec_id read $controlRows")
+    // the store tombstoned exactly the 2 held ids
     spark.read.parquet(s"$root/tombstones").count() shouldBe 2L
     // compact folds the tombstones out of the SIDECAR too — the
     // retracted ids must be re-ingestable with the id-keyed check clean
