@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Shared store discipline for the persisted-artifact families — the
   * LSH label/index family (`Dedup`) and the IVF vector index
@@ -66,27 +68,48 @@ private[graft] object ArtifactStore {
     try f finally sc.setJobDescription(prev)
   }
 
-  /** Eager plan-truncating checkpoint for the artifact MUTATION paths
-    * (absorb/retract/drain and their reads) — round-16 verdict #7.
-    * Default = `localCheckpoint()`: blocks live in executor memory,
-    * which is fast and right for local mode and bounded drains, but a
-    * lost executor KILLS the job instead of recomputing lineage — at
-    * 100 TB a multi-hour drain should not die to one preempted node.
-    * Set `spark.graft.mutation.reliableCheckpoint=true` to write these
-    * intermediates to the context's checkpoint dir instead (set
-    * `spark.graft.mutation.checkpointDir` if the context has none) —
-    * recoverable at the cost of one fault-tolerant-FS round trip per
-    * checkpoint. Results are identical either way (both are eager
-    * materializations of the same frame; LabelsBucketSpec runs a label,
-    * an IVF and a histogram absorb under the reliable mode). Every
-    * mutation-path checkpoint goes through here, never through a direct
-    * `localCheckpoint()`, or the reliable mode silently skips it.
+  /** The one eager materialization in `src/main`: every plan-truncating
+    * checkpoint — the artifact mutation paths, the iterative operators,
+    * the staged query bodies, the ingest loop's remaining set — goes
+    * through here. The contract every caller inherits:
+    *
+    *  - EAGER: the frame's plan runs when this is called, not when the
+    *    result is consumed — never build it speculatively (plan
+    *    inspection, conditional pipelines; operators that want a
+    *    declarative twin take a `checkpoint` flag instead);
+    *  - LINEAGE-FREE: the result reads only the materialized data, so a
+    *    plan over it never re-runs the upstream subtree, and a sink
+    *    append cannot invalidate it (it is outside the CacheManager);
+    *  - RELEASED ONLY through [[release]]: `Dataset.unpersist` on the
+    *    result frees nothing;
+    *  - ONE POLICY for every site. By default the blocks live in the
+    *    executors' block managers (`level`, Spark's local-checkpoint
+    *    default unless a caller passes one): fast, and right for local
+    *    mode and bounded runs, but a lost executor FAILS the reading job
+    *    instead of recomputing lineage. With
+    *    `spark.graft.mutation.reliableCheckpoint=true` every site writes
+    *    to the context's checkpoint dir instead (set
+    *    `spark.graft.mutation.checkpointDir` if the context has none):
+    *    recoverable, at one fault-tolerant-FS round trip per checkpoint.
+    *    Results are identical either way (LabelsBucketSpec runs absorbs,
+    *    a PageRank and an ingest under both modes).
+    *
+    * The one-argument form is for sites already inside a [[labeled]]
+    * block; every other site passes `label`, the `g:` name its jobs
+    * carry in the UI and in `Probe jobs`.
     */
-  private[graft] def eagerCheckpoint(df: DataFrame): DataFrame = {
+  private[graft] def eagerCheckpoint(df: DataFrame): DataFrame =
+    materialize(df, StorageLevel.MEMORY_AND_DISK)
+
+  private[graft] def eagerCheckpoint(df: DataFrame, label: String,
+      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    labeled(df.sparkSession, label)(materialize(df, level))
+
+  private def materialize(df: DataFrame, level: StorageLevel): DataFrame = {
     val spark = df.sparkSession
     if (!spark.conf.getOption("spark.graft.mutation.reliableCheckpoint")
         .contains("true"))
-      df.localCheckpoint()
+      df.localCheckpoint(true, level)
     else {
       val sc = spark.sparkContext
       if (sc.getCheckpointDir.isEmpty)
@@ -101,14 +124,15 @@ private[graft] object ArtifactStore {
     }
   }
 
-  /** Bytes written through the STAGED store writers (`writeParquetStaged`,
-    * `writeBucketedStore`, `mutateBuckets`) — the store-rewrite I/O a
-    * mutation pays, exposed so the scale probe can measure "bytes
-    * written per absorb batch" directly instead of inferring it from
-    * wall time. Idempotent appends are excluded on purpose: they are
-    * batch-bounded by construction; the corpus-rewrite risk lives in
-    * the staged writers. */
-  val stagedBytesWritten = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Free what [[eagerCheckpoint]] made for `df`: the blocks of the RDD
+    * its `LogicalRDD` wraps (`df.rdd` is a fresh wrapper over that RDD,
+    * whose unpersist frees nothing), and in the reliable mode that RDD's
+    * checkpoint files. Call it once nothing reads `df` any more. */
+  private[graft] def release(df: DataFrame): Unit = {
+    val rdd = df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
+    rdd.unpersist(blocking = false)
+    rdd.getCheckpointFile.foreach(deletePath(df.sparkSession, _))
+  }
 
   private val metaCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[Row]]()
@@ -280,7 +304,6 @@ private[graft] object ArtifactStore {
       // every read)
       writeRepartition(df, partitionCols.map(col)).write.mode("overwrite")
         .partitionBy(partitionCols: _*).parquet(staging.toString)
-    stagedBytesWritten.addAndGet(dirBytes(fs, staging))
     swapRootStaged(fs, path)
   }
 
@@ -346,7 +369,6 @@ private[graft] object ArtifactStore {
     fs.delete(staging, true)
     fs.delete(new Path(root + ".__old"), true)
     write(staging.toString)
-    stagedBytesWritten.addAndGet(dirBytes(fs, staging))
     // the parquet jobs above each left a _SUCCESS inside their SUBdirs;
     // the root-level marker means "every substore landed" and must be
     // the last write before the swap
@@ -597,73 +619,50 @@ private[graft] object ArtifactStore {
     }
     val m = meta(staging.toString)
     m.write.mode("overwrite").parquet(s"$staging/meta")
-    stagedBytesWritten.addAndGet(dirBytes(fs, staging))
     fs.create(new Path(staging, "_SUCCESS"), true).close()
     swapRootStaged(fs, path)
     seedMeta(spark, path, m.head())
   }
 
-  /** O(touched) mutation of a bucketed store: every row whose key is in
-    * `touchedKeys` is dropped, every `upserts` row is added, and ONLY
-    * the buckets containing a touched key are rewritten. Two phases
-    * with a commit marker between them, so a crash ANYWHERE is repaired
-    * by `repairStore` (roll-forward once the marker exists, rollback —
-    * store untouched — before it):
+  /** O(touched) mutation of a bucketed store, across every bucket
+    * GEOMETRY it holds (round-13): the labels store holds its rows twice,
+    * doc-keyed (`b=`) for point lookups by doc and canonical-keyed (`c=`)
+    * for member lookups by component (the secondary index that lets
+    * retraction and relabeling read O(touched buckets) instead of the
+    * corpus). Every row matching `dropHint` on `keyCol` is dropped, every
+    * `upserts` row is added, and ONLY the buckets holding a touched row
+    * are rewritten. Two phases with a commit marker between them, so a
+    * crash ANYWHERE is repaired by `repairStore` (roll a MARKED staging
+    * forward, discard an unmarked one — the store is untouched before
+    * the marker); geometries cannot diverge because they commit
+    * together:
     *
-    *  1. STAGE: one job writes the touched buckets' new content
-    *     (old rows anti-joined against `touchedKeys` ∪ `upserts`) as
-    *     `b=<k>` dirs under `<root>/.__bstaging`, then the `__COMMIT`
-    *     marker file lands CARRYING the touched-bucket manifest as its
-    *     content (one `k,kept` line per bucket — `kept = false` marks
-    *     a bucket whose new content is empty and must be DELETED, not
-    *     left stale; a plain FS write, not a Spark job). Nothing live
-    *     has changed yet.
-    *  2. APPLY: per touched bucket, delete the live dir and rename the
-    *     staged dir in (nothing to rename for `kept = false`). Every
-    *     step is idempotent given the staging tree, which is exactly
-    *     how `repairStore` replays it.
-    *
-    * `touchedKeys`/`upserts` must be localCheckpointed by the caller
-    * (they are read again during the staging job) and `touchedKeys`
-    * must cover every `upserts` key. `touchedHint` is the join-side
-    * frame for the anti-join (the caller applies its broadcast
-    * size-guard policy). Returns the staged byte count it added to
-    * `stagedBytesWritten`. */
-  def mutateBuckets(spark: SparkSession, root: String, keyCol: String,
-      numBuckets: Int, touchedKeys: DataFrame, touchedHint: DataFrame,
-      upserts: DataFrame): Long =
-    mutateBucketsMulti(spark, root, keyCol,
-      Seq(BucketGeom("b", keyCol, numBuckets, touchedKeys)),
-      touchedHint, upserts)
-
-  /** Multi-GEOMETRY O(touched) mutation (round-13): one mutation keeps
-    * every bucket geometry of the store consistent under ONE commit
-    * marker — the labels store holds its rows twice, doc-keyed (`b=`)
-    * for point lookups by doc and canonical-keyed (`c=`) for member
-    * lookups by component (the secondary index that lets retraction and
-    * relabeling read O(touched buckets) instead of the corpus). All
-    * geometries stage in ONE Spark job: each geometry's touched buckets
-    * are re-derived (remaining = touched-bucket rows anti-joined
-    * against `dropHint` on `keyCol`, plus `upserts`), tagged with
-    * (g = prefix, k = bucket), and written `partitionBy(g, k)` under
-    * `.__bstaging` — so adding the twin costs bytes, not jobs. The
-    * marker carries `prefix,k,kept` lines; apply renames
-    * `.__bstaging/g=<p>/k=<k>` over `<root>/<p>=<k>`. Crash anywhere is
-    * repaired by `repairStore` exactly as before (roll a MARKED staging
-    * forward, discard an unmarked one) — geometries cannot diverge
-    * because they commit together.
+    *  1. STAGE: one Spark job across geometries re-derives each touched
+    *     bucket (its rows anti-joined against `dropHint`, plus
+    *     `upserts`), tags the rows (g = prefix, k = bucket) and writes
+    *     them `partitionBy(g, k)` under `<root>/.__bstaging` — so the
+    *     twin geometry costs bytes, not jobs. Then the `__COMMIT` marker
+    *     lands CARRYING the manifest as its content (one `prefix,k,kept`
+    *     line per touched bucket — `kept = false` marks a bucket whose
+    *     new content is empty and must be DELETED, not left stale; a
+    *     plain FS write, not a Spark job). Nothing live has changed yet.
+    *  2. APPLY: per touched bucket, delete the live `<root>/<p>=<k>` and
+    *     rename `.__bstaging/g=<p>/k=<k>` in (nothing to rename for
+    *     `kept = false`). Every step is idempotent given the staging
+    *     tree, which is exactly how `repairStore` replays it.
     *
     * Correctness contract per geometry: every row that must be REMOVED
-    * (matches `dropHint` on `keyCol`) must live in a touched bucket of
-    * that geometry — `bucketKeys` must cover the removed rows' OLD
-    * bucket-column values as well as the upserts' new ones. Rows in
-    * touched buckets not matching `dropHint` are preserved verbatim.
-    * `dropHint`/`upserts`/`bucketKeys` must be localCheckpointed by the
-    * caller (they are read again during the staging job).
+    * must live in a touched bucket of that geometry — `bucketKeys` must
+    * cover the removed rows' OLD bucket-column values as well as the
+    * upserts' new ones. Rows in touched buckets not matching `dropHint`
+    * are preserved verbatim. `dropHint`/`upserts`/`bucketKeys` must be
+    * eagerly checkpointed by the caller (they are read again during the
+    * staging job); `dropHint` is the join-side frame for the anti-join
+    * (the caller applies its broadcast size-guard policy).
     */
   def mutateBucketsMulti(spark: SparkSession, root: String,
       keyCol: String, geoms: Seq[BucketGeom], dropHint: DataFrame,
-      upserts: DataFrame): Long = {
+      upserts: DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
     require(geoms.nonEmpty, "mutateBucketsMulti: no geometries")
     val fs = fileSystem(spark, root)
@@ -685,7 +684,7 @@ private[graft] object ArtifactStore {
     val touchedBy = touchedAll.groupBy(_._1).map { case (p, ks) =>
       p -> ks.map(_._2).sorted.toSeq
     }
-    if (touchedAll.isEmpty) return 0L
+    if (touchedAll.isEmpty) return
     // one staging job across geometries: remaining(touched dirs) minus
     // dropHint, plus upserts, each row tagged with its (g, k)
     val stagedFrames = geoms.flatMap { g =>
@@ -738,11 +737,9 @@ private[graft] object ArtifactStore {
     commit.close()
     if (testCrashPoint == 1)
       throw new IllegalStateException("testCrashPoint=1: crash after commit marker")
-    val bytes = dirBytes(fs, new Path(staging))
-    stagedBytesWritten.addAndGet(bytes)
     applyBucketStaging(fs, root, entries)
     fs.delete(new Path(staging), true)
-    bytes
+    ()
   }
 
   /** Apply one (prefix, k, kept) entry set: rename each staged bucket
@@ -796,7 +793,7 @@ private[graft] object ArtifactStore {
           case Some(dir) =>
             fs.delete(target, true)
             require(fs.rename(dir, target),
-              s"mutateBuckets: could not swap $dir into $target")
+              s"mutateBucketsMulti: could not swap $dir into $target")
           case None => // already applied (repair replay)
         }
       } else fs.delete(target, true)

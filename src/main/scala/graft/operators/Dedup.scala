@@ -745,14 +745,13 @@ object Dedup {
     * once). */
   private def checkpointWithBucketSets(df: DataFrame, tag: String,
       sets: Seq[(String, org.apache.spark.sql.Column)])
-      : (DataFrame, Long, Map[String, Seq[Int]]) =
-    ArtifactStore.labeled(df.sparkSession, tag) {
+      : (DataFrame, Long, Map[String, Seq[Int]]) = {
     val obs = org.apache.spark.sql.Observation(
       tag + "_" + java.util.UUID.randomUUID().toString.take(8))
     val metrics = count(lit(1)).as("__n") +:
       sets.map { case (n, c) => collect_set(c).as(n) }
     val ck = df.observe(obs, metrics.head, metrics.tail: _*)
-      .transform(ArtifactStore.eagerCheckpoint)
+      .transform(ArtifactStore.eagerCheckpoint(_, tag))
     val n = Option(obs.get("__n")).map(_.asInstanceOf[Long]).getOrElse(0L)
     val out = sets.map { case (s, _) =>
       s -> Option(obs.get(s))
@@ -761,7 +760,7 @@ object Dedup {
         .getOrElse(Seq.empty)
     }.toMap
     (ck, n, out)
-    }
+  }
 
   /** The full stored-index probe (candidates from the batch's bucket
     * partitions, exact-Jaccard verify against the candidates' feature
@@ -878,14 +877,13 @@ object Dedup {
     * rides the checkpoint job (the `canonicalize` convergence-counter
     * pattern). */
   private def checkpointWithCount(df: DataFrame,
-      tag: String): (DataFrame, Long) =
-    ArtifactStore.labeled(df.sparkSession, tag) {
-      val obs = org.apache.spark.sql.Observation(
-        tag + "_" + java.util.UUID.randomUUID().toString.take(8))
-      val ck = df.observe(obs, count(lit(1)).as("n")).transform(ArtifactStore.eagerCheckpoint)
-      val n = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      (ck, n)
-    }
+      tag: String): (DataFrame, Long) = {
+    val obs = org.apache.spark.sql.Observation(
+      tag + "_" + java.util.UUID.randomUUID().toString.take(8))
+    val ck = ArtifactStore.eagerCheckpoint(df.observe(obs, count(lit(1)).as("n")), tag)
+    val n = Option(obs.get("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+    (ck, n)
+  }
 
   /** `checkpointWithCount` plus the keys' BUCKET-ID set, all riding the
     * one checkpoint action (round-13): the pruned point-readers need
@@ -1048,7 +1046,7 @@ object Dedup {
     }
 
   /** The live dirs of one geometry holding the given bucket ids — the
-    * `mutateBuckets` livePaths derivation, shared by the pruned
+    * `mutateBucketsMulti` livePaths derivation, shared by the pruned
     * point-readers. */
   private def bucketDirsFor(spark: org.apache.spark.sql.SparkSession,
       path: String, prefix: String, ids: Seq[Int]): Seq[String] = {
@@ -1328,9 +1326,8 @@ object Dedup {
     }
 
     // contracted graph: batch ids + touched old canonicals
-    val edges = ArtifactStore.labeled(spark, "absorb_edges") {
-      bbPairs.unionByName(biPairs).transform(ArtifactStore.eagerCheckpoint)
-    }
+    val edges = bbPairs.unionByName(biPairs)
+      .transform(ArtifactStore.eagerCheckpoint(_, "absorb_edges"))
     // the distinct is LOAD-BEARING here (round-16 A/B): canonicalize's
     // round-0 labels are these nodes verbatim, and a doc appearing once
     // per incident edge would multiply the first edges⋈labels join by
@@ -1411,7 +1408,7 @@ object Dedup {
     //    batch–index edge set (the labels join) and the merge recomputes
     //    exactly as if the partial append had not happened;
     //  - the labels write last: the buckets mutate through the two-phase
-    //    commit-marker protocol (ArtifactStore.mutateBuckets) whose
+    //    commit-marker protocol (ArtifactStore.mutateBucketsMulti) whose
     //    repair — ArtifactStore.repairStore — rolls an interrupted apply
     //    forward (or discards an unmarked staging), after which
     //    re-running the absorb is exact: its batch-id anti-join skips
@@ -2115,7 +2112,6 @@ object Dedup {
     */
   def canonicalize(docs: DataFrame, idCol: String, pairs: DataFrame,
       maxIters: Int = 20): DataFrame = {
-    val spark = docs.sparkSession
     // NO distinct() on the flipped edge union (round 16): min/max
     // aggregation is duplicate-insensitive, callers pass already-unique
     // pairs (LSH verify output, probe edges), and the flip cannot
@@ -2124,15 +2120,11 @@ object Dedup {
     // absorb's contracted-graph merge (measured: canon_edges 3 jobs →
     // 1 narrow checkpoint per micro-batch). A caller passing duplicate
     // pairs only duplicates join work, never changes the fixpoint.
-    val edges = ArtifactStore.labeled(spark, "canon_edges") {
-      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .transform(ArtifactStore.eagerCheckpoint)
-    }
-    var labels = ArtifactStore.labeled(spark, "canon_init") {
-      docs.select(col(idCol).as("doc"), col(idCol).as("canonical"))
-        .transform(ArtifactStore.eagerCheckpoint)
-    }
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+      .transform(ArtifactStore.eagerCheckpoint(_, "canon_edges"))
+    var labels = docs.select(col(idCol).as("doc"), col(idCol).as("canonical"))
+      .transform(ArtifactStore.eagerCheckpoint(_, "canon_init"))
     val idType = labels.schema("canonical").dataType
     var converged = false
     var iter = 0
@@ -2179,14 +2171,12 @@ object Dedup {
             .union(viaEdges).union(viaLabel)
         }
       val obs = org.apache.spark.sql.Observation(s"canonicalize_round_$iter")
-      val next = ArtifactStore.labeled(spark, "canon_round") {
-        legs
-          .groupBy("doc").agg(min("canonical").as("canonical"), max("old").as("old"))
-          .observe(obs, sum(when(col("canonical") =!= col("old"), 1L).otherwise(0L))
-            .as("changed"))
-          .drop("old")
-          .transform(ArtifactStore.eagerCheckpoint)
-      }
+      val next = legs
+        .groupBy("doc").agg(min("canonical").as("canonical"), max("old").as("old"))
+        .observe(obs, sum(when(col("canonical") =!= col("old"), 1L).otherwise(0L))
+          .as("changed"))
+        .drop("old")
+        .transform(ArtifactStore.eagerCheckpoint(_, "canon_round"))
       converged = Option(obs.get("changed")).forall(_.asInstanceOf[Long] == 0L)
       labels = next
       iter += 1

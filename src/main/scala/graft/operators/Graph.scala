@@ -31,7 +31,7 @@ object Graph {
     * Scale (100 TB): each superstep shuffles the edge list once on src
     * (join with ranks) and once on dst (contribution aggregate) — the
     * canonical edge-partitioned PR dataflow; rank state is one slim
-    * (node, long) table localCheckpoint'ed per step so the final plan
+    * (node, long) table eagerly checkpointed per step so the final plan
     * embeds NO nested per-iteration subtrees, and lineage stays O(1).
     * Edge dedup is one up-front shuffle reused by the outdeg aggregate.
     */
@@ -44,10 +44,10 @@ object Graph {
 
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+      .transform(ArtifactStore.eagerCheckpoint(_, "pagerank_edges"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+      .transform(ArtifactStore.eagerCheckpoint(_, "pagerank_nodes"))
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val n = nodes.count()
@@ -69,12 +69,12 @@ object Graph {
         .select(col("node"),
           (lit(base) + coalesce(
             expr(s"div($dampingX100 * contrib, 100)"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
+        .transform(ArtifactStore.eagerCheckpoint(_, "pagerank_step"))
       // Drop the superseded rank snapshot: only the newest checkpoint is
-      // ever read again, and without the unpersist a k-iteration run pins
+      // ever read again, and without the release a k-iteration run pins
       // k rank tables in the block manager — at graph scale that evicts
       // the edge cache and the supersteps start re-shuffling from scratch.
-      superseded.foreach(_.unpersist())
+      superseded.foreach(ArtifactStore.release)
       superseded = Some(next)
       ranks = next
     }
@@ -103,16 +103,16 @@ object Graph {
 
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(true)
+      .transform(ArtifactStore.eagerCheckpoint(_, "ppr_edges"))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
+      .transform(ArtifactStore.eagerCheckpoint(_, "ppr_nodes"))
     val outdeg = e.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val seedSet = seeds.select(col(seeds.columns.head).as("node")).distinct()
       .join(nodes, Seq("node"))
       .withColumn("__seed", lit(true))
-      .localCheckpoint(true)
+      .transform(ArtifactStore.eagerCheckpoint(_, "ppr_seeds"))
     val nSeeds = seedSet.count()
     require(nSeeds > 0,
       "personalizedPageRank: no seed appears in the edge list's node set")
@@ -135,8 +135,9 @@ object Graph {
           Seq("src"))
         .select(col("dst").as("node"), expr("div(rank, outdeg)").as("c"))
         .groupBy("node").agg(sum(col("c")).as("contrib"))
-      val next = withSeedBase(contrib, base).localCheckpoint(true)
-      superseded.foreach(_.unpersist())
+      val next = ArtifactStore.eagerCheckpoint(
+        withSeedBase(contrib, base), "ppr_step")
+      superseded.foreach(ArtifactStore.release)
       superseded = Some(next)
       ranks = next
     }
@@ -205,10 +206,10 @@ object Graph {
     *
     * EAGER-MATERIALIZATION CONTRACT (round-16 advisory): constructing
     * the returned frame runs the edge scan/dedup/degree shuffles
-    * immediately (`localCheckpoint`, see below) — do not construct it
-    * speculatively (plan inspection, conditional pipelines), and the
-    * result is lineage-free (not recomputable after executor loss).
-    * Same contract as `clusteringCoefficient`, which shares this path.
+    * immediately (`ArtifactStore.eagerCheckpoint`, whose contract it
+    * inherits: never construct it speculatively, and the result is
+    * lineage-free). Same contract as `clusteringCoefficient`, which
+    * shares this path.
     */
   def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     // materialize the edge set and degree table ONCE (round 16): the
@@ -217,8 +218,10 @@ object Graph {
     // shuffle) once per consumer — x155's pre-fix plan was 601 nodes /
     // 110 exchanges of repeated subtrees. Same discipline
     // clusteringCoefficient already documents for its three readers.
-    val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    triangleCountOriented(e, degrees(e).localCheckpoint())
+    val e = ArtifactStore.eagerCheckpoint(
+      canonicalEdges(edges, srcCol, dstCol), "triangle_edges")
+    triangleCountOriented(e,
+      ArtifactStore.eagerCheckpoint(degrees(e), "triangle_degrees"))
   }
 
   /** Undirected edge canonicalization shared by the graph operators:
@@ -284,7 +287,7 @@ object Graph {
     * undefined) are excluded, zero-triangle nodes report 0. Output:
     * (node, degree, triangles, cc_x1m), one row per node with
     * degree ≥ 2. Shares `triangleCount`'s canonicalized edge set and
-    * degree table through the factored core — both are localCheckpoint'ed
+    * degree table through the factored core — both are checkpointed
     * once here because THREE consumers read them (the orientation joins
     * and the output degree join); fully-lazy sharing would re-run the
     * edge dedup and degree shuffle per consumer (AQE turns the output
@@ -293,8 +296,9 @@ object Graph {
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
       dstCol: String): DataFrame = {
-    val e = canonicalEdges(edges, srcCol, dstCol).localCheckpoint()
-    val deg = degrees(e).localCheckpoint()
+    val e = ArtifactStore.eagerCheckpoint(
+      canonicalEdges(edges, srcCol, dstCol), "cc_edges")
+    val deg = ArtifactStore.eagerCheckpoint(degrees(e), "cc_degrees")
     deg.filter(col("dg") >= 2)
       .select(col("node"), col("dg").as("degree"))
       .join(triangleCountOriented(e, deg), Seq("node"), "left")

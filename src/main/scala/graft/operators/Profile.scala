@@ -620,7 +620,7 @@ object Profile {
     val hist = ArtifactStore.readParquetCached(spark, s"$path/shards",
         Seq(s"$path/shards"))
       .select(col("shard").as("cat"), col("bucket").as("v"), col("cnt"))
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint(_, "drift_hist"))
     // weighted inverse-CDF cuts over the merged histogram — the same
     // arithmetic as exactQuantiles (whose own hist equals this fold at
     // width 1), with count(*) replaced by the stored cnt

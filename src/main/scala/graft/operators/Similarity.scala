@@ -108,7 +108,8 @@ object Similarity {
     val spark = queries.sparkSession
     import spark.implicits._
     val exact = bruteForceTopK(queries, corpus, idCol, vecCol, k, scorer)
-      .select("query_id", "neighbor_id").localCheckpoint()
+      .select("query_id", "neighbor_id")
+      .transform(ArtifactStore.eagerCheckpoint(_, "dim_recall_exact"))
     val perDim = dims.map { d =>
       val qd = queries.select(col(idCol),
         slice(col(vecCol), 1, d).as(vecCol))

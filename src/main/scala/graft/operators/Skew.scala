@@ -129,7 +129,8 @@ object Skew {
       }
       counters.keysIterator.map(kk => (kk, 0L, false)) ++
         Iterator((null: String, n, true))
-    }.toDF("key", "w", "is_total").localCheckpoint()
+    }.toDF("key", "w", "is_total")
+      .transform(ArtifactStore.eagerCheckpoint(_, "mg_summary"))
     val candidates = summary.filter(!col("is_total"))
       .select("key").distinct()
     val total = summary.filter(col("is_total"))

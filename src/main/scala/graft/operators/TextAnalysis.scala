@@ -512,11 +512,11 @@ object TextAnalysis {
           "transform(sequence(1, length(w)), i -> substring(w, i, 1))")))
       .select(col("w"), col("freq"), (col("pos") + 1).as("pos"),
         col("col").as("sym"))
-      .localCheckpoint()
+      .transform(ArtifactStore.eagerCheckpoint(_, "bpe_encode_syms"))
     (1 to steps).foreach { t =>
       val b = broadcast(merges.filter(col("step") === t)
         .select(col("left_sym").as("__a"), col("right_sym").as("__b")))
-      syms = applyBpeMerge(syms, b, wWin).localCheckpoint()
+      syms = ArtifactStore.eagerCheckpoint(applyBpeMerge(syms, b, wWin), "bpe_encode_step")
     }
     bpeEncodeReport(df, idCol, textCol,
       syms.groupBy("w").agg(count(lit(1)).as("sym_count")))
@@ -533,7 +533,7 @@ object TextAnalysis {
     require(steps >= 1 && steps <= 8,
       s"bpeMergeSteps: steps must be in [1, 8], got $steps")
     import org.apache.spark.sql.expressions.Window
-    def cp(d: DataFrame): DataFrame = if (checkpoint) d.localCheckpoint() else d
+    def cp(d: DataFrame) = if (checkpoint) ArtifactStore.eagerCheckpoint(d, "bpe_train") else d
     val wf = df.select(explode(tokens(col(textCol))).as("w"))
       .filter(col("w").rlike("^[a-z]+$"))
       .groupBy("w").agg(count(lit(1)).as("freq"))

@@ -258,7 +258,7 @@ object VectorIndex {
     // store, so a probe reads ≤ |cells| of the corpus's cell dirs
     // instead of all of them. The nprobe restriction used to be applied
     // INSIDE the join, after a full corpus-sized scan.
-    val probes = probes0.localCheckpoint()
+    val probes = ArtifactStore.eagerCheckpoint(probes0, "ivf_probes")
     val cells = probes.select("cell").distinct().collect().map(_.get(0))
     val vectors = ArtifactStore.tombstoneFiltered(spark, indexPath, "vec_id",
       ArtifactStore.readParquetCached(spark,

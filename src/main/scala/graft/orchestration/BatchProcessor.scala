@@ -6,7 +6,6 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.{CatalogTable, CatalogTablePartition}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.PartitioningUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.DriverThread
@@ -15,6 +14,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.config.{ExecutionConfig, PipelineConfig}
 import graft.exec.{PartitionExecutor, WorkerResources}
 import graft.model.BronzeSchema
+import graft.operators.ArtifactStore
 
 /** One batch through the API stage: mapPartitions → append to sink.
   * Ref: src/orchestration/batch_handler.py:21-47. Unlike the reference's
@@ -185,15 +185,16 @@ object BatchHandler {
   * attempt and every later run.
   *
   * The remaining set is materialized ONCE per attempt, by an eager
-  * `localCheckpoint` to disk, and every batch filters that checkpoint (the
+  * checkpoint to disk (`ArtifactStore.eagerCheckpoint`, its jobs labelled
+  * `g:ingest_remaining`), and every batch filters that checkpoint (the
   * reference re-runs the anti-join per batch, batch_processor.py:56-57,76-81).
   * It is not `persist`ed: its plan reads the sink, and every sink append
   * makes Spark's CacheManager re-cache plans over the sink, so the next
   * batch would re-run the anti-join and the repartition shuffle against a
   * grown sink. A checkpoint is an RDD outside the CacheManager, so appends
-  * cannot invalidate it. Its blocks are not recomputable: a lost block
-  * fails the batch that reads it, and the next attempt's anti-join resumes
-  * from the sink. The blocks are released when the attempt ends.
+  * cannot invalidate it. In the default (local) checkpoint mode its blocks
+  * are not recomputable: a lost block fails the batch that reads it, and
+  * the next attempt's anti-join resumes from the sink. `ArtifactStore.release` frees it when the attempt ends.
   *
   * Scale notes (100 TB): the anti-join shuffles source+sink on request_id —
   * Catalyst/AQE picks broadcast when the remaining side shrinks below the
@@ -242,7 +243,7 @@ final class BatchProcessor(
       val staged = remaining().repartition(exec.numPartitions)
         .observe(rows, count(lit(1)).as("n"), count(when(col("request_id").isNull, 1)).as("nulls"))
         .where(col("request_id").isNotNull)
-        .localCheckpoint(eager = true, StorageLevel.DISK_ONLY)
+        .transform(ArtifactStore.eagerCheckpoint(_, "ingest_remaining", StorageLevel.DISK_ONLY))
       try {
         def observed(k: String) = Option(rows.get(k)).fold(0L)(_.asInstanceOf[Long])
         val nulls = observed("nulls")
@@ -276,12 +277,7 @@ final class BatchProcessor(
         case e: Throwable =>
           try BatchHandler.settle(sinkIdentifier) catch { case s: Throwable => e.addSuppressed(s) }
           throw e
-      } finally checkpointedRdd(staged).unpersist(blocking = false)
+      } finally ArtifactStore.release(staged)
     }
   }
-
-  /** The RDD that holds a local checkpoint's blocks. `staged.rdd` would be a
-    * fresh wrapper over it, whose unpersist frees nothing. */
-  private def checkpointedRdd(staged: DataFrame) =
-    staged.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get
 }

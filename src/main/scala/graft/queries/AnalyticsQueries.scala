@@ -867,7 +867,7 @@ object AnalyticsQueries {
           .groupBy(col("l_suppkey"))
           .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100 + 0.5)
             .cast("long")).as("total_cents"))
-          .localCheckpoint()
+          .transform(graft.operators.ArtifactStore.eagerCheckpoint(_, "b30_revenue"))
         val top = revenue.agg(max(col("total_cents")).as("mx"))
         tbl(s, d, "supplier")
           .join(revenue, col("s_suppkey") === col("l_suppkey"))
@@ -1369,7 +1369,7 @@ object AnalyticsQueries {
                 |JOIN b43_supplier s ON l.l_suppkey = s.s_suppkey
                 |JOIN b43_nation n ON s.s_nationkey = n.n_nationkey
                 |WHERE n.n_name = 'NATION_9'""".stripMargin)
-          .localCheckpoint()
+          .transform(graft.operators.ArtifactStore.eagerCheckpoint(_, "b43_filtered"))
           .createOrReplaceTempView("b43_flt")
         // the kept-fraction threshold is 3x the MEAN per-part value, so
         // the report stays selective-but-nonempty at every SF (TPC-H's

@@ -225,7 +225,7 @@ object E2EQueries {
             .select(col("request_id"), urlPath.as("url_path"), col("method"),
               col("status_code"), col("success"), col("attempts"), col("body_text"))
             .orderBy("request_id")
-            .localCheckpoint(true)
+            .transform(graft.operators.ArtifactStore.eagerCheckpoint(_, "e09_read"))
         } finally server.stop()
       },
       Some("""SELECT i::VARCHAR AS request_id, '/api/data' AS url_path, 'GET' AS method,

@@ -132,8 +132,9 @@ object EvalQueries {
     * grows: canonical labels + LSH index over the doc_id % 4 != 0 slice,
     * built once per (JVM, sf-dir) with the production 3/16/4/0.5
     * parameters (the `canonicalLabelsFor` contract). Each x152
-    * evaluation absorbs the % 4 == 0 batch into FRESH out-paths, so the
-    * base store is never mutated and re-evaluation is idempotent.
+    * evaluation file-copies the base to a scratch root and absorbs the
+    * % 4 == 0 batch into the copy in place, so the base store is never
+    * mutated and re-evaluation is idempotent.
     */
   private val absorbBase = scala.collection.mutable.Set[String]()
   private def absorbBaseFor(s: org.apache.spark.sql.SparkSession,
@@ -2256,16 +2257,16 @@ object EvalQueries {
           "embedding", s"$root/ivf", nlist = 8)
         val forgetDocs = tbl(s, d, "documents")
           .filter(col("doc_id") % 11 === 7).select("doc_id")
-          .localCheckpoint()
+          .transform(ArtifactStore.eagerCheckpoint(_, "x180_forget_docs"))
         Dedup.retractFromLabels(forgetDocs, "doc_id", s"$root/labels",
           s"$root/idx", threshold = 0.5)
         VectorIndex.retractFromIvfIndex(
           tbl(s, d, "embeddings").filter(col("vec_id") % 11 === 7),
           "vec_id", s"$root/ivf")
         val labels = Dedup.readLabels(s, s"$root/labels")
-          .localCheckpoint()
+          .transform(ArtifactStore.eagerCheckpoint(_, "x180_labels"))
         val vectors = ArtifactStore.readStore(s, s"$root/ivf", "vectors",
-          "vec_id").localCheckpoint()
+          "vec_id").transform(ArtifactStore.eagerCheckpoint(_, "x180_vectors"))
         val labLive = labels.count()
         val labLeft = labels.join(broadcast(forgetDocs),
           labels("doc") === forgetDocs("doc_id"), "left_semi").count()

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.functions.Portable
-import graft.operators.{AsOfJoin, Curation, Dedup, Graph, Layout, Multimodal, Profile, Quantize, RangeJoin, Retrieval, Sequence, Similarity, Skew, TextAnalysis, TimeSeries, VectorIndex}
+import graft.operators.{ArtifactStore, AsOfJoin, Curation, Dedup, Graph, Layout, Multimodal, Profile, Quantize, RangeJoin, Retrieval, Sequence, Similarity, Skew, TextAnalysis, TimeSeries, VectorIndex}
 import graft.queries.QueryDef.tbl
 import graft.streaming.StreamOps
 
@@ -87,12 +87,6 @@ object ExtensionQueries {
   private[graft] def labelsPathForSpec(s: org.apache.spark.sql.SparkSession,
       d: String): String = canonicalLabelsFor(s, d)
 
-  /** Build-once-per-(JVM, sf-dir) full-corpus LSH index
-    * (Dedup.buildLshIndex, production 3/16/4 parameters) — the PAIR
-    * family's shared artifact (x117b): stored features + banded buckets,
-    * consumed by `Dedup.pairsFromLshIndex` with zero re-shingling. Same
-    * build-on-first-use contract as `canonicalLabelsFor`.
-    */
   /** Build-once-per-(JVM, sf-dir) BPE vocabulary artifact
     * (TextAnalysis.buildBpeVocab, 3 merges) — same contract as
     * `canonicalLabelsFor`: the first evaluation pays the training
@@ -112,6 +106,12 @@ object ExtensionQueries {
     path
   }
 
+  /** Build-once-per-(JVM, sf-dir) full-corpus LSH index
+    * (Dedup.buildLshIndex, production 3/16/4 parameters) — the PAIR
+    * family's shared artifact (x117b): stored features + banded buckets,
+    * consumed by `Dedup.pairsFromLshIndex` with zero re-shingling. Same
+    * build-on-first-use contract as `canonicalLabelsFor`.
+    */
   private val lshIdxBuilt = scala.collection.mutable.Set[String]()
   private[queries] def lshIndexFor(s: org.apache.spark.sql.SparkSession,
       d: String): String = lshIdxBuilt.synchronized {
@@ -3700,7 +3700,7 @@ object ExtensionQueries {
         // staging discipline).
         val exactNovel = Dedup.bloomProbeNew(batch,
           idxV0.unionByName(idxV1), "doc_id", "text",
-          numBits = 1L << 20, numHashes = 5).localCheckpoint()
+          numBits = 1L << 20, numHashes = 5).transform(ArtifactStore.eagerCheckpoint(_, "x108_exact_novel"))
         val keepers = docs.join(
           exactNovel.select(col("keeper_id").as("doc_id")), Seq("doc_id"))
         // one shared batch front end across the version chain — the
@@ -3795,7 +3795,7 @@ object ExtensionQueries {
             ingested: org.apache.spark.sql.DataFrame,
             versions: Seq[String]) = {
           val exactNovel = Dedup.bloomProbeNew(batch, ingested, "doc_id",
-            "text", numBits = 1L << 20, numHashes = 5).localCheckpoint()
+            "text", numBits = 1L << 20, numHashes = 5).transform(ArtifactStore.eagerCheckpoint(_, "x110_exact_novel"))
           val keepers = docs.join(
             exactNovel.select(col("keeper_id").as("doc_id")), Seq("doc_id"))
           // one shared batch front end across the version chain
@@ -3812,7 +3812,7 @@ object ExtensionQueries {
                 .otherwise(lit("admitted")).as("verdict"))
         }
         val t1 = triage(docs.filter(col("doc_id") % 8 === 0), idxDocs,
-          Seq(s"$root/v0", s"$root/v1")).localCheckpoint()
+          Seq(s"$root/v0", s"$root/v1")).transform(ArtifactStore.eagerCheckpoint(_, "x110_triage_1"))
         val admitted1 = docs.join(
           t1.filter(col("verdict") === "admitted").select("doc_id"),
           Seq("doc_id"))
@@ -4429,8 +4429,8 @@ object ExtensionQueries {
     * declarative twin whose plan `PlanSpec` inspects: the staged default
     * hides its subtrees behind localCheckpoint scans.
     *
-    * `stageCheckpoints = true` eagerly `localCheckpoint()`s each stage's
-    * slim id-set: the report is a union of 6 stage rows and Spark does NOT
+    * `stageCheckpoints = true` eagerly checkpoints each stage's
+    * slim id-set (`ArtifactStore.eagerCheckpoint`): the report is a union of 6 stage rows and Spark does NOT
     * share common subtrees across union branches, so without the cut the
     * exact-dedup + LSH prefix re-executes once per downstream branch.
     * Checkpointing truncates lineage to the materialized id rows (KBs per
@@ -4459,7 +4459,7 @@ object ExtensionQueries {
       stageCheckpoints: Boolean = true,
       labelsPath: Option[String] = None): org.apache.spark.sql.DataFrame = {
     def cut(ids: org.apache.spark.sql.DataFrame) =
-      if (stageCheckpoints) ids.localCheckpoint() else ids
+      if (stageCheckpoints) ArtifactStore.eagerCheckpoint(ids, "funnel_stage") else ids
     val tk = docs.select(col("doc_id"),
       size(Portable.tokens(col("text"))).cast("long").as("tk"))
     def stageRow(ord: Int, name: String, ids: org.apache.spark.sql.DataFrame) =

@@ -46,9 +46,11 @@ class BenchSizingSpec extends SparkSpec {
   // (ArtifactStore.dirBytes), the driver thread that carries the
   // caller's Spark thread-locals (DriverThread.start), the one listener
   // that records jobs (Probe.JobRecorder), the one read of a finished
-  // drain's progress (StreamOps.runAppendDrain) and the pinned partition
+  // drain's progress (StreamOps.runAppendDrain), the pinned partition
   // count ahead of a partitioned store write, which keeps AQE from
-  // coalescing it onto one task (ArtifactStore.writeRepartition). Row:
+  // coalescing it onto one task (ArtifactStore.writeRepartition), and the
+  // local and reliable checkpoint calls behind the one eager
+  // materialization (ArtifactStore.eagerCheckpoint). Row:
   // (pattern, the one file allowed to contain it once, what the pattern
   // does).
   private val oneSite = Seq(
@@ -58,7 +60,9 @@ class BenchSizingSpec extends SparkSpec {
     ("withThreadLocalCaptured(", "DriverThread.scala", "submits Spark work from a driver thread"),
     ("addSparkListener(", "Probe.scala", "attaches a Spark listener"),
     ("recentProgress", "StreamOps.scala", "reads a streaming query's progress"),
-    ("numShufflePartitions", "ArtifactStore.scala", "pins a store write's partition count"))
+    ("numShufflePartitions", "ArtifactStore.scala", "pins a store write's partition count"),
+    ("localCheckpoint(", "ArtifactStore.scala", "checkpoints a frame locally"),
+    (".checkpoint(", "ArtifactStore.scala", "checkpoints a frame reliably"))
 
   for ((pattern, file, what) <- oneSite)
     test(s"src/main $what in exactly one place, ${file.stripSuffix(".scala")}") {

@@ -58,6 +58,11 @@ class IngestJobBudgetSpec extends SparkSpec with Matchers with BeforeAndAfterAll
       // and a closing attempt costs another 4.
       val (batches, attempts, perAttempt) = (4, 1, 5)
       jobs.size should be <= batches + attempts * perAttempt
+      // the per-attempt jobs run under the checkpoint's label; the batch
+      // writes, started after it is restored, do not
+      val labelled = jobs.count(_._1 == "g:ingest_remaining")
+      labelled should (be >= 1 and be <= attempts * perAttempt)
+      jobs.size - labelled shouldBe batches
     } finally spark.sparkContext.removeSparkListener(rec)
   }
 

@@ -6,7 +6,10 @@ import org.scalatest.matchers.should.Matchers
 
 import scala.jdk.CollectionConverters._
 
-import graft.operators.{ArtifactStore, Curation, Dedup, Profile, VectorIndex}
+import graft.config._
+import graft.operators.{ArtifactStore, Curation, Dedup, Graph, Profile, VectorIndex}
+import graft.orchestration.{BatchHandler, BatchProcessor, PipelineOrchestrator, TableManager}
+import graft.testkit.MockApiServer
 
 /** The round-12 labels-store contract: hash-bucketed layout, O(touched)
   * mutation (only buckets holding a touched row are rewritten), the
@@ -162,6 +165,58 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
       rows(s"$root/hist-default/shards", "shard", "bucket", "cnt")
     rows(s"$root/hist-reliable/absorbed", "shard") shouldBe
       Seq("[0]", "[1]", "[2]")
+
+    // the mode covers every eager checkpoint, not only the mutation
+    // paths: PageRank's supersteps write files and rank the same
+    val g = Seq(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 2L)
+      .toDF("src", "dst")
+    def ranks() = Graph.pageRank(g, "src", "dst", iterations = 3)
+      .orderBy("node").collect().toSeq
+    val defaultRanks = ranks()
+    var reliableRanks = Seq.empty[org.apache.spark.sql.Row]
+    withClue("pageRank: ") {
+      reliably { reliableRanks = ranks() } should not be empty
+    }
+    reliableRanks shouldBe defaultRanks
+
+    // the ingest loop's remaining set: checkpointed to files while the
+    // batches run, the same bronze rows land, and `process` deletes the
+    // files before it returns
+    val server = new MockApiServer().start()
+    try {
+      def ingest(sink: String, eachBatch: => Unit): Seq[String] = {
+        val cfg = PipelineConfig(
+          endpoint = EndpointConfig("test", server.baseUrl, "/api/data"),
+          transport = TransportConfig(baseTimeoutSeconds = 10, warmupTimeoutSeconds = 5),
+          middleware = Seq(JsonBodyConfig),
+          tables = TablesConfig(None, SinkTableConfig(sink, "demo", mode = "overwrite"),
+            Seq(ColumnMapping("request_id", Some("id")))),
+          execution = ExecutionConfig(numPartitions = 2, batchSize = 20, maxAttempts = 1,
+            maxConcurrentRequests = 4))
+        val tables = new TableManager(spark)
+        tables.createTable(cfg.tables.sink)
+        val src = PipelineOrchestrator.prepareSource(cfg,
+          (1L to 60L).map(i => (i, i % 7)).toDF("o_orderkey", "o_custkey"), "o_orderkey")
+        val handler = new BatchHandler(cfg, None, cfg.tables.sink.identifier, tables.format)
+        new BatchProcessor(spark, src, cfg.tables.sink.identifier, cfg.execution)
+          .process { df => eachBatch; handler.process(df) }
+        spark.table(cfg.tables.sink.identifier)
+          .select("request_id", "url", "status_code", "success", "body_text")
+          .collect().map(_.toString).sorted.toSeq
+      }
+      val defaultBronze = ingest("reliable_ingest_default", ())
+      val pre = ckptFiles()
+      var during = Set.empty[String]
+      var reliableBronze = Seq.empty[String]
+      withClue("ingest: ") {
+        reliably {
+          reliableBronze = ingest("reliable_ingest", during ++= ckptFiles() -- pre)
+        } shouldBe empty
+        during should not be empty
+      }
+      reliableBronze should have size 60
+      reliableBronze shouldBe defaultBronze
+    } finally server.stop()
   }
 
   test("out-of-contract re-ingest with NEW text is a benign skip in BOTH index substores (no mixed signatures)") {
@@ -679,19 +734,13 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
     val local = dirs.map(d => new java.net.URI(d).getPath)
     ArtifactStore.bucketDirBytes(spark, root, "b") shouldBe local.map(nioBytes)
     local.map(listFilesBytes) shouldBe local.map(nioBytes)
-    // one mutation stages one rewritten bucket plus its commit marker;
-    // the counter's delta is exactly those bytes
+    // one mutation rewrites one bucket; every figure still matches
     val touched = Seq(3L).toDF("doc").localCheckpoint()
     val upserts = Seq((3L, "rewritten")).toDF("doc", "v").localCheckpoint()
     val k = touched.select(pmod(hash(col("doc")), lit(n))).head().getInt(0)
-    val before = ArtifactStore.stagedBytesWritten.get()
-    val returned = ArtifactStore.mutateBuckets(spark, root, "doc", n,
-      touched, touched, upserts)
-    val delta = ArtifactStore.stagedBytesWritten.get() - before
-    val expected = nioBytes(s"$root/b=$k") +
-      s"b,$k,true".getBytes("UTF-8").length
-    delta shouldBe expected
-    returned shouldBe expected
+    ArtifactStore.mutateBucketsMulti(spark, root, "doc",
+      Seq(ArtifactStore.BucketGeom("b", "doc", n, touched)), touched, upserts)
+    ArtifactStore.bucketDirBytes(spark, root, "b") shouldBe local.map(nioBytes)
     listFilesBytes(s"$root/b=$k") shouldBe nioBytes(s"$root/b=$k")
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.matchers.should.Matchers
@@ -125,6 +126,37 @@ class RankLayoutSpec extends SparkSpec with Matchers {
     a shouldBe b
     // 1 -> {2,3} deduped: outdeg 2
     a.find(_.getAs[Long]("node") == 1L).get.getAs[Long]("outdeg") shouldBe 2L
+  }
+
+  test("pageRank and personalizedPageRank release each superseded rank table") {
+    import spark.implicits._
+    val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 2L)
+    val seeds = Seq(1L).toDF("node")
+    // persistent RDDs a run leaves behind (the IngestJobBudgetSpec
+    // observable): the same for 5 supersteps as for 2, because each
+    // step frees the rank table it replaces. Every job start holds the
+    // RDDs then persisted, so the context cleaner cannot unpersist an
+    // unreleased one that became garbage before it is counted.
+    def pinned(run: => DataFrame): Int = {
+      val sc = spark.sparkContext
+      val before = sc.getPersistentRDDs.keySet
+      val held = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+      val hold = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = { held.add(sc.getPersistentRDDs); () }
+      }
+      sc.addSparkListener(hold)
+      try {
+        val out = run
+        out.collect()
+        val n = (sc.getPersistentRDDs.keySet -- before).size
+        held.add(out)
+        n
+      } finally sc.removeSparkListener(hold)
+    }
+    pinned(Graph.pageRank(e, "src", "dst", iterations = 5)) shouldBe
+      pinned(Graph.pageRank(e, "src", "dst", iterations = 2))
+    pinned(Graph.personalizedPageRank(e, "src", "dst", seeds, iterations = 5)) shouldBe
+      pinned(Graph.personalizedPageRank(e, "src", "dst", seeds, iterations = 2))
   }
 
   // ---- Z-order ----
