@@ -6,30 +6,36 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** Shared store discipline for the persisted-artifact families — the
-  * LSH label/index family (`Dedup`) and the IVF vector index
-  * (`VectorIndex`). Every rule here was earned on the LSH family and
+  * LSH label/index family (`Dedup`), the IVF vector index
+  * (`VectorIndex`), the histogram (`Profile`) and the BPE vocabulary
+  * (`TextAnalysis`). Every rule here was earned on the LSH family and
   * holds for any write-once/maintain-forever artifact:
   *
   *  - paths go through the Hadoop FileSystem API, never `java.io.File`
   *    (an hdfs:///s3:// store must behave exactly like a local one);
-  *  - a write that REPLACES a store is a staged swap
-  *    (`writeParquetStaged`) — plain overwrite deletes the target
-  *    before the job runs, so a mid-job crash loses the store;
+  *  - a write that REPLACES a whole root — every build and every full
+  *    rewrite (rebalance, retrain, retract) — goes through `writeRoot`,
+  *    the one root writer: the new generation is staged beside the live
+  *    one and swapped in, so a failed build leaves the previous
+  *    generation (tombstones included) live. A write that replaces one
+  *    substore is a staged swap too (`writeParquetStaged`) — plain
+  *    overwrite deletes the target before the job runs, so a mid-job
+  *    crash loses the store;
   *  - deletions are TOMBSTONES every reader anti-joins (`readStore`) —
   *    flat-cost retraction, with `compact` as the periodic physical
   *    fold;
   *  - appends are idempotent (`appendMissing`) — a retry after a
   *    partial failure skips the rows a previous run committed;
   *  - the single-row build-parameter `meta` store is read at most once
-  *    per (JVM, qualified path) (`cachedMeta`; builds seed the cache) —
-  *    a per-batch driver job here is exactly the per-batch overhead a
-  *    many-small-batches maintenance loop must not pay.
+  *    per (JVM, qualified path) (`cachedMeta`; `writeRoot` seeds the
+  *    cache) — a per-batch driver job here is exactly the per-batch
+  *    overhead a many-small-batches maintenance loop must not pay.
   *
-  * RENAME CONTRACT (applies to every staged swap here — `swapRootStaged`,
-  * `stageRootSwap`, `mutateBucketsMulti`'s per-bucket applies — and to
-  * the one-job insert append's post-write renames in
-  * `Dedup.appendGeometries`): crash safety and the O(touched) cost
-  * claims assume `FileSystem.rename` is a CHEAP ATOMIC METADATA
+  * RENAME CONTRACT (applies to every staged swap here — `swapRootStaged`
+  * under `writeRoot` and `writeParquetStaged`, `mutateBucketsMulti`'s
+  * per-bucket applies — and to the one-job insert append's post-write
+  * renames in `Dedup.appendGeometries`): crash safety and the
+  * O(touched) cost claims assume `FileSystem.rename` is a CHEAP ATOMIC METADATA
   * operation — HDFS semantics, which local FS also provides. On raw
   * object stores (S3A) a "rename" is a non-atomic server-side
   * copy+delete: the swap window can expose a partially renamed store
@@ -45,8 +51,8 @@ private[graft] object ArtifactStore {
   /** Test-only crash injection for the staged mutations: 0 = off; 1 =
     * die right after the bucket mutation's `__COMMIT` marker lands
     * (staging complete, nothing applied); 2 = die after the first
-    * bucket applies (mixed live state); 3 = die in `stageRootSwap`
-    * right after the root `_SUCCESS` marker lands, before the swap
+    * bucket applies (mixed live state); 3 = die in `writeRoot` right
+    * after the root `_SUCCESS` marker lands, before the swap
     * renames (complete marked staging parked beside the live root).
     * Specs use it to drive `repairStore` through every crash window. */
   @volatile private[graft] var testCrashPoint: Int = 0
@@ -205,21 +211,9 @@ private[graft] object ArtifactStore {
     }
   }
 
-  /** Entry discipline for every artifact REBUILD (round-11 advisory): a
-    * build at a root that carries tombstones from a previous generation
-    * must not inherit them — `readStore`'s anti-join would silently hide
-    * freshly built rows whose ids were ever retracted, the same
-    * "silently inconsistent" state the absorb clash guard exists to
-    * prevent. Deletes the deletion vector and drops the (now stale)
-    * cached meta; the build seeds the fresh meta when it writes it. */
-  def resetForRebuild(spark: SparkSession, root: String): Unit = {
-    if (hasTombstones(spark, root)) deletePath(spark, s"$root/tombstones")
-    invalidateMeta(spark, root)
-  }
-
-  /** Seed the cache with the meta row a build just wrote — its first
+  /** Seed the cache with the meta row `writeRoot` just wrote — its first
     * consumer then skips the read job entirely. */
-  def seedMeta(spark: SparkSession, root: String, row: Row): Unit = {
+  private def seedMeta(spark: SparkSession, root: String, row: Row): Unit = {
     metaCache.put(qualifiedPath(spark, root), Some(row)); ()
   }
 
@@ -323,12 +317,11 @@ private[graft] object ArtifactStore {
       dir: org.apache.hadoop.fs.Path): Long =
     if (!fs.exists(dir)) 0L else fs.getContentSummary(dir).getLength
 
-  /** The rename half of the staged swap, factored so callers that stage
-    * a whole ROOT themselves (meta + partition dirs) share the exact
-    * crash discipline: park the live store at `<path>.__old`, rename
-    * `<path>.__staging` in, drop the parked copy. The staging dir must
-    * be COMPLETE before this is called (its `_SUCCESS` marker is what
-    * `repairStore` keys roll-forward on). */
+  /** The rename half of the staged swap, shared by `writeParquetStaged`,
+    * `writeRoot` and `repairStore`: park the live store at `<path>.__old`,
+    * rename `<path>.__staging` in, drop the parked copy. The staging dir
+    * must be COMPLETE before this is called (its `_SUCCESS` marker is
+    * what `repairStore` keys roll-forward on). */
   private def swapRootStaged(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Unit = {
     val target = new org.apache.hadoop.fs.Path(path)
@@ -343,40 +336,51 @@ private[graft] object ArtifactStore {
     ()
   }
 
-  /** Stage a whole artifact ROOT and swap it in atomically — for
-    * maintenance rewrites that must change SEVERAL substores together
-    * (a histogram retraction's shards + ledger, an LSH rebalance's
-    * features + buckets + meta): per-substore staged swaps would leave
-    * a crash window where one substore reflects the rewrite and another
-    * doesn't, which for a ledgered mutation means double-apply on
-    * retry. `write` receives the staging root and writes every substore
-    * under it; the root-level `_SUCCESS` marker (what `repairStore`
-    * keys roll-forward on) is driver-written LAST, then the two-rename
-    * swap runs. Crash anywhere: before the marker the live root is
-    * untouched (debris cleared on the next entry/repair); after it,
-    * `repairStore` rolls the complete staging forward — INCLUDING the
-    * marker→first-rename window where the live root is still present
-    * (round-14 advisory: the repair used to delete the marked staging
-    * there, silently losing a completed mutation such as a histogram
-    * retraction). Callers refresh the meta cache themselves
-    * (`invalidateMeta`/`seedMeta`).
+  /** The one whole-root writer: every artifact build and full rewrite
+    * (labels build and rebalance, LSH build and rebalance, IVF build and
+    * retrain, histogram build and retract, BPE build) stages the new
+    * generation beside the live root and swaps it in, in this order:
+    *
+    *  1. stale `<root>.__staging` / `<root>.__old` debris is cleared;
+    *  2. `write(staging)` writes every substore under the staging root
+    *     and returns the one-row meta frame (a meta that records what was
+    *     written, such as a byte target, measures the staged dirs);
+    *  3. the meta lands at `<staging>/meta`;
+    *  4. a job-written `_SUCCESS` at the staging root is removed — the
+    *     root marker means "every substore landed", so no marker may
+    *     appear before the driver's own;
+    *  5. the driver writes the root marker, the last write before the
+    *     swap (what `repairStore` keys roll-forward on);
+    *  6. `testCrashPoint = 3` throws here;
+    *  7. two renames swap the staging root in; the old generation — its
+    *     tombstones and crash debris included — is dropped;
+    *  8. the meta and schema caches under the root are dropped and the
+    *     meta cache is seeded with the new row.
+    *
+    * Several substores change together, so per-substore swaps would leave
+    * a crash window where one reflects the write and another doesn't
+    * (for a ledgered mutation: double-apply on retry). A crash before the
+    * marker leaves the previous generation live; after it, `repairStore`
+    * rolls the complete staging forward — including the marker→first-
+    * rename window where the old root is still live.
     */
-  def stageRootSwap(spark: SparkSession, root: String)(
-      write: String => Unit): Unit = {
+  def writeRoot(spark: SparkSession, root: String)(
+      write: String => DataFrame): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = fileSystem(spark, root)
     val staging = new Path(root + ".__staging")
     fs.delete(staging, true)
     fs.delete(new Path(root + ".__old"), true)
-    write(staging.toString)
-    // the parquet jobs above each left a _SUCCESS inside their SUBdirs;
-    // the root-level marker means "every substore landed" and must be
-    // the last write before the swap
-    fs.create(new Path(s"$root.__staging/_SUCCESS"), true).close()
+    val meta = write(staging.toString)
+    meta.write.mode("overwrite").parquet(s"$staging/meta")
+    fs.delete(new Path(staging, "_SUCCESS"), false)
+    fs.create(new Path(staging, "_SUCCESS"), true).close()
     if (testCrashPoint == 3)
       throw new IllegalStateException(
         "testCrashPoint=3: crash after root marker, before the swap")
     swapRootStaged(fs, root)
+    invalidateMeta(spark, root)
+    seedMeta(spark, root, meta.head())
   }
 
   /** Tombstone-filtered read of one of the root's row stores: retracted
@@ -591,39 +595,6 @@ private[graft] object ArtifactStore {
   case class BucketGeom(prefix: String, bucketCol: String,
       numBuckets: Int, bucketKeys: DataFrame)
 
-  /** Full write of a bucketed store (build / rebalance): each geometry's `<prefix>=<k>` partition dirs, then the
-    * meta beside them, all inside `<path>.__staging`, then one root
-    * swap. Each `parts` entry is (frame CARRYING its partition column,
-    * that column's name); the frames repartition on the bucket column
-    * so a bucket lands as ~one file, not tasks × buckets small files.
-    * `meta` receives the staging root once every part has landed, so a
-    * meta that records what the build wrote (a bucket-byte target) is
-    * measured on the staged dirs and swaps in with them — a live store
-    * never carries a provisional meta. The root-level `_SUCCESS` marker
-    * — what `repairStore` keys roll-forward on — is DRIVER-WRITTEN as
-    * the last act before the swap: with several part jobs, the first
-    * job's own marker would otherwise declare a staging complete that
-    * is still missing the later geometries. */
-  def writeBucketedStore(spark: SparkSession,
-      parts: Seq[(DataFrame, String)], path: String,
-      meta: String => DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    val fs = fileSystem(spark, path)
-    val staging = new Path(path + ".__staging")
-    fs.delete(staging, true)
-    fs.delete(new Path(path + ".__old"), true)
-    parts.foreach { case (df, c) =>
-      writeRepartition(df, Seq(col(c))).write.mode("append").partitionBy(c)
-        .parquet(staging.toString)
-      fs.delete(new Path(staging, "_SUCCESS"), false)
-    }
-    val m = meta(staging.toString)
-    m.write.mode("overwrite").parquet(s"$staging/meta")
-    fs.create(new Path(staging, "_SUCCESS"), true).close()
-    swapRootStaged(fs, path)
-    seedMeta(spark, path, m.head())
-  }
-
   /** O(touched) mutation of a bucketed store, across every bucket
     * GEOMETRY it holds (round-13): the labels store holds its rows twice,
     * doc-keyed (`b=`) for point lookups by doc and canonical-keyed (`c=`)
@@ -744,12 +715,9 @@ private[graft] object ArtifactStore {
 
   /** Apply one (prefix, k, kept) entry set: rename each staged bucket
     * dir over its live twin (kept = false deletes the live dir — the
-    * bucket's new content is empty). Staged dirs are looked up in the
-    * round-13 layout (`.__bstaging/g=<p>/k=<k>`) first, then the
-    * round-12 single-geometry layout (`.__bstaging/b=<k>`), so a
-    * marker written by either generation replays. Every step is
-    * idempotent given the staging tree — `repairStore` re-runs it
-    * verbatim. */
+    * bucket's new content is empty), staged at
+    * `.__bstaging/g=<p>/k=<k>`. Every step is idempotent given the
+    * staging tree — `repairStore` re-runs it verbatim. */
   private def applyBucketStaging(fs: org.apache.hadoop.fs.FileSystem,
       root: String, touched: Seq[(String, Int, Boolean)]): Unit = {
     import org.apache.hadoop.fs.Path
@@ -757,46 +725,32 @@ private[graft] object ArtifactStore {
     // existence probes (round-12 verdict #3): on an object store each
     // exists() is an RPC, so a 64-bucket apply was ~128 round trips of
     // pure metadata chatter; the staged-dir set is one LIST per live
-    // geometry dir (plus one for the legacy flat layout), after which
-    // every per-entry decision is a driver-side set lookup. The rename/
+    // geometry dir, after which every per-entry decision is a driver-side set lookup. The rename/
     // delete steps stay idempotent — repairStore replays this verbatim.
     val staging = new Path(s"$root/.__bstaging")
     def ls(p: Path): Seq[String] =
       if (fs.exists(p)) fs.listStatus(p).toSeq.map(_.getPath.getName)
       else Seq.empty
-    val topLevel = ls(staging)
-    val stagedNewDirs: Set[(String, Int)] = topLevel
+    val stagedDirs: Set[(String, Int)] = ls(staging)
       .filter(_.startsWith("g=")).flatMap { g =>
         val p = g.stripPrefix("g=")
         ls(new Path(staging, g)).collect {
           case k if k.startsWith("k=") => (p, k.stripPrefix("k=").toInt)
         }
       }.toSet
-    val stagedOldDirs: Set[(String, Int)] = topLevel.flatMap { n =>
-      n.split("=") match {
-        case Array(p, k) if !n.startsWith("g=") && k.forall(_.isDigit) =>
-          Some((p, k.toInt))
-        case _ => None
-      }
-    }.toSet
     var applied = 0
     touched.foreach { case (p, k, kept) =>
       if (testCrashPoint == 2 && applied == 1)
         throw new IllegalStateException("testCrashPoint=2: crash mid-apply")
       val target = new Path(s"$root/$p=$k")
-      val stagedDir =
-        if (stagedNewDirs((p, k))) Some(new Path(s"$root/.__bstaging/g=$p/k=$k"))
-        else if (stagedOldDirs((p, k))) Some(new Path(s"$root/.__bstaging/$p=$k"))
-        else None
-      if (kept) {
-        stagedDir match {
-          case Some(dir) =>
-            fs.delete(target, true)
-            require(fs.rename(dir, target),
-              s"mutateBucketsMulti: could not swap $dir into $target")
-          case None => // already applied (repair replay)
-        }
-      } else fs.delete(target, true)
+      if (!kept) fs.delete(target, true)
+      // a kept bucket with no staged dir was already applied (repair replay)
+      else if (stagedDirs((p, k))) {
+        val dir = new Path(staging, s"g=$p/k=$k")
+        fs.delete(target, true)
+        require(fs.rename(dir, target),
+          s"mutateBucketsMulti: could not swap $dir into $target")
+      }
       applied += 1
     }
     ()
@@ -814,7 +768,7 @@ private[graft] object ArtifactStore {
     *  - root missing but `<root>.__staging` complete (`_SUCCESS`) →
     *    roll the root swap forward; with only `<root>.__old` present →
     *    roll it back. A MARKED `<root>.__staging` beside a LIVE root is
-    *    the marker→first-rename crash window of `stageRootSwap` — the
+    *    the marker→first-rename crash window of `writeRoot` — the
     *    staging is complete and the mutation committed, so the swap is
     *    FINISHED here (round-14 advisory: deleting it silently lost the
     *    mutation). Unmarked staging/old beside a live root is debris
@@ -854,7 +808,7 @@ private[graft] object ArtifactStore {
         changed = true
       }
     } else if (fs.exists(new Path(s"$root.__staging/_SUCCESS"))) {
-      // marker landed but the swap never ran (stageRootSwap's
+      // marker landed but the swap never ran (writeRoot's
       // marker→first-rename crash window): the staging is complete and
       // the mutation committed — finish the swap instead of discarding
       // it (round-14 advisory: deleting the marked staging here
@@ -1136,10 +1090,7 @@ private[graft] object ArtifactStore {
       } finally in.close()
       val touched = body.linesIterator.filter(_.nonEmpty).map { line =>
         line.split(",") match {
-          // round-13 format: prefix,k,kept
           case Array(p, k, kept) => (p, k.toInt, kept.toBoolean)
-          // round-12 single-geometry format: k,kept
-          case Array(k, kept) => ("b", k.toInt, kept.toBoolean)
           case _ => throw new IllegalStateException(
             s"repairStore: unparseable __COMMIT line '$line' at $root")
         }

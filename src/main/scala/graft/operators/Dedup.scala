@@ -509,95 +509,88 @@ object Dedup {
       path: String, shingleSize: Int = 3, numHashes: Int = 16,
       bands: Int = 4, numBucketParts: Int = 0,
       bucketTargetBytes: Long = 0L): Unit = {
-    // a REBUILD at a root carrying tombstones must not inherit them
-    // (round-11 advisory): readStore's anti-join would silently hide
-    // freshly indexed docs whose ids were ever retracted. A build is a
-    // fresh store — clear the deletion vector and the stale meta cache
-    // before writing.
-    ArtifactStore.resetForRebuild(index.sparkSession, path)
-    val s = index.sparkSession
-    val (feats0, _) = minHashBuckets(index, idCol, textCol, shingleSize, numHashes, bands)
     // one materialization serves both substore writes AND the doc count
     // the partition geometry auto-sizes on
-    val (feats, nDocs) = checkpointWithCount(feats0, "lsh_build_feats")
-    // BOTH substores are PARTITIONED (round-12 verdict #7): buckets by
-    // h = pmod(hash(band, sig), M) so a batch probe's own band-sigs
-    // become a partition filter on candidate generation, and features
-    // by f = pmod(hash(doc), Mf) so the exact-Jaccard verify fetches
-    // ONLY the candidate docs' partitions — at 100 TB a probe touches
-    // the batch's dirs of each substore, never a corpus-wide scan of
-    // either. Part counts auto-size toward ~64k-row parts; production
-    // builds pick them so a part is ~100 MB and M well exceeds a probe
-    // batch's distinct band-sig / candidate-doc spread.
-    // floor 8 (was 32): a sub-65k-doc store got 64 near-empty dirs per
-    // build, and per-run scratch builds (x110/x108 build indexes per
-    // invocation) paid the file-count constant with nothing to amortize
-    // it; the auto-size term takes over long before pruning matters
+    val (feats, nDocs) = checkpointWithCount(
+      minHashBuckets(index, idCol, textCol, shingleSize, numHashes, bands)._1,
+      "lsh_build_feats")
+    // a REBUILD replaces the root through `writeRoot`: the new generation
+    // does not inherit the old one's tombstones (readStore's anti-join
+    // would silently hide freshly indexed docs whose ids were ever
+    // retracted — round-11 advisory), and a build that fails before the
+    // swap leaves the old generation, tombstones included, live
+    writeLshRoot(path, feats, nDocs, bandBuckets(feats, numHashes, bands),
+      shingleSize, numHashes, bands, numBucketParts, bucketTargetBytes)
+  }
+
+  /** The LSH index's one root writer, shared by `buildLshIndex` and
+    * `rebalanceLshIndex`: both substores PARTITIONED (round-12 verdict
+    * #7) — buckets by h = pmod(hash(band, sig), M) so a batch probe's
+    * own band-sigs become a partition filter on candidate generation,
+    * features by f = pmod(hash(doc), Mf) so the exact-Jaccard verify
+    * fetches ONLY the candidate docs' partitions; at 100 TB a probe
+    * touches the batch's dirs of each substore, never a corpus-wide scan
+    * of either. `numBucketParts = 0` auto-sizes both counts from `nDocs`
+    * toward ~64k-row parts (floor 8: per-run scratch builds — x110/x108
+    * build indexes per invocation — paid 64 near-empty dirs per build
+    * with nothing to amortize them); production builds pick them so a
+    * part is ~100 MB and M well exceeds a probe batch's distinct
+    * band-sig / candidate-doc spread. `feats` must be materialized (both
+    * writes consume it). The meta persists the build parameters beside
+    * the data: a probe computed with DIFFERENT parameters doesn't fail —
+    * its signatures just never collide and every batch doc silently
+    * reads as novel, the worst kind of recall loss — so consumers that
+    * recompute signatures (probeLshIndex, absorbIntoLabels) validate
+    * against it. */
+  private def writeLshRoot(path: String, feats: DataFrame, nDocs: Long,
+      buckets: DataFrame, shingleSize: Int, numHashes: Int, bands: Int,
+      numBucketParts: Int, bucketTargetBytes: Long): Unit = {
+    val s = feats.sparkSession
+    import s.implicits._
     val m =
       if (numBucketParts > 0) numBucketParts
       else math.max(8L, (nDocs * bands + 65535L) / 65536L).toInt
     val mf =
       if (numBucketParts > 0) numBucketParts
       else math.max(8L, (nDocs + 65535L) / 65536L).toInt
-    // The two substore writes OVERLAP (round 17, guide §2.6): they are
-    // independent jobs — both consume the already-materialized feats
-    // checkpoint and write DISJOINT dirs — and a build is a fresh store
-    // (resetForRebuild above) whose crash recovery is "re-run the
-    // build", so no write-ordering contract exists between them (unlike
-    // the absorb's idempotent appends, whose features-first order IS
-    // the recovery proof). Submitting both from a 2-thread pool lets
-    // the second write's map tasks back-fill executors freed by the
-    // first's tail; wall = max of the two writes instead of the sum.
-    locally {
+    ArtifactStore.writeRoot(s, path) { staging =>
+      // The two substore writes OVERLAP (round 17, guide §2.6): they are
+      // independent jobs writing DISJOINT staged dirs, and nothing is live
+      // until the root swap, so no write-ordering contract exists between
+      // them (unlike the absorb's idempotent appends, whose
+      // features-first order IS the recovery proof). Submitting both from
+      // a 2-thread pool lets the second write's map tasks back-fill
+      // executors freed by the first's tail; wall = max of the two
+      // writes instead of the sum.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val writes = Seq(
+      def write(sub: String, df: DataFrame, part: String,
+          key: org.apache.spark.sql.Column) =
         scala.concurrent.Future(
-          ArtifactStore.labeled(s, "lsh_build_write_features") {
-            feats.withColumn("f", lshFeatPartOf(mf))
-              .transform(df =>
-                ArtifactStore.writeRepartition(df, Seq(col("f"))))
-              .write.mode("overwrite").partitionBy("f")
-              .parquet(s"$path/features")
-          }),
-        scala.concurrent.Future(
-          ArtifactStore.labeled(s, "lsh_build_write_buckets") {
-            bandBuckets(feats, numHashes, bands).withColumn("h", lshPartOf(m))
-              .transform(df =>
-                ArtifactStore.writeRepartition(df, Seq(col("h"))))
-              .write.mode("overwrite").partitionBy("h")
-              .parquet(s"$path/buckets")
-          }))
+          ArtifactStore.labeled(s, s"lsh_write_$sub") {
+            ArtifactStore.writeRepartition(df.withColumn(part, key),
+                Seq(col(part)))
+              .write.mode("overwrite").partitionBy(part)
+              .parquet(s"$staging/$sub")
+          })
       try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(writes),
+        scala.concurrent.Future.sequence(Seq(
+          write("features", feats, "f", lshFeatPartOf(mf)),
+          write("buckets", buckets, "h", lshPartOf(m)))),
         scala.concurrent.duration.Duration.Inf)
       finally pool.shutdown()
+      // the avg bucket-dir bytes this geometry was sized for — the
+      // advisor's rebalance reference point (round-13 verdict #5), the
+      // labels store's bucket_target_bytes discipline applied to the LSH
+      // family. 0 = measure the staged dirs (FS listings only).
+      val target =
+        if (bucketTargetBytes > 0L) bucketTargetBytes
+        else ArtifactStore.bucketDirBytes(s, s"$staging/buckets", "h").sum / m
+      Seq((shingleSize, numHashes, bands, m, mf, target))
+        .toDF("shingle_size", "num_hashes", "bands", "bucket_parts",
+          "feature_parts", "bucket_target_bytes")
     }
-    // persist the build parameters beside the data: a probe computed
-    // with DIFFERENT parameters doesn't fail — its signatures just never
-    // collide and every batch doc silently reads as novel, the worst
-    // kind of recall loss. Consumers that recompute signatures
-    // (probeLshIndex, absorbIntoLabels) validate against this store.
-    import s.implicits._
-    // the avg bucket-dir bytes this geometry was sized for — the
-    // advisor's rebalance reference point (round-13 verdict #5), the
-    // labels store's bucket_target_bytes discipline applied to the LSH
-    // family. 0 = measure what the build just wrote (FS listings only).
-    val target =
-      if (bucketTargetBytes > 0L) bucketTargetBytes
-      else {
-        val sizes = ArtifactStore.bucketDirBytes(s, s"$path/buckets", "h")
-        if (sizes.isEmpty) 0L else sizes.sum / m
-      }
-    val meta = Seq((shingleSize, numHashes, bands, m, mf, target))
-      .toDF("shingle_size", "num_hashes", "bands", "bucket_parts",
-        "feature_parts", "bucket_target_bytes")
-    meta.write.mode("overwrite").parquet(s"$path/meta")
-    // the build knows the parameters it just wrote — seed the JVM-local
-    // cache so the FIRST consumer already skips the meta-read job (the
-    // head() is a LocalTableScan, not a file read)
-    ArtifactStore.seedMeta(s, path, meta.head())
   }
 
   /** Build several INDEPENDENT LSH indexes concurrently (guide §2.6 —
@@ -637,7 +630,7 @@ object Dedup {
     * corpus outgrows the build-time M/Mf (part bytes grow with the
     * corpus at fixed counts; probe pruning's win is part bytes, so the
     * counts should track corpus size exactly as the labels store's N
-    * does). One staged rewrite of the WHOLE root (`stageRootSwap`):
+    * does). One staged rewrite of the WHOLE root (`writeLshRoot`):
     * features re-hashed to the new `f=` dirs, buckets to the new `h=`
     * dirs, the meta's part counts and measured bucket-byte target
     * refreshed together — per-substore swaps would open a crash window
@@ -652,40 +645,14 @@ object Dedup {
       path: String, numBucketParts: Int = 0): Unit = {
     ArtifactStore.repairStore(spark, path)
     val meta = lshMeta(spark, path)
-    val bands = meta.getAs[Int]("bands")
     // live (tombstone-folded) substores; reads stay valid through the
     // staging writes because the live root is untouched until the swap
-    val feats = indexStore(spark, path, "features").drop("f")
-    val buckets = indexStore(spark, path, "buckets").drop("h")
-    val (featsCk, nDocs) = checkpointWithCount(feats, "lsh_rebalance")
-    val m =
-      if (numBucketParts > 0) numBucketParts
-      else math.max(8L, (nDocs * bands + 65535L) / 65536L).toInt
-    val mf =
-      if (numBucketParts > 0) numBucketParts
-      else math.max(8L, (nDocs + 65535L) / 65536L).toInt
-    import spark.implicits._
-    ArtifactStore.stageRootSwap(spark, path) { staging =>
-      featsCk.withColumn("f", lshFeatPartOf(mf))
-        .transform(df => ArtifactStore.writeRepartition(df, Seq(col("f"))))
-        .write.mode("overwrite").partitionBy("f")
-        .parquet(s"$staging/features")
-      buckets.withColumn("h", lshPartOf(m))
-        .transform(df => ArtifactStore.writeRepartition(df, Seq(col("h"))))
-        .write.mode("overwrite").partitionBy("h")
-        .parquet(s"$staging/buckets")
-      // measure the NEW geometry's bucket-byte target on the staged
-      // dirs — the meta lands beside them in the same swap
-      val sizes = ArtifactStore.bucketDirBytes(spark,
-        s"$staging/buckets", "h")
-      val target = if (sizes.isEmpty) 0L else sizes.sum / m
-      Seq((meta.getAs[Int]("shingle_size"), meta.getAs[Int]("num_hashes"),
-          bands, m, mf, target))
-        .toDF("shingle_size", "num_hashes", "bands", "bucket_parts",
-          "feature_parts", "bucket_target_bytes")
-        .write.mode("overwrite").parquet(s"$staging/meta")
-    }
-    ArtifactStore.invalidateMeta(spark, path)
+    val (feats, nDocs) = checkpointWithCount(
+      indexStore(spark, path, "features").drop("f"), "lsh_rebalance")
+    writeLshRoot(path, feats, nDocs,
+      indexStore(spark, path, "buckets").drop("h"),
+      meta.getAs[Int]("shingle_size"), meta.getAs[Int]("num_hashes"),
+      meta.getAs[Int]("bands"), numBucketParts, 0L)
   }
 
   /** The buckets substore's partition key: band-sig hash mod the
@@ -788,15 +755,6 @@ object Dedup {
     (verifyCrossJaccard(cand, bFeats, iFeats, threshold),
       bks.get("lbk"))
   }
-
-  /** Count of actual meta-store reads (Spark jobs), exposed so the spec
-    * can pin "at most one read per (JVM, path)". The cache itself lives
-    * in `ArtifactStore` (round 11: the store discipline is shared with
-    * the IVF vector-index family). */
-  private[graft] val indexMetaReads = ArtifactStore.metaReads
-
-  private[graft] def invalidateIndexMeta(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): Unit = ArtifactStore.invalidateMeta(spark, indexPath)
 
   /** Validate a caller's MinHash parameters against the `meta` store a
     * `buildLshIndex` write left beside the index. The stored parameters
@@ -1003,7 +961,6 @@ object Dedup {
       bands: Int = 4, threshold: Double = 0.5,
       numBuckets: Int = 0, bucketTargetBytes: Long = 0L): Unit = {
     val spark = docs.sparkSession
-    ArtifactStore.resetForRebuild(spark, path)
     val pairs = minHashLsh(docs, idCol, textCol, shingleSize, numHashes,
         bands, threshold)
       .select("doc_a", "doc_b")
@@ -1131,30 +1088,36 @@ object Dedup {
     ArtifactStore.layoutMeta(spark, path, "Dedup.buildCanonicalLabels",
       "num_buckets", "canon_buckets", "doc_type", "bucket_target_bytes")
 
-  /** Full bucketed-store write (build, rebalance): meta + BOTH geometries — `b=<k>` doc-keyed and `c=<k>`
-    * canonical-keyed (the member-lookup secondary index) — staged as
-    * one root, swapped in atomically. The meta records the doc column's
-    * type (so a store whose every bucket was later deleted still reads
-    * as a TYPED empty frame) and the avg bucket bytes this geometry was
-    * sized for (`bucketTargetBytes = 0` measures the staged `b=` dirs
-    * before the swap — the auto-rebalance hook's reference point). */
+  /** The labels store's one root writer (build, rebalance): BOTH
+    * geometries — `b=<k>` doc-keyed and `c=<k>` canonical-keyed (the
+    * member-lookup secondary index) — written into the staging root, each
+    * repartitioned on its bucket column so a bucket lands as ~one file,
+    * not tasks × buckets small files. Each part job's own `_SUCCESS` is
+    * removed as soon as it lands: the first job's marker would otherwise
+    * declare a staging complete that is still missing the later geometry.
+    * The meta records the doc column's type (so a store whose every
+    * bucket was later deleted still reads as a TYPED empty frame) and the
+    * avg bucket bytes this geometry was sized for (`bucketTargetBytes = 0`
+    * measures the staged `b=` dirs — the auto-rebalance hook's reference
+    * point). */
   private def writeLabelsBucketed(spark: org.apache.spark.sql.SparkSession,
       labels: DataFrame, path: String, n: Int,
       bucketTargetBytes: Long = 0L): Unit = {
     import spark.implicits._
-    ArtifactStore.writeBucketedStore(spark,
-      Seq(
-        (labels.withColumn("b", pmod(hash(col("doc")), lit(n))), "b"),
-        (labels.withColumn("c",
-          pmod(hash(col("canonical_id")), lit(n))), "c")),
-      path, { staging =>
-        val target =
-          if (bucketTargetBytes > 0L) bucketTargetBytes
-          else ArtifactStore.bucketDirBytes(spark, staging, "b").sum / n
-        Seq((n, labels.schema("doc").dataType.catalogString, n, target))
-          .toDF("num_buckets", "doc_type", "canon_buckets",
-            "bucket_target_bytes")
-      })
+    ArtifactStore.writeRoot(spark, path) { staging =>
+      Seq("b" -> "doc", "c" -> "canonical_id").foreach { case (p, key) =>
+        ArtifactStore.writeRepartition(
+            labels.withColumn(p, pmod(hash(col(key)), lit(n))), Seq(col(p)))
+          .write.mode("append").partitionBy(p).parquet(staging)
+        ArtifactStore.deletePath(spark, s"$staging/_SUCCESS")
+      }
+      val target =
+        if (bucketTargetBytes > 0L) bucketTargetBytes
+        else ArtifactStore.bucketDirBytes(spark, staging, "b").sum / n
+      Seq((n, labels.schema("doc").dataType.catalogString, n, target))
+        .toDF("num_buckets", "doc_type", "canon_buckets",
+          "bucket_target_bytes")
+    }
   }
 
   /** INCREMENTAL canonical-label maintenance — the piece that makes the

@@ -199,18 +199,41 @@ object Profile {
 
   def buildHistogramArtifact(df: DataFrame, shardCol: String,
       cents: Column, widthCents: Long, path: String): Unit = {
-    import org.apache.spark.sql.SparkSession
-    val spark: SparkSession = df.sparkSession
-    import spark.implicits._
-    ArtifactStore.resetForRebuild(spark, path)
     val shards = histogramShard(df, shardCol, cents, widthCents)
       .transform(ArtifactStore.eagerCheckpoint)
-    shards.write.mode("overwrite").parquet(s"$path/shards")
-    ledgerFingerprints(shards)
-      .write.mode("overwrite").parquet(s"$path/absorbed")
-    val meta = Seq(widthCents).toDF("width_cents")
-    meta.write.mode("overwrite").parquet(s"$path/meta")
-    ArtifactStore.seedMeta(spark, path, meta.head())
+    writeHistogramRoot(path, shards, ledgerFingerprints(shards), widthCents)
+  }
+
+  /** The histogram artifact's one root writer, shared by
+    * `buildHistogramArtifact` and `retractFromHistogram`: shards, ledger
+    * and the width meta land in one root swap. */
+  private def writeHistogramRoot(path: String, shards: DataFrame,
+      ledger: DataFrame, widthCents: Long): Unit = {
+    val spark = shards.sparkSession
+    import spark.implicits._
+    ArtifactStore.writeRoot(spark, path) { staging =>
+      shards.write.mode("overwrite").parquet(s"$staging/shards")
+      ledger.write.mode("overwrite").parquet(s"$staging/absorbed")
+      Seq(widthCents).toDF("width_cents")
+    }
+  }
+
+  /** The stored bucket width, read through the family's one layout. */
+  private def histogramWidth(spark: org.apache.spark.sql.SparkSession,
+      path: String): Long =
+    ArtifactStore.layoutMeta(spark, path, "Profile.buildHistogramArtifact",
+      "width_cents").getAs[Long]("width_cents")
+
+  /** The shard-id ledger, read through the family's one layout: every
+    * ledger row carries its absorb-time fingerprint. */
+  private def histogramLedger(spark: org.apache.spark.sql.SparkSession,
+      path: String): DataFrame = {
+    val ledger = ArtifactStore.readParquetCached(spark,
+      s"$path/absorbed", Seq(s"$path/absorbed"))
+    if (!ledger.schema.fieldNames.contains("fp_rows"))
+      throw new StoreLayoutException(path, "fp_rows",
+        "Profile.buildHistogramArtifact")
+    ledger
   }
 
   /** Absorb new shards: fold the batch with the STORED width (the
@@ -221,35 +244,24 @@ object Profile {
   def absorbIntoHistogram(df: DataFrame, shardCol: String,
       cents: Column, path: String): Unit = {
     val spark = df.sparkSession
-    val width = ArtifactStore.cachedMeta(spark, path)
-      .map(_.getAs[Long]("width_cents"))
-      .getOrElse(throw new IllegalStateException(
-        s"absorbIntoHistogram: no meta store at $path — absorb needs " +
-          "the stored bucket width"))
-    val h = histogramShard(df, shardCol, cents, width)
+    val h = histogramShard(df, shardCol, cents, histogramWidth(spark, path))
       .transform(ArtifactStore.eagerCheckpoint)
     // the ledger read rides the substore schema cache and is taken ONCE
-    // for both consumers (anti-join + fp-column probe) — each fresh
+    // for both consumers (layout check + anti-join) — each fresh
     // schema-less read.parquet paid a footer-inference job per absorb,
     // the exact per-batch job class the round-15 schema cache removed
     // from the label/IVF absorbs (round-15 verdict #2 + advisory)
-    val ledger = ArtifactStore.readParquetCached(spark,
-      s"$path/absorbed", Seq(s"$path/absorbed"))
+    val ledger = histogramLedger(spark, path)
     val fresh = h.select("shard").distinct()
       .join(broadcast(ledger.select("shard")), Seq("shard"), "left_anti")
       .transform(ArtifactStore.eagerCheckpoint)
     ArtifactStore.appendMissing(spark, path, "shards", "shard", fresh,
       h.join(broadcast(fresh), Seq("shard"), "left_semi"))
     // ledger rows carry the fingerprint (same fold as `h` — zero extra
-    // jobs); stores written before the fingerprint column keep the
-    // shard-only shape so their parquet schema stays consistent
-    val ledgerRows =
-      if (ledger.schema.fieldNames.contains("fp_rows"))
-        ledgerFingerprints(h.join(broadcast(fresh), Seq("shard"),
-          "left_semi"))
-      else fresh
+    // jobs)
     ArtifactStore.appendMissing(spark, path, "absorbed", "shard", fresh,
-      ledgerRows)
+      ledgerFingerprints(h.join(broadcast(fresh), Seq("shard"),
+        "left_semi")))
   }
 
   /** RETRACT shards from the histogram artifact (round-13 verdict #6 —
@@ -269,7 +281,7 @@ object Profile {
     *
     * Shards NOT in the ledger are ignored, which is also what makes a
     * REPLAY a no-op: the whole rewrite — shards, ledger — lands in ONE
-    * root swap (`stageRootSwap`), so a crash can never leave the ledger
+    * root swap (`writeHistogramRoot`), so a crash can never leave the ledger
     * disagreeing with the rows (per-substore swaps would open a
     * double-subtract window on retry). The store is bucket-domain-sized
     * by design, so the root rewrite is the family's cheapest operation,
@@ -282,52 +294,42 @@ object Profile {
     * (same schema, different content) would subtract the WRONG
     * histogram silently. Every retracted shard's re-folded rows are
     * therefore verified against the (fp_rows, fp_sum) fingerprint the
-    * ledger recorded at absorb time; a mismatch fails loud. Ledger rows
-    * from before the fingerprint column stay retractable unverified
-    * (nothing recorded to check against).
+    * ledger recorded at absorb time; a mismatch fails loud. A ledger
+    * without the fingerprint column predates the current layout and
+    * fails with a `StoreLayoutException` — rebuild it.
     */
   def retractFromHistogram(df: DataFrame, shardCol: String,
       cents: Column, path: String): Unit = {
     val spark = df.sparkSession
-    import spark.implicits._
-    val width = ArtifactStore.cachedMeta(spark, path)
-      .map(_.getAs[Long]("width_cents"))
-      .getOrElse(throw new IllegalStateException(
-        s"retractFromHistogram: no meta store at $path — retraction " +
-          "needs the stored bucket width"))
+    val width = histogramWidth(spark, path)
     val h = histogramShard(df, shardCol, cents, width)
       .transform(ArtifactStore.eagerCheckpoint)
     // schema-cached reads (round-15 verdict #2): the retract's ledger +
     // shards reads stop paying per-call footer-inference jobs; the
     // root swap below invalidates the cache with the meta
-    val ledger = ArtifactStore.readParquetCached(spark,
-      s"$path/absorbed", Seq(s"$path/absorbed"))
+    val ledger = histogramLedger(spark, path)
     val inLedger = h.select("shard").distinct()
       .join(broadcast(ledger.select("shard")), Seq("shard"), "left_semi")
       .transform(ArtifactStore.eagerCheckpoint)
     if (inLedger.isEmpty) return
     // fail loud on drifted presentations: the retracted shards' rows
-    // must re-fold to the fingerprint recorded at absorb (fp-less
-    // ledger rows — pre-fingerprint stores — skip the check)
-    if (ledger.schema.fieldNames.contains("fp_rows")) {
-      val recorded = ledger
-        .join(broadcast(inLedger), Seq("shard"), "left_semi")
-        .filter(col("fp_rows").isNotNull)
-        .select("shard", "fp_rows", "fp_sum")
-      val refolded = ledgerFingerprints(
-          h.join(broadcast(inLedger), Seq("shard"), "left_semi"))
-        .withColumnRenamed("fp_rows", "r_rows")
-        .withColumnRenamed("fp_sum", "r_sum")
-      val drifted = recorded.join(refolded, Seq("shard"))
-        .filter(col("fp_rows") =!= col("r_rows") ||
-          col("fp_sum") =!= col("r_sum"))
-        .select("shard").limit(5).collect().map(_.get(0))
-      require(drifted.isEmpty,
-        s"retractFromHistogram: presented rows for shard(s) " +
-          s"${drifted.mkString(", ")} do not re-fold to the ledger " +
-          "fingerprint recorded at absorb — retracting drifted rows " +
-          "would silently corrupt the merged histogram")
-    }
+    // must re-fold to the fingerprint recorded at absorb
+    val recorded = ledger
+      .join(broadcast(inLedger), Seq("shard"), "left_semi")
+      .select("shard", "fp_rows", "fp_sum")
+    val refolded = ledgerFingerprints(
+        h.join(broadcast(inLedger), Seq("shard"), "left_semi"))
+      .withColumnRenamed("fp_rows", "r_rows")
+      .withColumnRenamed("fp_sum", "r_sum")
+    val drifted = recorded.join(refolded, Seq("shard"))
+      .filter(col("fp_rows") =!= col("r_rows") ||
+        col("fp_sum") =!= col("r_sum"))
+      .select("shard").limit(5).collect().map(_.get(0))
+    require(drifted.isEmpty,
+      s"retractFromHistogram: presented rows for shard(s) " +
+        s"${drifted.mkString(", ")} do not re-fold to the ledger " +
+        "fingerprint recorded at absorb — retracting drifted rows " +
+        "would silently corrupt the merged histogram")
     val stored = ArtifactStore.readParquetCached(spark,
       s"$path/shards", Seq(s"$path/shards"))
     // shards whose rows still sit under their own id → drop the rows;
@@ -347,14 +349,7 @@ object Profile {
     val newLedger = ledger
       .join(broadcast(inLedger), Seq("shard"), "left_anti")
       .transform(ArtifactStore.eagerCheckpoint)
-    val meta = Seq(width).toDF("width_cents")
-    ArtifactStore.stageRootSwap(spark, path) { staging =>
-      newShards.write.mode("overwrite").parquet(s"$staging/shards")
-      newLedger.write.mode("overwrite").parquet(s"$staging/absorbed")
-      meta.write.mode("overwrite").parquet(s"$staging/meta")
-    }
-    ArtifactStore.invalidateMeta(spark, path)
-    ArtifactStore.seedMeta(spark, path, meta.head())
+    writeHistogramRoot(path, newShards, newLedger, width)
   }
 
   /** Pre-merge the stored shard histograms into one bucket-summed
@@ -384,14 +379,10 @@ object Profile {
   def quantilesFromHistogramArtifact(
       spark: org.apache.spark.sql.SparkSession, path: String,
       qsX10000: Seq[Int]): DataFrame = {
-    val width = ArtifactStore.cachedMeta(spark, path)
-      .map(_.getAs[Long]("width_cents"))
-      .getOrElse(throw new IllegalStateException(
-        s"quantilesFromHistogramArtifact: no meta store at $path"))
     quantilesFromHistogram(
       ArtifactStore.readParquetCached(spark, s"$path/shards",
         Seq(s"$path/shards")),
-      width, qsX10000)
+      histogramWidth(spark, path), qsX10000)
   }
 
   /** Distribution DRIFT between two histogram generations (the monitor
@@ -434,11 +425,7 @@ object Profile {
   def histogramDriftFromArtifacts(
       spark: org.apache.spark.sql.SparkSession, pathA: String,
       pathB: String): DataFrame = {
-    def width(p: String): Long = ArtifactStore.cachedMeta(spark, p)
-      .map(_.getAs[Long]("width_cents"))
-      .getOrElse(throw new IllegalStateException(
-        s"histogramDriftFromArtifacts: no meta store at $p"))
-    val (wa, wb) = (width(pathA), width(pathB))
+    val (wa, wb) = (histogramWidth(spark, pathA), histogramWidth(spark, pathB))
     require(wa == wb, "histogramDriftFromArtifacts: bucket widths differ " +
       s"($wa vs $wb) — rebuild one side on the shared width contract")
     histogramDrift(
@@ -602,10 +589,7 @@ object Profile {
       spark: org.apache.spark.sql.SparkSession, path: String,
       cutsQ: Seq[Int] = Seq(2500, 5000, 7500)): DataFrame = {
     require(cutsQ.nonEmpty, "categoryDriftFromHistogramArtifact: at least one cut")
-    val width = ArtifactStore.cachedMeta(spark, path)
-      .map(_.getAs[Long]("width_cents"))
-      .getOrElse(throw new IllegalStateException(
-        s"categoryDriftFromHistogramArtifact: no meta store at $path"))
+    val width = histogramWidth(spark, path)
     require(width == 1L,
       s"categoryDriftFromHistogramArtifact: width_cents = $width — the " +
         "exact categoryDrift twin needs per-unit buckets (width 1); " +

@@ -471,16 +471,14 @@ object TextAnalysis {
       path: String): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    // rebuild discipline shared with the LSH/IVF builds (round-11
-    // advisory): clear any tombstones a foreign store left at this root
-    // and the stale meta cache before writing the fresh generation
-    graft.operators.ArtifactStore.resetForRebuild(spark, path)
-    bpeLoop(df, textCol, steps, checkpoint = true, applyLast = false)._1
-      .reduce(_ unionByName _)
-      .write.mode("overwrite").parquet(s"$path/merges")
-    val meta = Seq(Tuple1(steps)).toDF("steps")
-    meta.write.mode("overwrite").parquet(s"$path/meta")
-    graft.operators.ArtifactStore.seedMeta(spark, path, meta.head())
+    // the root writer shared with every artifact build: a rebuild
+    // replaces the previous generation whole, or leaves it live
+    ArtifactStore.writeRoot(spark, path) { staging =>
+      bpeLoop(df, textCol, steps, checkpoint = true, applyLast = false)._1
+        .reduce(_ unionByName _)
+        .write.mode("overwrite").parquet(s"$staging/merges")
+      Seq(Tuple1(steps)).toDF("steps")
+    }
   }
 
   /** Encode ANY batch with a STORED merge sequence (`buildBpeVocab`) —
@@ -495,10 +493,8 @@ object TextAnalysis {
   def bpeEncodeFromVocab(df: DataFrame, idCol: String, textCol: String,
       path: String): DataFrame = {
     val spark = df.sparkSession
-    val steps = graft.operators.ArtifactStore.cachedMeta(spark, path)
-      .map(_.getAs[Int]("steps"))
-      .getOrElse(throw new IllegalArgumentException(
-        s"bpeEncodeFromVocab: no vocab meta at $path — build with buildBpeVocab"))
+    val steps = ArtifactStore.layoutMeta(spark, path,
+      "TextAnalysis.buildBpeVocab", "steps").getAs[Int]("steps")
     import org.apache.spark.sql.expressions.Window
     val wWin = Window.partitionBy("w").orderBy("pos")
     val merges = spark.read.parquet(s"$path/merges")

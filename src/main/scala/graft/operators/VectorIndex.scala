@@ -84,13 +84,6 @@ object VectorIndex {
       path: String, nlist: Int = 16, trainIterations: Int = 0,
       numIdParts: Int = 0, cellTargetBytes: Long = 0L): Unit = {
     require(nlist >= 1, "buildIvfIndex: nlist must be >= 1")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // a rebuild (the codebook-drift remedy the frozen contract defers
-    // to) must not inherit a previous generation's tombstones — they
-    // would silently hide freshly indexed vectors whose ids were ever
-    // retracted (round-11 advisory)
-    ArtifactStore.resetForRebuild(spark, path)
     val vecs = nonZero(corpus, vecCol).select(col(idCol).as("vec_id"),
       col(vecCol).cast("array<double>").as("vec"))
     val codebook =
@@ -99,55 +92,74 @@ object VectorIndex {
           nlist, trainIterations)
       else vecs.orderBy("vec_id").limit(nlist)
         .select(col("vec_id").as("cid"), col("vec").as("centroid"))
-    codebook.write.mode("overwrite").parquet(s"$path/centroids")
-    // epoch 0 = the build generation; each absorb stamps the next epoch,
-    // which is what the codebook-drift audit trends over. The epoch
-    // COUNTER lives in its own absorb-count-sized `epochs` store so the
-    // next absorb never scans the corpus-sized vectors store for
-    // max(epoch) — a per-batch corpus read is exactly the overhead the
-    // meta-cache discipline exists to avoid.
-    // vectors live in cell=<k> partition dirs — the cells ARE the
-    // store's buckets, so a probe's nprobe cell set becomes PARTITION
-    // PRUNING (round-12 verdict #1): at 100 TB an IVF probe must read
-    // nprobe/nlist of the corpus, not all of it. repartition(cell)
-    // first so each cell lands as ~one file, not tasks × cells.
-    // the row count rides the write action as an Observation (no
-    // separate count job) — it sizes the sidecar's part count below
-    val bObs = org.apache.spark.sql.Observation(
-      "ivf_build_" + java.util.UUID.randomUUID().toString.take(8))
-    assign(vecs, spark.read.parquet(s"$path/centroids"))
-      .withColumn("epoch", lit(0))
-      .observe(bObs, count(lit(1)).as("__n"))
-      .transform(df => ArtifactStore.writeRepartition(df, Seq(col("cell"))))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/vectors")
-    // the (vec_id, cell) sidecar — id-hash partitioned so every by-id
-    // read (retract scoping, absorb present-check) prunes to the ids'
-    // own dirs; Mi auto-sizes toward ~64k-row parts like the LSH
-    // substores (floor 8). Production builds pick numIdParts so a part
-    // is ~100 MB and Mi well exceeds a takedown batch's id spread.
-    val nVecs = Option(bObs.get("__n")).map(_.asInstanceOf[Long])
-      .getOrElse(0L)
-    val mi =
-      if (numIdParts > 0) numIdParts
-      else math.max(8L, (nVecs + 65535L) / 65536L).toInt
-    // partition discovery reads cell=<k> dir values back as int — cast
-    // to the codebook's cid type so later absorb appends (whose cell
-    // carries the cid type) stay parquet-type-consistent in the sidecar
-    val cidType = spark.read.parquet(s"$path/centroids")
-      .schema("cid").dataType
-    writeIdsSidecar(spark, path,
-      spark.read.parquet(s"$path/vectors")
-        .select(col("vec_id"), col("cell").cast(cidType).as("cell")), mi,
-      overwrite = true)
-    Seq(0).toDF("epoch").write.mode("overwrite").parquet(s"$path/epochs")
-    val target =
-      if (cellTargetBytes > 0L) cellTargetBytes
-      else cellTarget(spark, s"$path/vectors")
-    val meta = Seq((nlist, trainIterations, mi, target))
-      .toDF("nlist", "train_iterations", "id_parts", "cell_target_bytes")
-    meta.write.mode("overwrite").parquet(s"$path/meta")
-    ArtifactStore.seedMeta(spark, path, meta.head())
+    // a rebuild (the codebook-drift remedy the frozen contract defers
+    // to) replaces the root: it does not inherit the previous
+    // generation's tombstones, which would silently hide freshly indexed
+    // vectors whose ids were ever retracted (round-11 advisory), and a
+    // build that fails before the swap leaves that generation live
+    writeIvfRoot(path, vecs, codebook, nlist, trainIterations, numIdParts,
+      cellTargetBytes)
+  }
+
+  /** The IVF index's one root writer, shared by `buildIvfIndex` and
+    * `retrainIvfIndex`: the codebook, every (vec_id, vec) of `vecs`
+    * assigned to it, the ids sidecar, the epoch clock and the meta land
+    * in ONE root swap. `numIdParts = 0` and `cellTargetBytes = 0` size
+    * the sidecar from the observed vector count and measure the staged
+    * cell dirs. */
+  private def writeIvfRoot(path: String, vecs: DataFrame,
+      codebook: DataFrame, nlist: Int, trainIterations: Int,
+      numIdParts: Int, cellTargetBytes: Long): Unit = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    ArtifactStore.writeRoot(spark, path) { staging =>
+      codebook.write.mode("overwrite").parquet(s"$staging/centroids")
+      // epoch 0 = the build generation; each absorb stamps the next
+      // epoch, which is what the codebook-drift audit trends over. The
+      // epoch COUNTER lives in its own absorb-count-sized `epochs` store
+      // so the next absorb never scans the corpus-sized vectors store for
+      // max(epoch) — a per-batch corpus read is exactly the overhead the
+      // meta-cache discipline exists to avoid.
+      // vectors live in cell=<k> partition dirs — the cells ARE the
+      // store's buckets, so a probe's nprobe cell set becomes PARTITION
+      // PRUNING (round-12 verdict #1): at 100 TB an IVF probe must read
+      // nprobe/nlist of the corpus, not all of it. repartition(cell)
+      // first so each cell lands as ~one file, not tasks × cells.
+      // the row count rides the write action as an Observation (no
+      // separate count job) — it sizes the sidecar's part count below
+      val obs = org.apache.spark.sql.Observation(
+        "ivf_write_" + java.util.UUID.randomUUID().toString.take(8))
+      assign(vecs, spark.read.parquet(s"$staging/centroids"))
+        .withColumn("epoch", lit(0))
+        .observe(obs, count(lit(1)).as("__n"))
+        .transform(df => ArtifactStore.writeRepartition(df, Seq(col("cell"))))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$staging/vectors")
+      // the (vec_id, cell) sidecar — id-hash partitioned so every by-id
+      // read (retract scoping, absorb present-check) prunes to the ids'
+      // own dirs; Mi auto-sizes toward ~64k-row parts like the LSH
+      // substores (floor 8). Production builds pick numIdParts so a part
+      // is ~100 MB and Mi well exceeds a takedown batch's id spread.
+      val nVecs = Option(obs.get("__n")).map(_.asInstanceOf[Long])
+        .getOrElse(0L)
+      val mi =
+        if (numIdParts > 0) numIdParts
+        else math.max(8L, (nVecs + 65535L) / 65536L).toInt
+      // partition discovery reads cell=<k> dir values back as int — cast
+      // to the codebook's cid type so later absorb appends (whose cell
+      // carries the cid type) stay parquet-type-consistent in the sidecar
+      val cidType = spark.read.parquet(s"$staging/centroids")
+        .schema("cid").dataType
+      writeIdsSidecar(s"$staging/ids",
+        spark.read.parquet(s"$staging/vectors")
+          .select(col("vec_id"), col("cell").cast(cidType).as("cell")), mi)
+      Seq(0).toDF("epoch").write.mode("overwrite").parquet(s"$staging/epochs")
+      val target =
+        if (cellTargetBytes > 0L) cellTargetBytes
+        else cellTarget(spark, s"$staging/vectors")
+      Seq((nlist, trainIterations, mi, target))
+        .toDF("nlist", "train_iterations", "id_parts", "cell_target_bytes")
+    }
   }
 
   /** Avg data bytes per `cell=<k>` dir — the build/retrain-time sizing
@@ -168,15 +180,11 @@ object VectorIndex {
     ArtifactStore.layoutMeta(spark, indexPath, "VectorIndex.buildIvfIndex",
       "nlist", "id_parts")
 
-  private def writeIdsSidecar(spark: SparkSession, path: String,
-      rows: DataFrame, mi: Int, overwrite: Boolean): Unit = {
-    val w = rows.select(col("vec_id"), col("cell"))
-      .withColumn("i", idPartOf(mi))
-      .transform(df => ArtifactStore.writeRepartition(df, Seq(col("i"))))
-      .write.mode(if (overwrite) "overwrite" else "append")
-      .partitionBy("i")
-    w.parquet(s"$path/ids")
-  }
+  private def writeIdsSidecar(dir: String, rows: DataFrame, mi: Int): Unit =
+    ArtifactStore.writeRepartition(
+        rows.select(col("vec_id"), col("cell")).withColumn("i", idPartOf(mi)),
+        Seq(col("i")))
+      .write.mode("overwrite").partitionBy("i").parquet(dir)
 
   /** The sidecar rows holding any of the given ids — RAW (not
     * tombstone-filtered; callers choose) and pruned to the ids' own
@@ -523,7 +531,7 @@ object VectorIndex {
     * nprobe = nlist — spec-pinned), while a drifted corpus pulls
     * centroids toward its new mass and mean quantization error drops
     * (x175's strict pin). The WHOLE retrain lands in ONE root swap
-    * (`stageRootSwap`, round-14 advisory): per-substore swaps left a
+    * (`writeIvfRoot`, round-14 advisory): per-substore swaps left a
     * crash window where the new `vectors` cells were live while the
     * `ids` sidecar still mapped committed ids to PRE-retrain cells — a
     * later absorb containing a committed id would then compute its
@@ -540,54 +548,21 @@ object VectorIndex {
     require(trainIterations >= 1,
       "retrainIvfIndex: trainIterations must be >= 1")
     val nlist = ivfMeta(spark, indexPath).getAs[Int]("nlist")
-    import spark.implicits._
     // live vectors only (tombstone-filtered), materialized BEFORE the
     // swap unlinks the files this plan reads
     val stored = ArtifactStore.readStore(spark, indexPath, "vectors",
         "vec_id")
       .select(col("vec_id"), col("vec"))
       .transform(ArtifactStore.eagerCheckpoint)
-    val codebook = Similarity.trainCodebook(stored, "vec_id", "vec",
-      nlist, trainIterations)
-    var metaRow: Row = null
-    ArtifactStore.stageRootSwap(spark, indexPath) { staging =>
-      codebook.write.mode("overwrite").parquet(s"$staging/centroids")
-      // the row count rides the write action as an Observation (no
-      // separate count job) — it sizes the rebuilt sidecar below
-      val obs = org.apache.spark.sql.Observation(
-        "ivf_retrain_" + java.util.UUID.randomUUID().toString.take(8))
-      assign(stored, spark.read.parquet(s"$staging/centroids"))
-        .withColumn("epoch", lit(0))
-        .observe(obs, count(lit(1)).as("__n"))
-        .transform(df => ArtifactStore.writeRepartition(df, Seq(col("cell"))))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$staging/vectors")
-      // the (vec_id, cell) sidecar is rebuilt from the reassigned store
-      // — a retrain moves cells, and a stale sidecar would route the
-      // absorb present-check and retract scoping at the OLD geometry.
-      // Mi resizes to the live (post-tombstone-fold) corpus.
-      val nLive = Option(obs.get("__n")).map(_.asInstanceOf[Long])
-        .getOrElse(0L)
-      val mi = math.max(8L, (nLive + 65535L) / 65536L).toInt
-      val cidType = spark.read.parquet(s"$staging/centroids")
-        .schema("cid").dataType
-      spark.read.parquet(s"$staging/vectors")
-        .select(col("vec_id"), col("cell").cast(cidType).as("cell"))
-        .withColumn("i", idPartOf(mi))
-        .transform(df => ArtifactStore.writeRepartition(df, Seq(col("i"))))
-        .write.mode("overwrite").partitionBy("i").parquet(s"$staging/ids")
-      Seq(0).toDF("epoch").write.mode("overwrite")
-        .parquet(s"$staging/epochs")
-      // the sizing target re-measures on the RETRAINED geometry — the
-      // advisor's drift clock resets, exactly like rebalanceLshIndex
-      val meta = Seq((nlist, trainIterations, mi,
-          cellTarget(spark, s"$staging/vectors")))
-        .toDF("nlist", "train_iterations", "id_parts",
-          "cell_target_bytes")
-      meta.write.mode("overwrite").parquet(s"$staging/meta")
-      metaRow = meta.head()
-    }
-    ArtifactStore.invalidateMeta(spark, indexPath)
-    ArtifactStore.seedMeta(spark, indexPath, metaRow)
+    // the sidecar is rebuilt from the reassigned store (a retrain moves
+    // cells, and a stale sidecar would route the absorb present-check
+    // and retract scoping at the OLD geometry) with Mi resized to the
+    // live corpus, and the sizing target re-measures on the RETRAINED
+    // geometry — the advisor's drift clock resets, exactly like
+    // rebalanceLshIndex
+    writeIvfRoot(indexPath, stored,
+      Similarity.trainCodebook(stored, "vec_id", "vec", nlist,
+        trainIterations),
+      nlist, trainIterations, 0, 0L)
   }
 }

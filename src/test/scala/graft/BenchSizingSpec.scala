@@ -69,6 +69,13 @@ class BenchSizingSpec extends SparkSpec {
       assert(hitsInMain(java.util.regex.Pattern.quote(pattern).r) === Seq(file))
     }
 
+  // A store's meta is written only by the one root writer
+  // (ArtifactStore.writeRoot), which stages the root, writes the meta,
+  // marks and swaps it, then seeds the meta cache.
+  test("src/main writes an artifact meta only in ArtifactStore") {
+    assert(hitsInMain("""write\b.*/meta"\)""".r).distinct === Seq("ArtifactStore.scala"))
+  }
+
   // Every artifact mutation runs in place on its family's one store
   // layout; a caller that must keep the base copies the roots first (x152).
   test("src/main offers no out-of-place artifact mutation") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.matchers.should.Matchers
@@ -77,20 +78,32 @@ class IngestJobBudgetSpec extends SparkSpec with Matchers with BeforeAndAfterAll
     def cachedOverSink(): Int =
       Seq(processor.remaining(), spark.table(sink)).map(_.queryExecution.withCachedData
         .collect { case r: InMemoryRelation => r }.size).sum
-    val persisted0 = spark.sparkContext.getPersistentRDDs.size
+    // count only the persisted RDDs `process` creates: the context cleaner
+    // unpersists any persisted RDD that has become garbage whenever a GC
+    // runs, so a raw count moves by RDDs this spec did not make. Every job
+    // start holds the RDDs then persisted, so an unreleased one cannot be
+    // cleaned away before it is counted (RankLayoutSpec's release spec).
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def created(): Int = (sc.getPersistentRDDs.keySet -- before).size
+    val held = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val hold = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { held.add(sc.getPersistentRDDs); () }
+    }
     val during = Seq.newBuilder[(Int, Int)]
     val handler = new BatchHandler(cfg, None, sink, tables.format)
-    processor.process { df =>
-      during += ((spark.sparkContext.getPersistentRDDs.size, cachedOverSink()))
+    sc.addSparkListener(hold)
+    try processor.process { df =>
+      during += ((created(), cachedOverSink()))
       handler.process(df)
-    }
+    } finally sc.removeSparkListener(hold)
     spark.table(sink).count() shouldBe 200
     // while the batches run, the remaining set is one checkpointed RDD and
     // nothing in the CacheManager, where sink appends would re-cache it
     during.result() should have size 4
-    all(during.result()) shouldBe ((persisted0 + 1, 0))
+    all(during.result()) shouldBe ((1, 0))
     // and the attempt releases it
-    spark.sparkContext.getPersistentRDDs.size shouldBe persisted0
+    created() shouldBe 0
     cachedOverSink() shouldBe 0
     spark.catalog.isCached(sink) shouldBe false
   }

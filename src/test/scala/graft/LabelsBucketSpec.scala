@@ -630,7 +630,7 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
     Dedup.rebalanceLshIndex(spark, s"$root/idx", numBucketParts = 64)
     // tombstones folded; target re-measured off the planted 1 byte
     new java.io.File(s"$root/idx/tombstones").exists() shouldBe false
-    Dedup.invalidateIndexMeta(spark, s"$root/idx")
+    ArtifactStore.invalidateMeta(spark, s"$root/idx")
     val meta = ArtifactStore.cachedMeta(spark, s"$root/idx").get
     meta.getAs[Int]("bucket_parts") shouldBe 64
     meta.getAs[Long]("bucket_target_bytes") should be > 1L
@@ -721,9 +721,12 @@ class LabelsBucketSpec extends SparkSpec with Matchers {
     val root = freshRoot("bbytes")
     val n = 4
     val rows = (1L to 40L).map(i => (i, s"v$i" * (i.toInt % 7 + 1))).toDF("doc", "v")
-    ArtifactStore.writeBucketedStore(spark,
-      Seq((rows.withColumn("b", pmod(hash(col("doc")), lit(n))), "b")),
-      root, _ => Seq(n).toDF("num_buckets"))
+    ArtifactStore.writeRoot(spark, root) { staging =>
+      ArtifactStore.writeRepartition(
+          rows.withColumn("b", pmod(hash(col("doc")), lit(n))), Seq(col("b")))
+        .write.partitionBy("b").parquet(staging)
+      Seq(n).toDF("num_buckets")
+    }
     val dirs = ArtifactStore.listBucketDirs(spark, root)
     dirs should have size n
     // Spark's writer left checksum files beside the parts: the figures

@@ -390,7 +390,7 @@ class OperatorSpec extends SparkSpec with Matchers {
     // to simulate a fresh JVM looking at this path: the build above
     // seeded it.
     rmDir(s"$path/meta")
-    Dedup.invalidateIndexMeta(spark, path)
+    graft.operators.ArtifactStore.invalidateMeta(spark, path)
     intercept[graft.operators.StoreLayoutException] {
       Dedup.probeLshIndex(batch, path, "doc_id", "text",
         shingleSize = 3, numHashes = 16, bands = 4, threshold = 0.5)
@@ -410,15 +410,15 @@ class OperatorSpec extends SparkSpec with Matchers {
     }
     // the build knows what it wrote: consumers in the same JVM never
     // pay a meta-read Spark job at all
-    val afterBuild = Dedup.indexMetaReads.get()
+    val afterBuild = graft.operators.ArtifactStore.metaReads.get()
     probe(); probe()
-    Dedup.indexMetaReads.get() shouldBe afterBuild
+    graft.operators.ArtifactStore.metaReads.get() shouldBe afterBuild
     // a fresh JVM (cache dropped) pays exactly ONE read for any number
     // of probes — the per-batch driver round-trip the production absorb
     // loop must not pay per call
-    Dedup.invalidateIndexMeta(spark, path)
+    graft.operators.ArtifactStore.invalidateMeta(spark, path)
     probe(); probe()
-    Dedup.indexMetaReads.get() shouldBe afterBuild + 1
+    graft.operators.ArtifactStore.metaReads.get() shouldBe afterBuild + 1
   }
 
   test("pairsFromLshIndex maxBucket guard bounds a flooded stored bucket") {
@@ -683,12 +683,12 @@ class OperatorSpec extends SparkSpec with Matchers {
     report(TextAnalysis.bpeEncodeFromVocab(
       Seq((10L, "abababab zz")).toDF("id", "text"), "id", "text",
       root)) shouldBe Seq((10L, 2L, 6L, 300L))
-    // no meta -> loud error, not a silent empty vocabulary
-    val bad = intercept[IllegalArgumentException] {
+    // no meta -> the named layout error, not a silent empty vocabulary
+    val bad = intercept[graft.operators.StoreLayoutException] {
       TextAnalysis.bpeEncodeFromVocab(corpus, "id", "text",
         root + "-nowhere")
     }
-    bad.getMessage should include("vocab meta")
+    bad.getMessage should include("TextAnalysis.buildBpeVocab")
   }
 
   test("VectorIndex lifecycle: frozen-codebook absorb, tombstone retract, compaction, clash guard") {
@@ -2323,37 +2323,6 @@ class OperatorSpec extends SparkSpec with Matchers {
           r.getAs[Long]("upper_cents")))
     }
     got shouldBe want
-  }
-
-  test("stageRootSwap: a crash in the marker-to-rename window rolls FORWARD on repair — the mutation is not lost (round-14 advisory)") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-rootswap").toString
-    val rows = Seq((0L, 100L), (1L, 150L)).toDF("shard", "c")
-    Profile.buildHistogramArtifact(rows, "shard", col("c"), 1000L,
-      s"$root/h")
-    graft.operators.ArtifactStore.testCrashPoint = 3
-    try {
-      intercept[IllegalStateException] {
-        Profile.retractFromHistogram(rows.filter(col("shard") === 1L),
-          "shard", col("c"), s"$root/h")
-      }
-    } finally graft.operators.ArtifactStore.testCrashPoint = 0
-    // live root still pre-retraction; the complete MARKED staging is
-    // parked beside it — repair must finish the swap, not delete it
-    new java.io.File(s"$root/h.__staging/_SUCCESS").exists() shouldBe true
-    graft.operators.ArtifactStore.repairStore(spark, s"$root/h")
-    new java.io.File(s"$root/h.__staging").exists() shouldBe false
-    // the retraction applied: only shard 0 remains, and its id is freed
-    spark.read.parquet(s"$root/h/absorbed").select("shard")
-      .collect().map(_.getLong(0)).toSeq shouldBe Seq(0L)
-    spark.read.parquet(s"$root/h/shards")
-      .agg(org.apache.spark.sql.functions.sum("cnt")).head().getLong(0) shouldBe 1L
-    // and the replayed retraction is a no-op
-    Profile.retractFromHistogram(rows.filter(col("shard") === 1L),
-      "shard", col("c"), s"$root/h")
-    spark.read.parquet(s"$root/h/shards")
-      .agg(org.apache.spark.sql.functions.sum("cnt")).head().getLong(0) shouldBe 1L
   }
 
   test("executeMaintenance: dry-run plans but never acts; acted stores read back clean") {

@@ -2,9 +2,13 @@ package graft
 
 import org.scalatest.matchers.should.Matchers
 
-import graft.operators.{ArtifactStore, Dedup, StoreLayoutException, VectorIndex}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 
-/** Each artifact family (canonical labels, LSH index, IVF index) reads
+import graft.operators.{ArtifactStore, Dedup, Profile, StoreLayoutException, TextAnalysis, VectorIndex}
+
+/** Each artifact family (canonical labels, LSH index, IVF index,
+  * histogram, BPE vocabulary) reads
   * and mutates through ONE store layout, recorded in its meta. A root
   * whose meta is missing, or lacks the current layout's field, must fail
   * on its first read or mutation with the named layout error — never
@@ -19,16 +23,18 @@ class StoreLayoutSpec extends SparkSpec with Matchers {
     org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(src),
       new java.io.File(dst))
 
-  /** Rewrite `root`'s meta without `field`; "meta" deletes the meta dir. */
+  /** Replace the parquet store at `dir` with `f` of its rows. */
+  private def rewrite(dir: String)(f: DataFrame => DataFrame): Unit = {
+    f(spark.read.parquet(dir)).write.parquet(s"$dir.new")
+    ArtifactStore.deletePath(spark, dir)
+    new java.io.File(s"$dir.new").renameTo(new java.io.File(dir)) shouldBe true
+  }
+
+  /** Rewrite `root`'s meta without `field` (a placeholder column keeps a
+    * one-field meta writable); "meta" deletes the meta dir. */
   private def breakMeta(root: String, field: String): Unit = {
-    if (field != "meta") {
-      spark.read.parquet(s"$root/meta").drop(field)
-        .write.parquet(s"$root/meta.new")
-    }
-    ArtifactStore.deletePath(spark, s"$root/meta")
-    if (field != "meta")
-      new java.io.File(s"$root/meta.new")
-        .renameTo(new java.io.File(s"$root/meta")) shouldBe true
+    if (field == "meta") ArtifactStore.deletePath(spark, s"$root/meta")
+    else rewrite(s"$root/meta")(_.drop(field).withColumn("placeholder", lit(0)))
     ArtifactStore.invalidateMeta(spark, root)
   }
 
@@ -48,6 +54,11 @@ class StoreLayoutSpec extends SparkSpec with Matchers {
       shingleSize = 3, numHashes = 16, bands = 8)
     VectorIndex.buildIvfIndex(vecs, "vec_id", "embedding", s"$base/ivf",
       nlist = 2)
+    val shards = Seq((0L, 100L), (1L, 2100L)).toDF("shard", "c")
+    Profile.buildHistogramArtifact(shards, "shard", col("c"), 1000L,
+      s"$base/hist")
+    val words = Seq((1L, "aaaa abab")).toDF("id", "text")
+    TextAnalysis.buildBpeVocab(words, "text", steps = 1, path = s"$base/bpe")
     def absorb(labels: String, idx: String): Unit =
       Dedup.absorbIntoLabels(batch, "doc_id", "text", labels, idx,
         shingleSize = 3, numHashes = 16, bands = 8, threshold = 0.5)
@@ -72,14 +83,24 @@ class StoreLayoutSpec extends SparkSpec with Matchers {
       ("ivf", "id_parts", "VectorIndex.buildIvfIndex", "absorb",
         (p, _) => VectorIndex.absorbIntoIvfIndex(
           Seq((9L, Array(1.0f, 0.1f))).toDF("vec_id", "embedding"),
-          "vec_id", "embedding", p)))
+          "vec_id", "embedding", p)),
+      ("hist", "width_cents", "Profile.buildHistogramArtifact", "quantiles",
+        (p, _) => Profile.quantilesFromHistogramArtifact(spark, p,
+          Seq(5000)).count(): Unit),
+      ("hist", "width_cents", "Profile.buildHistogramArtifact", "absorb",
+        (p, _) => Profile.absorbIntoHistogram(
+          Seq((2L, 300L)).toDF("shard", "c"), "shard", col("c"), p)),
+      ("bpe", "steps", "TextAnalysis.buildBpeVocab", "encode",
+        (p, _) => TextAnalysis.bpeEncodeFromVocab(words, "id", "text", p)
+          .count(): Unit))
 
     for {
       (store, layoutField, build, use, run) <- cases
       missing <- Seq(layoutField, "meta")
     } withClue(s"$store $use, meta missing $missing: ") {
       val root = freshRoot(s"$store-$use")
-      Seq("labels", "idx", "ivf").foreach(s => copyDir(s"$base/$s", s"$root/$s"))
+      Seq("labels", "idx", "ivf", "hist", "bpe")
+        .foreach(s => copyDir(s"$base/$s", s"$root/$s"))
       breakMeta(s"$root/$store", missing)
       val twin = if (store == "labels") s"$root/idx" else s"$root/labels"
       val e = intercept[StoreLayoutException](run(s"$root/$store", twin))
@@ -104,5 +125,26 @@ class StoreLayoutSpec extends SparkSpec with Matchers {
         Seq((-1L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding"),
         root, "vec_id", "embedding", k = 3, nprobe = 2)
       .count() shouldBe 0L
+  }
+
+  test("a histogram ledger without fingerprints fails absorb and retract naming fp_rows") {
+    import spark.implicits._
+    val root = freshRoot("histledger") + "/h"
+    val rows = Seq((0L, 100L), (1L, 2100L)).toDF("shard", "c")
+    Profile.buildHistogramArtifact(rows, "shard", col("c"), 1000L, root)
+    // the ledger as a store from before the fingerprint columns wrote it
+    rewrite(s"$root/absorbed")(_.select("shard"))
+    ArtifactStore.invalidateMeta(spark, root)
+    val uses: Seq[(String, () => Unit)] = Seq(
+      "absorb" -> (() => Profile.absorbIntoHistogram(
+        Seq((2L, 300L)).toDF("shard", "c"), "shard", col("c"), root)),
+      "retract" -> (() => Profile.retractFromHistogram(
+        rows.filter(col("shard") === 1L), "shard", col("c"), root)))
+    for ((use, run) <- uses) withClue(s"$use: ") {
+      val e = intercept[StoreLayoutException](run())
+      e.root shouldBe root
+      e.field shouldBe "fp_rows"
+      e.build shouldBe "Profile.buildHistogramArtifact"
+    }
   }
 }
